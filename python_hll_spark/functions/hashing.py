@@ -81,27 +81,3 @@ def xxhash64_int(values: np.ndarray, seed) -> np.ndarray:
 def hash_tokens(tokens: np.ndarray, seed: int = 0) -> np.ndarray:
     """Hash int32 token ids to well-mixed signed int64 (HLL/CMS/Bloom input)."""
     return splitmix64(tokens.astype(np.int64, copy=False), seed=seed)
-
-
-def hash_strings(values, seed: int = 0) -> np.ndarray:
-    """Vectorized string hashing inside a pandas batch (FNV-1a 64 over utf-8,
-    then splitmix64 finalize).  Prefer JVM-side F.xxhash64 when the hash can
-    be computed before the Arrow boundary; this exists for pure-Python paths
-    (e.g. local oracles and tests)."""
-    joined = "\x00".join(values) if len(values) else ""
-    buf = np.frombuffer(joined.encode("utf-8", "surrogatepass"), dtype=np.uint8)
-    lengths = np.array([len(v.encode("utf-8", "surrogatepass")) for v in values],
-                       dtype=np.int64)
-    out = np.empty(len(values), dtype=np.uint64)
-    h0 = _U64(0xCBF29CE484222325)
-    prime = _U64(0x100000001B3)
-    pos = 0
-    # per-string FNV accumulation (bounded by total bytes, not rows; this
-    # path is off the 100TB hot loop — strings are hashed JVM-side there)
-    for i, ln in enumerate(lengths):
-        h = h0
-        for b in buf[pos:pos + ln]:
-            h = (h ^ _U64(b)) * prime
-        out[i] = h
-        pos += ln + 1
-    return splitmix64(out.view(np.int64), seed=seed)

@@ -7,7 +7,10 @@ Scope note for the merge aggregates: grouped-agg pandas UDFs shuffle their
 input rows without map-side partial aggregation, so they are the right tool
 for rolling up PRE-AGGREGATED state rows (days x groups of KB-sized blobs —
 the SketchStore shape), not for sketching raw data; raw-data builds go
-through the Arrow partial builders in operators/aggregate.py."""
+through the Arrow partial builders in operators/aggregate.py.  Every merge
+here folds blobs with ``operators.aggregate.merge_states``, the same loop
+``merge_sketches`` runs after its JVM ``collect_list`` (which, unlike
+these UDFs, does aggregate map-side)."""
 
 from __future__ import annotations
 
@@ -34,14 +37,11 @@ def _merge_agg_udf(spec_loader):
     """Grouped-agg pandas UDF merging serialized states with a spec's monoid."""
 
     @F.pandas_udf(BinaryType())
-    def merge_states(states: pd.Series) -> bytes:
-        spec = spec_loader()
-        acc = spec.deserialize(bytes(states.iloc[0]))
-        for raw in states.iloc[1:]:
-            spec.merge(acc, spec.deserialize(bytes(raw)))
-        return spec.serialize(acc)
+    def merge_agg(states: pd.Series) -> bytes:
+        from python_hll_spark.operators.aggregate import merge_states
+        return merge_states(spec_loader(), states)
 
-    return merge_states
+    return merge_agg
 
 
 def _hll_spec():
@@ -95,15 +95,11 @@ def hll_intersection_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
 def hll_union_pair_udf(sa: pd.Series, sb: pd.Series) -> pd.Series:
     """Two-state HLL union as a scalar column — the pair-row variant of the
     grouped ``hll_union_agg`` for matrix-shaped state frames."""
+    from python_hll_spark.operators.aggregate import merge_states
     from python_hll_spark.sketches.specs import HLLSpec
 
     spec = HLLSpec()
-    out = []
-    for a, b in zip(sa, sb):
-        acc = spec.deserialize(bytes(a))
-        spec.merge(acc, spec.deserialize(bytes(b)))
-        out.append(spec.serialize(acc))
-    return pd.Series(out)
+    return pd.Series([merge_states(spec, pair) for pair in zip(sa, sb)])
 
 
 @F.pandas_udf(DoubleType())

@@ -53,12 +53,6 @@ def alpha_ratio(text: Column) -> Column:
         letters.cast("double") / F.length(text))
 
 
-def punct_ratio(text: Column) -> Column:
-    punct = F.length(F.regexp_replace(text, r"[^.,;:!?'\"()\[\]{}-]", ""))
-    return F.when(F.length(text) == 0, F.lit(0.0)).otherwise(
-        punct.cast("double") / F.length(text))
-
-
 def stopword_hits(text: Column, lang: str) -> Column:
     """Count of stopword occurrences for one language's list."""
     pattern = r"\b(" + "|".join(STOPWORDS[lang]) + r")\b"

@@ -9,8 +9,16 @@ split a native TypedImperativeAggregate would get from Catalyst:
                            vectorized numpy update per Arrow batch; emits one
                            tiny row (group, salt, state, lineage) per
                            partition x group.  The 100TB scan shuffles NOTHING.
-  stage 2  groupBy(group, salt).applyInPandas(merge)   fan-in #partitions -> S
-  stage 3  groupBy(group).applyInPandas(merge)         fan-in S -> 1 per group
+  stage 2  groupBy(group, salt).agg(collect_list(state), sums)
+           -> mapInArrow(fold)                  fan-in #partitions -> S
+  stage 3  groupBy(group).agg(collect_list(state), sums)
+           -> mapInArrow(fold)                  fan-in S -> 1 per group
+
+Each merge stage is one JVM aggregate (map-side partial collect, then
+one Exchange of state rows) and one Arrow pass that walks the
+``list<binary>`` offsets and folds each group's blobs with
+``merge_states``, so Python is entered once per partition, not once per
+group.
 
 Salting bounds the per-reducer fan-in for skewed groups (a 55%-of-corpus
 source lands on S reducers, not one), per the explicit-skew-handling
@@ -25,6 +33,8 @@ from typing import Callable, Protocol
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (BinaryType, LongType, StructField,
+                               StructType)
 
 
 class SketchSpec(Protocol):
@@ -382,6 +392,52 @@ def scalar_partials_arrow(df: DataFrame, group_cols: list[str], value_col: str,
     return pruned.mapInArrow(build, schema=out_schema)
 
 
+def merge_states(spec: SketchSpec, blobs) -> bytes:
+    """Fold serialized states with the spec's monoid into one serialized
+    state: the one merge loop behind ``merge_sketches`` and the SQL merge
+    aggregates.  An empty fold is the spec's empty state."""
+    it = iter(blobs)
+    first = next(it, None)
+    if first is None:
+        return spec.serialize(spec.new())
+    acc = spec.deserialize(bytes(first))
+    for raw in it:
+        spec.merge(acc, spec.deserialize(bytes(raw)))
+    return spec.serialize(acc)
+
+
+def _merge_level(df: DataFrame, keys: list[str], spec: SketchSpec,
+                 out_schema: StructType) -> DataFrame:
+    """One merge level: a JVM aggregate gathers each group's states into a
+    ``list<binary>`` and sums its counters, then one ``mapInArrow`` pass
+    folds every list of each Arrow batch.  ``n_partials`` is summed when
+    the input carries it, else it counts the input rows."""
+    n_partials = (F.sum("n_partials") if "n_partials" in df.columns
+                  else F.count(F.lit(1)))
+    names = out_schema.fieldNames()
+    gathered = (df.groupBy(*keys)
+                .agg(F.collect_list("state").alias("state"),
+                     F.sum("n_rows").alias("n_rows"),
+                     F.sum("n_values").alias("n_values"),
+                     n_partials.alias("n_partials"))
+                .select(*names))
+    state_idx = names.index("state")
+
+    def fold(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            lists = batch.column(state_idx)
+            bounds = lists.offsets.to_numpy().tolist()
+            blobs = lists.values.to_pylist()
+            merged = pa.array([merge_states(spec, blobs[a:b])
+                               for a, b in zip(bounds[:-1], bounds[1:])],
+                              pa.binary())
+            yield batch.set_column(state_idx, "state", merged)
+
+    return gathered.mapInArrow(fold, schema=out_schema)
+
+
 def merge_sketches(partials: DataFrame, group_cols: list[str],
                    spec: SketchSpec, two_level: bool | str = "auto") -> DataFrame:
     """Stages 2+3: salted tree merge down to one state row per group.
@@ -392,27 +448,13 @@ def merge_sketches(partials: DataFrame, group_cols: list[str],
     small scan skips one shuffle + Python stage whose per-group input
     would have been a handful of rows anyway.  The decision reads the
     plan's partitioning, not the data — no extra job."""
-    import pandas as pd
-
-    group_fields = [f"`{f.name}` {f.dataType.simpleString()}"
+    group_fields = [StructField(f.name, f.dataType)
                     for f in partials.schema.fields if f.name in group_cols]
-    merged_schema = ", ".join(group_fields + [
-        "state binary", "n_rows bigint", "n_values bigint", "n_partials bigint"])
-
-    def merge_fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        acc = spec.deserialize(bytes(pdf["state"].iloc[0]))
-        for raw in pdf["state"].iloc[1:]:
-            spec.merge(acc, spec.deserialize(bytes(raw)))
-        n_partials = (pdf["n_partials"].sum() if "n_partials" in pdf.columns
-                      else len(pdf))
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row.update({
-            "state": [spec.serialize(acc)],
-            "n_rows": [pdf["n_rows"].sum()],
-            "n_values": [pdf["n_values"].sum()],
-            "n_partials": [n_partials],
-        })
-        return pd.DataFrame(row)
+    merged_schema = StructType(group_fields + [
+        StructField("state", BinaryType()),
+        StructField("n_rows", LongType()),
+        StructField("n_values", LongType()),
+        StructField("n_partials", LongType())])
 
     if two_level == "auto":
         try:
@@ -421,10 +463,8 @@ def merge_sketches(partials: DataFrame, group_cols: list[str],
             two_level = True
     lvl = partials
     if two_level and "salt" in partials.columns:
-        lvl = (partials
-               .groupBy(*(group_cols + ["salt"]))
-               .applyInPandas(merge_fn, schema=merged_schema))
-    return lvl.groupBy(*group_cols).applyInPandas(merge_fn, schema=merged_schema)
+        lvl = _merge_level(partials, group_cols + ["salt"], spec, merged_schema)
+    return _merge_level(lvl, group_cols, spec, merged_schema)
 
 
 def sketch_groupby(df: DataFrame, group_cols: list[str], extractor: Extractor,

@@ -1302,16 +1302,21 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     # within-batch collapse (same plan as near_dedup, sharing the banding
     # cache) — the connected-components actions run while the store probe
     # streams on the thread above
-    pairs = (cand0.where(F.col("est_jaccard") >= threshold)
-             .select("id_a", "id_b"))
-    comps = connected_components(pairs)  # eager (checkpointed)
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    batch = new_df.join(drop_ids, id_col, "left_anti")
-    b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
-    probe.join()
+    # the probe is joined even when the collapse raises, so its store-scan
+    # job never outlives this call and the frames the caller unpersists
+    try:
+        pairs = (cand0.where(F.col("est_jaccard") >= threshold)
+                 .select("id_a", "id_b"))
+        comps = connected_components(pairs)  # eager (checkpointed)
+        # component IS the min member id (the connected_components
+        # contract), so the keep-representative rule is a filter, not an
+        # agg + join
+        drop_ids = (comps.where(F.col("id") != F.col("component"))
+                    .select(F.col("id").alias(id_col)))
+        batch = new_df.join(drop_ids, id_col, "left_anti")
+        b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
+    finally:
+        probe.join()
     if outputs is not None:
         # survivors' signatures SLICED from the already-computed batch
         # signature cache — the store-append frame without a second

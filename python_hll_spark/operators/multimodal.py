@@ -20,14 +20,6 @@ MEDIA_SCHEMA = ("media_id string, kind string, payload binary, "
                 "width int, height int, duration_ms int")
 
 
-def real_decode(payload: bytes) -> np.ndarray:
-    """Placeholder for a real codec (PIL/libav); not available in this
-    environment."""
-    raise NotImplementedError(
-        "media codecs are not installed in this container; pass a decoder "
-        "to the operator or use deterministic_fake_decode for plumbing tests")
-
-
 def deterministic_fake_decode(payload: bytes, shape=(8, 8, 3)) -> np.ndarray:
     """Reproducible stand-in decoder: pseudo-pixels seeded by payload bytes."""
     seed = int.from_bytes(payload[:8].ljust(8, b"\0"), "little")

@@ -24,12 +24,6 @@ def _tokens_extractor(pdf) -> np.ndarray:
     return hash_tokens(flat.astype(np.int64, copy=False))
 
 
-def _hashed_col_extractor(col: str):
-    def extract(pdf) -> np.ndarray:
-        return pdf[col].to_numpy(dtype=np.int64)
-    return extract
-
-
 def hll_ndv_tokens(df: DataFrame, by: list[str] | None = None,
                    cfg: HLLConfig | None = None, n_salts: int = 16) -> DataFrame:
     """Approx NDV of exploded ``tokens`` (optionally per group).

@@ -13,12 +13,6 @@ from python_hll_spark.sketches.specs import KLLSpec, TDigestSpec
 from python_hll_spark.sketches.tdigest import TDigestConfig
 
 
-def _value_extractor(col: str):
-    def extract(pdf: pd.DataFrame) -> np.ndarray:
-        return pdf[col].to_numpy(dtype=np.float64)
-    return extract
-
-
 def _quantile_udf(spec, qs: list[float]):
     @F.pandas_udf(ArrayType(DoubleType()))
     def finalize(states: pd.Series) -> pd.Series:

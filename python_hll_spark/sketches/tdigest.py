@@ -30,10 +30,6 @@ class TDigestConfig:
     buffer_factor: int = 200
 
 
-def _k1(q: np.ndarray, d: float) -> np.ndarray:
-    return (d / (2.0 * math.pi)) * np.arcsin(2.0 * np.clip(q, 0.0, 1.0) - 1.0)
-
-
 class TDigestSketch:
     __slots__ = ("cfg", "means", "weights", "buffer", "n", "min_v", "max_v")
 

@@ -75,11 +75,3 @@ def seqs_table(spark: SparkSession, n_docs: int, partitions: int = 32) -> DataFr
 
     base = spark.range(0, n_docs, numPartitions=partitions)
     return base.mapInPandas(gen, schema=SEQS_SCHEMA)
-
-
-def exact_token_ndv(spark: SparkSession, df: DataFrame):
-    """Exact NDV oracle (explode -> distinct) for small-scale validation."""
-    from pyspark.sql import functions as F
-
-    tok = df.select(F.explode("tokens").alias("token"))
-    return tok.agg(F.countDistinct("token").alias("ndv")).collect()[0]["ndv"]

@@ -25,10 +25,12 @@ ONLY = set(sys.argv[2:])
 
 
 def main():
+    qs = entrymod.queries()
+    if ONLY and not ONLY & qs.keys():
+        sys.exit(f"no queries matched {sorted(ONLY)}")
     os.makedirs(OUTDIR, exist_ok=True)
     spark = get_spark("plan-audit", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = entrymod.queries()
     rows = []
     for name, fn in qs.items():
         if ONLY and name not in ONLY:

@@ -42,6 +42,9 @@ def test_ndv_column_plan(spark):
     # the salted pre-merge, leaving exactly ONE state-row exchange
     assert plan.count("Exchange") == 1
 
+    # the merge is collect_list + one Arrow fold, not a pandas call per group
+    assert "FlatMapGroupsInPandas" not in plan
+
 
 def test_ndv_tokens_arrow_plan(spark):
     from python_hll_spark.operators.ndv import hll_ndv_tokens
@@ -54,6 +57,7 @@ def test_ndv_tokens_arrow_plan(spark):
     below = plan.split("MapInArrow")[-1]
     assert "Exchange" not in below
     assert plan.count("Exchange") == 1  # salt skipped at 2 partitions
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_ndv_wide_scan_keeps_salted_tree_merge(spark):
@@ -68,6 +72,7 @@ def test_ndv_wide_scan_keeps_salted_tree_merge(spark):
     assert "MapInArrow" in plan
     assert "Exchange" not in plan.split("MapInArrow")[-1]
     assert plan.count("Exchange") == 2  # salted + final merge
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_dedup_exact_plan(spark):
