@@ -2537,7 +2537,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT t.doc_id, t.n_lines, coalesce(rm.n_removed, 0) AS n_removed,
                    (t.tot_chars - coalesce(rm.rm_chars, 0)
-                    + greatest(t.n_lines - coalesce(rm.n_removed, 0) - 1, 0)) AS clean_len
+                    + greatest(t.n_lines - coalesce(rm.n_removed, 0) - 1, 0))::BIGINT AS clean_len
             FROM tot t LEFT JOIN rm USING (doc_id) ORDER BY doc_id
         """,
         "strip_spans_documents": """
@@ -2574,7 +2574,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT w0.doc_id, len(w0.ws) AS n_words,
                    coalesce(ncov.n_covered, 0) AS n_covered_words,
                    (coalesce(agg.kept_chars, 0)
-                    + greatest(coalesce(agg.n_kept, 0) - 1, 0)) AS clean_len
+                    + greatest(coalesce(agg.n_kept, 0) - 1, 0))::BIGINT AS clean_len
             FROM w0 LEFT JOIN agg USING (doc_id) LEFT JOIN ncov USING (doc_id)
             ORDER BY doc_id
         """,

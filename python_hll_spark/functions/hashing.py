@@ -59,22 +59,29 @@ def _xxh64_fmix(h: np.ndarray) -> np.ndarray:
 
 
 def xxhash64_int(values: np.ndarray, seed) -> np.ndarray:
-    """Bit-exact vectorized Spark ``xxhash64`` over IntegerType input
-    (catalyst XXH64.hashInt): lets Arrow kernels reproduce JVM-side
-    ``F.xxhash64(int_col)`` without a join or a Python boundary re-cross.
-    ``seed`` may be a scalar (expression seed, default 42) or a uint64
-    array (the multi-argument fold ``xxhash64(a, b)`` threads the running
-    hash as the next element's seed).  Returns signed int64."""
+    """Bit-exact vectorized Spark ``xxhash64`` over integral input: lets
+    Arrow kernels reproduce JVM-side ``F.xxhash64(col)`` without a join or
+    a Python boundary re-cross.  Like catalyst, 8-byte values hash as
+    LongType (``XXH64.hashLong``) and narrower ones as IntegerType
+    (``XXH64.hashInt``).  ``seed`` may be a scalar (expression seed,
+    default 42) or a uint64 array (the multi-argument fold
+    ``xxhash64(a, b)`` threads the running hash as the next element's
+    seed).  Returns signed int64."""
     v = np.asarray(values)
-    iv = (v.astype(np.int64, copy=False).view(_U64)
-          & _U64(0xFFFFFFFF))  # (input & 0xFFFFFFFFL)
+    width = 8 if v.dtype.itemsize == 8 else 4
     if np.isscalar(seed) or np.ndim(seed) == 0:
-        h = np.full(len(iv), _U64(int(seed) & 0xFFFFFFFFFFFFFFFF)
-                    + _XXH_P5 + _U64(4))
+        h = np.full(len(v), _U64(int(seed) & 0xFFFFFFFFFFFFFFFF)
+                    + _XXH_P5 + _U64(width))
     else:
-        h = seed + (_XXH_P5 + _U64(4))
-    h ^= iv * _XXH_P1
-    h = ((h << _U64(23)) | (h >> _U64(41))) * _XXH_P2 + _XXH_P3
+        h = seed + (_XXH_P5 + _U64(width))
+    iv = v.astype(np.int64, copy=False).view(_U64)
+    if width == 8:
+        k = iv * _XXH_P2
+        h ^= ((k << _U64(31)) | (k >> _U64(33))) * _XXH_P1
+        h = ((h << _U64(27)) | (h >> _U64(37))) * _XXH_P1 + _XXH_P4
+    else:
+        h ^= (iv & _U64(0xFFFFFFFF)) * _XXH_P1  # (input & 0xFFFFFFFFL)
+        h = ((h << _U64(23)) | (h >> _U64(41))) * _XXH_P2 + _XXH_P3
     return _xxh64_fmix(h).view(np.int64)
 
 

@@ -2,10 +2,13 @@
 n-gram/word-set Jaccard (the oracle the approximate paths are tested against).
 
 Scale shape: exact dedup is a hash-groupBy on a 64-bit JVM-side fingerprint
-(shuffles 8-byte keys, never text).  MinHash/SimHash signatures are computed
-in one mapInPandas pass over JVM-prehashed shingles; LSH banding turns the
-quadratic pair search into an equi-join on (band, band_key) buckets, which
-Catalyst shuffles like any other join key.
+(shuffles 8-byte keys, never text).  MinHash and SimHash each have ONE
+signature kernel, a mapInArrow pass over a token-hash array column; the
+text entry points are adapters that run ``tokenize_word_hashes`` (one
+Arrow pass: lowercase, whitespace split, murmur3 word hashes) and then
+that kernel.  LSH banding turns the quadratic pair search into an
+equi-join on (band, band_key) buckets, which Catalyst shuffles like any
+other join key.
 """
 
 from __future__ import annotations
@@ -90,30 +93,15 @@ def _incremental_dedup_impl(new_df: DataFrame, seen_fps: DataFrame,
 def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ONLY when the input has fewer partitions than cores.
 
-    Text-heavy stages (interpreted higher-order shingle expressions, Arrow
-    signature builds) are CPU-bound per partition; a small input that
-    arrives as one file would otherwise run single-threaded.  At 100 TB
+    Text-heavy stages (the Arrow tokenizer and signature kernels) are
+    CPU-bound per partition; a small input that arrives as one file would
+    otherwise run single-threaded.  At 100 TB
     inputs already carry thousands of partitions and this is a no-op —
     no shuffle is ever added to an adequately-partitioned scan."""
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-# --------------------------------------------------------------- shingles
-def with_shingle_hashes(df: DataFrame, text_col: str = "text", n: int = 3,
-                        id_col: str = "doc_id") -> DataFrame:
-    """(id, shingles array<bigint>): xxhash64 of word n-grams, JVM-side."""
-    df = fan_out_small_input(df)
-    words = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-    if n == 1:
-        sh = F.transform(words, lambda w: F.xxhash64(w))
-    else:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
-        sh = F.transform(idx, lambda i: F.xxhash64(
-            F.concat_ws(" ", F.slice(words, i + 1, n))))
-    return df.select(F.col(id_col), F.array_distinct(sh).alias("shingles"))
 
 
 # ------------------------------------------------------------- tokenizer
@@ -123,9 +111,9 @@ def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
     murmur3 word hashes, ONE Arrow pass — turns raw text into the
     pre-tokenized shape ``minhash_signatures_tokens`` consumes.
 
-    This replaces the interpreted JVM higher-order shingle expressions
-    (``F.transform`` + ``xxhash64`` never reach codegen) with a pure-numpy
-    split+hash over the chunk's contiguous utf-8 buffer
+    Every text entry point of the MinHash, SimHash and DSIR families runs
+    this and then its tokens kernel.  The split+hash is pure numpy over
+    the chunk's contiguous utf-8 buffer
     (``word_hash_segments`` — NOT ``pc.utf8_split_whitespace``, whose
     buffer-tail overread made the last token of a doc nondeterministic on
     Spark-delivered buffers; see its docstring).  No per-row Python, no
@@ -156,71 +144,15 @@ def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
 
 # ---------------------------------------------------------------- MinHash
 def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
-                       num_hashes: int = 128, id_col: str = "doc_id",
-                       tokenizer: str = "arrow") -> DataFrame:
-    """(id, sig array<bigint>): K permutation-minima over shingle hashes.
-
-    Arrow-native: shingle lists flatten zero-copy; per-doc minima come from
-    ``np.minimum.reduceat`` segment reductions — one vector hash pass per
-    permutation across the whole batch, no per-row Python.  The permutation
-    family is 2-universal multiply-add ``h_k(x) = A_k*x + B_k (mod 2^64)``
-    with odd ``A_k`` (a bijection): the shingle hashes are already
-    splitmix64-mixed, so one multiply+add per permutation replaces a full
-    6-op finalizer pass — 3x less work in the 128-pass hot loop.
-
-    ``tokenizer="arrow"`` (default) tokenizes+hashes words in one Arrow
-    pass (``tokenize_word_hashes``) and reuses the pre-tokenized chain
-    kernel — no interpreted JVM shingle expressions anywhere on the hot
-    path.  ``tokenizer="jvm"`` keeps the original xxhash64 higher-order
-    expression pipeline (different hash family, hence different — equally
-    valid — signatures; exact-duplicate texts collapse under both)."""
-    import pyarrow as pa
-
-    if tokenizer == "arrow":
-        return minhash_signatures_tokens(
-            tokenize_word_hashes(df, text_col, id_col), "tokens",
-            n, num_hashes, id_col)
-    shingled = with_shingle_hashes(df, text_col, n, id_col)
-    ks = np.arange(1, num_hashes + 1, dtype=np.int64)
-    A = splitmix64(ks, seed=0xA5).view(np.uint64) | np.uint64(1)
-    B = splitmix64(ks, seed=0xB7).view(np.uint64)
-
-    def compute(batches):
-        for batch in batches:
-            sh = batch.column("shingles")
-            if isinstance(sh, pa.ChunkedArray):
-                sh = sh.combine_chunks()
-            flat = sh.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            all_offsets = sh.offsets.to_numpy(zero_copy_only=False)
-            lengths = np.diff(all_offsets)
-            nonempty = lengths > 0
-            base = all_offsets[0]
-            offsets = (all_offsets[:-1][nonempty] - base).astype(np.int64)
-            n_docs = len(lengths)
-            sig_mat = np.full((n_docs, num_hashes), np.iinfo(np.int64).max,
-                              dtype=np.int64)
-            flat_u = flat.view(np.uint64)
-            buf = np.empty_like(flat_u)
-            for k in range(num_hashes):
-                if len(flat):
-                    np.multiply(flat_u, A[k], out=buf)
-                    buf += B[k]
-                    mins = np.minimum.reduceat(buf, offsets)
-                    sig_mat[nonempty, k] = mins.astype(np.int64)
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
-            sig_offsets = pa.array(
-                np.arange(0, (n_docs + 1) * num_hashes, num_hashes,
-                          dtype=np.int32))
-            sig_arr = pa.ListArray.from_arrays(sig_offsets,
-                                               pa.array(sig_mat.ravel()))
-            yield pa.RecordBatch.from_arrays(
-                [ids, sig_arr], names=[id_col, "sig"])
-
-    id_type = dict(df.dtypes)[id_col]
-    return shingled.mapInArrow(compute, schema=f"`{id_col}` {id_type}, sig array<bigint>")
+                       num_hashes: int = 128,
+                       id_col: str = "doc_id") -> DataFrame:
+    """(id, sig array<bigint>): K permutation-minima over the word n-gram
+    hashes of raw text.  Adapter: ``tokenize_word_hashes`` then
+    ``minhash_signatures_tokens`` (the one MinHash kernel) over the word
+    hashes."""
+    return minhash_signatures_tokens(
+        tokenize_word_hashes(df, text_col, id_col), "tokens",
+        n, num_hashes, id_col)
 
 
 _EMPTY_SIG_SENTINEL = np.iinfo(np.int64).max
@@ -229,13 +161,20 @@ _EMPTY_SIG_SENTINEL = np.iinfo(np.int64).max
 def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
                               n: int = 3, num_hashes: int = 128,
                               id_col: str = "doc_id") -> DataFrame:
-    """MinHash signatures directly over PRE-TOKENIZED docs (the input_hint
-    table shape) — no text, no JVM shingle expressions: ONE mapInArrow
-    stage computes token n-gram hashes (vectorized chain over the chunk's
-    flat token buffer with per-doc window masks) and the per-permutation
-    minima in the same pass.  Mirrors the text path's semantics: docs with
-    m >= n tokens get m-n+1 shingles; 0 < m < n gets one shingle over all
-    m tokens; empty docs keep the sentinel signature (dropped at banding).
+    """MinHash signatures over a token array column (the input_hint table
+    shape, or ``tokenize_word_hashes`` output) — the one MinHash kernel:
+    ONE mapInArrow stage computes token n-gram hashes (vectorized chain
+    over the chunk's flat token buffer with per-doc window masks) and the
+    per-permutation minima in the same pass.  Docs with m >= n tokens get
+    m-n+1 shingles; 0 < m < n gets one shingle over all m tokens; empty
+    docs keep the sentinel signature (dropped at banding).
+
+    Arrow-native: per-doc minima come from ``np.minimum.reduceat`` segment
+    reductions — one vector hash pass per permutation across the batch,
+    no per-row Python.  The permutation family is 2-universal multiply-add
+    ``h_k(x) = A_k*x + B_k (mod 2^64)`` with odd ``A_k`` (a bijection):
+    the shingle hashes are already splitmix64-mixed, so one multiply+add
+    per permutation replaces a full finalizer pass.
 
     Output is join-compatible with ``lsh_candidate_pairs`` /
     ``connected_components`` — the rest of the dedup pipeline is shared."""
@@ -557,36 +496,30 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 
 # ---------------------------------------------------------------- SimHash
 def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       tokenizer: str = "arrow") -> DataFrame:
-    """(id, simhash bigint): 64-bit sign-sum fingerprint over word hashes.
+                       id_col: str = "doc_id") -> DataFrame:
+    """(id, simhash bigint): 64-bit sign-sum fingerprint over the word
+    hashes of raw text.  Adapter: ``tokenize_word_hashes`` then
+    ``_simhash_kernel``; docs with no words get signature 0."""
+    return _simhash_kernel(tokenize_word_hashes(df, text_col, id_col),
+                           "tokens", id_col)
 
-    Arrow-native, no per-row Python: word-hash lists flatten zero-copy,
+
+def _simhash_kernel(df: DataFrame, tokens_col: str,
+                    id_col: str) -> DataFrame:
+    """The one SimHash kernel, over a 64-bit token-hash array column.
+
+    Arrow-native, no per-row Python: hash lists flatten zero-copy,
     ``np.unpackbits`` over the little-endian byte view yields the (words,
     64) bit matrix for a whole chunk at once, and ``np.add.reduceat`` at
     doc boundaries gives per-doc bit-vote sums; signatures re-assemble with
     ``np.packbits``.  Chunked at doc boundaries so the bit matrix stays
-    ~8 MB regardless of batch size.
-
-    ``tokenizer="arrow"`` (default) sources the per-word hashes from the
-    shared ``tokenize_word_hashes`` Arrow pass; ``tokenizer="jvm"`` keeps
-    the original interpreted xxhash64 higher-order expression (different
-    hash family -> different, equally valid signatures)."""
-    if tokenizer == "arrow":
-        hashed = tokenize_word_hashes(df, text_col, id_col) \
-            .withColumnRenamed("tokens", "wh")
-    else:
-        df = fan_out_small_input(df)
-        words = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
-        hashed = df.select(F.col(id_col),
-                           F.transform(words, lambda w: F.xxhash64(w)).alias("wh"))
-
+    ~8 MB regardless of batch size."""
     CHUNK_WORDS = 131072  # 64-wide uint8 bit matrix ~8MB per chunk
 
     def compute(batches):
         import pyarrow as pa
         for batch in batches:
-            wh = batch.column("wh")
+            wh = batch.column(tokens_col)
             if isinstance(wh, pa.ChunkedArray):
                 wh = wh.combine_chunks()
             n = len(wh)
@@ -629,7 +562,8 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
                 [ids, pa.array(out)], names=[id_col, "simhash"])
 
     id_type = dict(df.dtypes)[id_col]
-    return hashed.mapInArrow(compute, schema=f"`{id_col}` {id_type}, simhash bigint")
+    return df.select(id_col, tokens_col).mapInArrow(
+        compute, schema=f"`{id_col}` {id_type}, simhash bigint")
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int = 3,
@@ -829,7 +763,14 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     configured the code falls back to ``localCheckpoint``
     (executor-storage lineage, fine for test scale).
     ``on_nonconverged``: "warn" (default), "raise", or "ignore" when labels
-    are still changing after max_iter.
+    are still changing after max_iter.  A non-converged result breaks the
+    component = min-member-id contract, and the dedup keep rule
+    ``id != component`` (``near_dedup``, ``incremental_near_dedup``,
+    ``semdedup``) then behaves differently: each cluster still keeps its
+    minimum id, and may also keep other ids that no smaller label has
+    reached yet; but a node whose label is not its own id is dropped even
+    when no kept row shares its label, so the rule can drop more rows than
+    a keep-the-min-per-label rule would.
 
     ``method="star"`` switches to large-star/small-star alternation
     (O(log d) rounds) — the right choice when components may be deep
@@ -1290,11 +1231,13 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
             .persist())
     caches.append(hits)
 
+    probe_error: list = []
+
     def _materialize_hits():
         try:
             hits.count()
-        except Exception:
-            pass  # surfaced by the final action that consumes `hits`
+        except Exception as e:  # noqa: BLE001 - re-raised on the caller
+            probe_error.append(e)
 
     probe = InheritableThread(target=_materialize_hits, daemon=True)
     probe.start()
@@ -1317,6 +1260,11 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
         b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
     finally:
         probe.join()
+    # a failed store probe fails THIS call (the collapse succeeded, or its
+    # own exception would already be propagating), not a later action on
+    # the returned frame
+    if probe_error:
+        raise probe_error[0]
     if outputs is not None:
         # survivors' signatures SLICED from the already-computed batch
         # signature cache — the store-append frame without a second
@@ -1330,25 +1278,15 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
 def near_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                threshold: float = 0.8, num_hashes: int = 128, bands: int = 32,
                n: int = 3) -> DataFrame:
-    """Near-duplicate REMOVAL: MinHash-LSH pair discovery -> connected
-    components -> keep the min-id representative per duplicate cluster.
+    """Near-duplicate REMOVAL of raw text: MinHash-LSH pair discovery ->
+    connected components -> keep the min-id representative per duplicate
+    cluster.  Adapter: ``minhash_signatures`` (tokenizer + the MinHash
+    kernel) then the pipeline shared with ``near_dedup_tokens``.
 
     Returns the deduplicated rows of ``df`` (all original columns)."""
-    sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
-    caches = [sigs]
-    cand = minhash_dedup_pairs(df, text_col, n, num_hashes, bands, threshold,
-                               id_col, sigs=sigs, cache_out=caches)
-    pairs = cand.select("id_a", "id_b")
-    # connected_components materializes the edge list eagerly (checkpoint +
-    # per-iteration action), so the signature/banding caches can go here
-    comps = connected_components(pairs)
-    for c in caches:
-        c.unpersist()
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    return df.join(drop_ids, on=id_col, how="left_anti")
+    return _near_dedup_impl(
+        df, minhash_signatures(df, text_col, n, num_hashes, id_col),
+        threshold, bands, id_col)
 
 
 def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
@@ -1360,12 +1298,25 @@ def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
 
         minhash_signatures_tokens (one shuffle-free Arrow pass)
         -> lsh_candidate_pairs    (banded, bucket-capped 8-byte-key join)
-        -> connected_components   (large-star/small-star, O(log d) rounds)
+        -> connected_components   (min-label, or a driver union-find when
+                                   the edge list is small)
         -> keep min-id representative per duplicate cluster
 
     Returns the deduplicated rows of ``df`` (all original columns)."""
-    sigs = minhash_signatures_tokens(df, tokens_col, n, num_hashes,
-                                     id_col).persist()
+    return _near_dedup_impl(
+        df, minhash_signatures_tokens(df, tokens_col, n, num_hashes, id_col),
+        threshold, bands, id_col)
+
+
+def _near_dedup_impl(df: DataFrame, sigs: DataFrame, threshold: float,
+                     bands: int, id_col: str) -> DataFrame:
+    """Shared body of ``near_dedup`` / ``near_dedup_tokens``.
+
+    The keep rule drops every id whose component label is not itself.  If
+    ``connected_components`` stops at ``max_iter`` without converging
+    (``on_nonconverged="warn"``, the default), labels are not yet the
+    cluster minimum; see its docstring for what the rule then keeps."""
+    sigs = sigs.persist()
     caches = [sigs]
     cand = lsh_candidate_pairs(sigs, bands, id_col, cache_out=caches)
     pairs = (cand.where(F.col("est_jaccard") >= threshold)

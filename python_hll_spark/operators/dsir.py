@@ -4,25 +4,33 @@ Implements the Data Selection via Importance Resampling recipe
 (Xie et al. 2023, arXiv:2302.03169) the way a Spark pipeline should:
 
 1. featurize every doc as a bag of HASHED unigram+bigram buckets
-   (``buckets`` ~ 10k, the paper's setting) — pure JVM array expressions,
-   no Python in the corpus pass;
+   (``buckets`` ~ 10k, the paper's setting): ``pmod(xxhash64(t), buckets)``
+   per token and ``pmod(xxhash64(a, b), buckets)`` per adjacent pair,
+   computed inside ONE Arrow kernel per stage by a bit-exact vectorized
+   replica of Spark's ``xxhash64`` (``hashing.xxhash64_int``);
 2. fit two bag-of-buckets unigram models — target corpus ``p`` and raw
-   corpus ``q`` — each ONE map-side-combined aggregation that collapses a
-   100 TB scan to a ``buckets``-row frame;
+   corpus ``q`` — each one kernel pass emitting at most ``buckets``
+   partial rows per task, then a tiny sum (``bucket_counts_tokens``);
 3. score every raw doc with the log importance weight
-   ``sum_f count(f) * (ln p[f] - ln q[f])`` via a BROADCAST join of the
-   buckets-row log-ratio frame against the exploded features (occurrence
-   rows never shuffle; the per-doc sum map-side-combines to one row per
-   doc before its only shuffle);
+   ``sum_f count(f) * (ln p[f] - ln q[f])`` as a numpy gather against the
+   broadcast ``float64[buckets]`` log-ratio table inside the same kind of
+   kernel pass (``dsir_weights_tokens``) — no occurrence rows, no join,
+   no shuffle;
 4. resample with seeded Gumbel top-k (the paper's sampling-without-
    replacement trick: argmax of ``w + Gumbel`` ~ sampling proportional to
    ``exp(w)``), planned as TakeOrderedAndProject — count-free, bounded
    driver result, no global sort.
 
+There is one kernel per step.  The text entry points (``bucket_counts``,
+``dsir_weights``, ``dsir_select``) are adapters: ``tokenize_word_hashes``
+(lowercase, ASCII-whitespace split, 64-bit murmur3 word hashes, one
+Arrow pass) and then the tokens kernel.  So a text feature is xxhash64 of
+a word HASH, not of the word string, and a doc with no words has no
+features and drops out of the weights frame.
+
 The reference library (AdRoll/python-hll) has no selection surface at all;
 this operator exists for the training-data-pipeline tier of the target
-engine. Hash choice is Spark's built-in xxhash64 so the whole featurizer
-stays inside whole-stage codegen.
+engine.
 """
 
 from __future__ import annotations
@@ -32,36 +40,17 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from python_hll_spark.functions.text import _norm_word_array
-
-
-def hashed_ngram_features(text: Column, buckets: int = 10000,
-                          bigrams: bool = True) -> Column:
-    """array<bigint> of hashed feature buckets for ``text``: one entry per
-    unigram occurrence plus (optionally) one per bigram occurrence —
-    multiplicity preserved, exactly the paper's bag-of-hashed-ngrams."""
-    ws = _norm_word_array(text)
-    uni = F.transform(ws, lambda w: F.pmod(F.xxhash64(w), F.lit(buckets)))
-    if not bigrams:
-        return uni
-    idx = F.when(F.size(ws) >= 2,
-                 F.sequence(F.lit(1), F.size(ws) - 1)) \
-        .otherwise(F.array().cast("array<int>"))
-    big = F.transform(
-        idx,
-        lambda i: F.pmod(
-            F.xxhash64(F.concat_ws(" ", F.element_at(ws, i),
-                                   F.element_at(ws, i + 1))),
-            F.lit(buckets)))
-    return F.concat(uni, big)
+from python_hll_spark.operators.dedup import tokenize_word_hashes
 
 
 def hashed_ngram_features_tokens(tokens: Column, buckets: int = 10000,
                                  bigrams: bool = True) -> Column:
-    """Pre-tokenized (input_hint shape) featurizer: one bucket per token
-    occurrence plus one per adjacent token pair.  Bigrams hash the two ids
-    directly (``xxhash64(a, b)``) — no string building, stays in
-    whole-stage codegen."""
+    """JVM-expression featurizer for a token array column: one bucket per
+    token occurrence plus one per adjacent token pair (``xxhash64(a, b)``).
+    No operator runs it; it is the spec the Arrow kernels of
+    ``bucket_counts_tokens`` / ``dsir_weights_tokens`` are pinned against
+    bit for bit (explode it and aggregate, or feed it to
+    ``_weights_impl``)."""
     uni = F.transform(tokens, lambda t: F.pmod(F.xxhash64(t),
                                                F.lit(buckets)))
     if not bigrams:
@@ -79,20 +68,21 @@ def hashed_ngram_features_tokens(tokens: Column, buckets: int = 10000,
 
 def bucket_counts(df: DataFrame, text_col: str = "text",
                   buckets: int = 10000, bigrams: bool = True) -> DataFrame:
-    """(bucket bigint, cnt bigint) hashed-feature occurrence counts — the
-    sufficient statistics of a bag-of-buckets unigram model.  ONE corpus
-    scan; groupBy partial-aggregates map-side so the shuffle moves at most
-    ``buckets`` rows per task regardless of corpus size."""
-    feats = hashed_ngram_features(F.col(text_col), buckets, bigrams)
-    return (df.select(F.explode(feats).alias("bucket"))
-            .groupBy("bucket").agg(F.count("*").alias("cnt")))
+    """(bucket bigint, cnt bigint) hashed-feature occurrence counts of raw
+    text — the sufficient statistics of a bag-of-buckets unigram model.
+    Adapter: ``tokenize_word_hashes`` then ``bucket_counts_tokens`` over
+    the word hashes (the tokenizer needs an id column; a constant one
+    serves, since counts are corpus-wide)."""
+    docs = df.select(F.lit(0).alias("__doc"), F.col(text_col))
+    return bucket_counts_tokens(tokenize_word_hashes(docs, text_col, "__doc"),
+                                "tokens", buckets, bigrams)
 
 
 def bucket_counts_tokens(df: DataFrame, tokens_col: str = "tokens",
                          buckets: int = 10000,
                          bigrams: bool = True) -> DataFrame:
-    """``bucket_counts`` over the pre-tokenized table shape — as ONE Arrow
-    kernel pass: per-task ``np.bincount`` over the bit-exact vectorized
+    """Hashed-feature counts of a token array column — as ONE Arrow kernel
+    pass: per-task ``np.bincount`` over the bit-exact vectorized
     ``pmod(xxhash64(...), buckets)`` featurizer (``hashing.xxhash64_int``),
     emitting at most ``buckets`` (bucket, cnt) partial rows per task for a
     final tiny sum.  Counts are integers, so the result is EXACTLY the
@@ -166,22 +156,21 @@ def dsir_logratio(target_counts: DataFrame, raw_counts: DataFrame,
 def dsir_weights(df: DataFrame, logratio: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", buckets: int = 10000,
                  bigrams: bool = True) -> DataFrame:
-    """(id, n_features, dsir_weight): per-doc log importance weight — the
-    feature-count-weighted sum of broadcast log-ratios.  The exploded
-    occurrence rows join the buckets-row ratio frame as a broadcast hash
-    join (no occurrence shuffle) and partial-aggregate to one row per doc
-    before the only shuffle (per-doc combine happens map-side because
-    explode keeps a doc's features inside one partition)."""
-    feats = hashed_ngram_features(F.col(text_col), buckets, bigrams)
-    return _weights_impl(df, feats, logratio, id_col)
+    """(id, n_features, dsir_weight): per-doc log importance weight of raw
+    text — the feature-count-weighted sum of the log-ratios.  Adapter:
+    ``tokenize_word_hashes`` then ``dsir_weights_tokens`` over the word
+    hashes, so docs with no words drop out and ``logratio`` is collected
+    eagerly (see there)."""
+    return dsir_weights_tokens(tokenize_word_hashes(df, text_col, id_col),
+                               logratio, "tokens", id_col, buckets, bigrams)
 
 
 def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
                         tokens_col: str = "tokens", id_col: str = "doc_id",
                         buckets: int = 10000,
                         bigrams: bool = True) -> DataFrame:
-    """``dsir_weights`` over the pre-tokenized table shape — as ONE Arrow
-    kernel pass instead of explode + broadcast join + re-aggregate.
+    """Per-doc DSIR weights of a token array column — as ONE Arrow kernel
+    pass instead of explode + broadcast join + re-aggregate.
 
     The explode materializes ~2 JVM rows per token (a billion-row frame
     per 500M-token batch) only to look each one up in a 10k-row broadcast
@@ -277,6 +266,8 @@ def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
 
 def _weights_impl(df: DataFrame, feats: Column, logratio: DataFrame,
                   id_col: str) -> DataFrame:
+    """Explode + broadcast-join scoring plan: the reference the
+    ``dsir_weights_tokens`` kernel is checked against."""
     occ = df.select(F.col(id_col), F.explode(feats).alias("bucket"))
     return (occ.join(F.broadcast(logratio), "bucket")
             .groupBy(id_col)
@@ -324,11 +315,13 @@ def dsir_select(raw: DataFrame, target: DataFrame, k: int,
 
 def reference_dsir_weights(rows, target_rows, buckets=10000, bigrams=True,
                            alpha=1.0, hasher=None):
-    """Pure-Python oracle of the weight math for tests: same normalization,
-    same smoothing, caller supplies ``hasher(s) -> bucket`` matching the
-    Spark-side hash (tests pass a collected xxhash64 lookup)."""
+    """Pure-Python oracle of the weight math for tests: the tokenizer's
+    normalization (lowercase, whitespace split; ASCII text assumed), same
+    smoothing, and docs without features omitted.  The caller supplies
+    ``hasher(s) -> bucket`` for each word ``s`` and each ``"a b"`` word
+    pair, matching the Spark-side hash (tests pass a collected lookup)."""
     def featurize(text):
-        words = " ".join(str(text or "").lower().split()).split(" ")
+        words = str(text or "").lower().split()
         feats = [hasher(w) for w in words]
         if bigrams and len(words) >= 2:
             feats += [hasher(f"{a} {b}")
@@ -347,8 +340,11 @@ def reference_dsir_weights(rows, target_rows, buckets=10000, bigrams=True,
     r_denom = sum(rc.values()) + alpha * buckets
     out = {}
     for doc_id, text in rows:
+        feats = featurize(text)
+        if not feats:
+            continue
         w = 0.0
-        for f in featurize(text):
+        for f in feats:
             w += (math.log((tc.get(f, 0) + alpha) / t_denom)
                   - math.log((rc.get(f, 0) + alpha) / r_denom))
         out[doc_id] = w

@@ -162,7 +162,8 @@ def _simhash_reference(word_hashes: list[int]) -> int:
 
 
 def test_simhash_vectorized_matches_reference(spark):
-    from python_hll_spark.operators.dedup import simhash_signatures
+    from python_hll_spark.operators.dedup import (simhash_signatures,
+                                                  tokenize_word_hashes)
 
     rng = np.random.default_rng(5)
     vocab = [f"word{i}" for i in range(300)]
@@ -171,26 +172,13 @@ def test_simhash_vectorized_matches_reference(spark):
     rows += [(1000, ""), (1001, "   "), (1002, "single")]
     df = _docs(spark, rows)
     got = {r["doc_id"]: r["simhash"]
-           for r in simhash_signatures(df, tokenizer="jvm").collect()}
-
-    # recompute expected through the same JVM xxhash64 word pipeline
-    words = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " ")
-    wh = df.select("doc_id",
-                   F.transform(words, lambda w: F.xxhash64(w)).alias("wh")).collect()
-    for r in wh:
-        assert got[r["doc_id"]] == _simhash_reference(r["wh"]), r["doc_id"]
-
-    # arrow tokenizer: same kernel, murmur3 word-hash family
-    from python_hll_spark.operators.dedup import tokenize_word_hashes
-    got_a = {r["doc_id"]: r["simhash"]
-             for r in simhash_signatures(df, tokenizer="arrow").collect()}
-    wh_a = tokenize_word_hashes(df).collect()
-    for r in wh_a:
+           for r in simhash_signatures(df).collect()}
+    for r in tokenize_word_hashes(df).collect():
         if r["tokens"]:
-            assert got_a[r["doc_id"]] == _simhash_reference(r["tokens"]), \
+            assert got[r["doc_id"]] == _simhash_reference(r["tokens"]), \
                 r["doc_id"]
         else:
-            assert got_a[r["doc_id"]] == 0   # empty docs: zero signature
+            assert got[r["doc_id"]] == 0   # empty docs: zero signature
 
 
 # --------------------------------------- connected components convergence

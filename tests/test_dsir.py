@@ -13,16 +13,24 @@ def _docs(spark, rows):
 
 
 def _spark_hasher(spark, texts, buckets):
-    """Exact xxhash64-based bucket lookup for every feature string the
-    reference featurizer will produce from ``texts``."""
+    """Bucket lookup for every feature string the reference featurizer
+    will produce from ``texts``, computed with Spark's own xxhash64 over
+    the tokenizer's word hashes: a word ``w`` maps to
+    ``pmod(xxhash64(h_w), buckets)`` and a pair ``"a b"`` to
+    ``pmod(xxhash64(h_a, h_b), buckets)``."""
+    from python_hll_spark.operators.dedup import tokenize_word_hashes
+
     feats = set()
     for t in texts:
-        words = " ".join(str(t or "").lower().split()).split(" ")
+        words = str(t or "").lower().split()
         feats.update(words)
         feats.update(f"{a} {b}" for a, b in zip(words, words[1:]))
-    df = spark.createDataFrame([(f,) for f in feats], "s string")
-    rows = df.select("s", F.pmod(F.xxhash64("s"), F.lit(buckets))
-                     .alias("b")).collect()
+    df = spark.createDataFrame(list(enumerate(feats)), "doc_id long, s string")
+    toks = tokenize_word_hashes(df, "s").join(df, "doc_id")
+    t1, t2 = F.element_at("tokens", 1), F.element_at("tokens", 2)
+    rows = toks.select("s", F.pmod(
+        F.when(F.size("tokens") == 1, F.xxhash64(t1))
+        .otherwise(F.xxhash64(t1, t2)), F.lit(buckets)).alias("b")).collect()
     lut = {r["s"]: r["b"] for r in rows}
     return lut.__getitem__
 
@@ -126,8 +134,9 @@ def test_dsir_separation_and_resample(spark):
 
 
 def test_dsir_weights_plan_broadcasts_ratio(spark):
-    """The scoring join must broadcast the buckets-row ratio frame — the
-    occurrence rows (corpus-scale) never shuffle for the join."""
+    """Text scoring is the tokenizer plus the tokens kernel, with the
+    buckets-row ratio table broadcast into it: no join and no hash
+    Exchange, and no per-occurrence rows (corpus-scale) are built."""
     from python_hll_spark.operators.dsir import (
         bucket_counts, dsir_logratio, dsir_weights)
 
@@ -137,10 +146,10 @@ def test_dsir_weights_plan_broadcasts_ratio(spark):
     plan = dsir_weights(docs, lr)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # featurizer is JVM-side: xxhash64 in the plan, no Python eval for it
-    assert "xxhash64" in plan
+    assert "Join" not in plan
+    assert "hashpartitioning" not in plan
+    tree = plan.split("\n\n", 1)[0]
+    assert tree.count("MapInArrow") == 2  # tokenizer, weights kernel
 
 
 def test_dsir_select_end_to_end(spark):

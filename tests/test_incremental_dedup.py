@@ -120,8 +120,8 @@ def test_minhash_arrow_tokenizer_collapses_exact_dupes(spark):
 
 
 def test_minhash_tokenizers_agree_on_est_jaccard(spark):
-    """Arrow and JVM tokenizers are different hash families but must give
-    statistically consistent Jaccard estimates on the same near-dup pair."""
+    """The text MinHash path must pair a near-dup (two appended words) and
+    estimate its Jaccard above 0.75."""
     from python_hll_spark.operators.dedup import (
         lsh_candidate_pairs, minhash_signatures)
 
@@ -129,11 +129,10 @@ def test_minhash_tokenizers_agree_on_est_jaccard(spark):
             "lambda mu nu xi omicron pi rho sigma tau upsilon") * 3
     near = base + " phi chi"
     df = _docs(spark, [(1, base), (2, near)])
-    for tok in ("arrow", "jvm"):
-        sigs = minhash_signatures(df, num_hashes=128, n=3, tokenizer=tok)
-        pairs = lsh_candidate_pairs(sigs, bands=32).collect()
-        assert len(pairs) == 1, tok
-        assert pairs[0]["est_jaccard"] > 0.75, (tok, pairs)
+    sigs = minhash_signatures(df, num_hashes=128, n=3)
+    pairs = lsh_candidate_pairs(sigs, bands=32).collect()
+    assert len(pairs) == 1
+    assert pairs[0]["est_jaccard"] > 0.75, pairs
 
 
 def test_simhash_arrow_tokenizer(spark):
@@ -142,12 +141,11 @@ def test_simhash_arrow_tokenizer(spark):
     df = _docs(spark, [(1, "one two three four five six seven eight"),
                        (2, "ONE two  three four five six seven eight"),
                        (3, "totally unrelated words here entirely")])
-    for tok in ("arrow", "jvm"):
-        sigs = {r["doc_id"]: r["simhash"] for r in
-                simhash_signatures(df, tokenizer=tok).collect()}
-        assert sigs[1] == sigs[2], tok
-        ham = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
-        assert ham > 10, (tok, ham)
+    sigs = {r["doc_id"]: r["simhash"] for r in
+            simhash_signatures(df).collect()}
+    assert sigs[1] == sigs[2]
+    ham = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
+    assert ham > 10, ham
 
 
 # -------------------------------------------- incremental NEAR-dedup store
@@ -225,6 +223,34 @@ def test_incremental_near_dedup_empty_store(spark):
                                          threshold=0.8, num_hashes=64,
                                          bands=16, n=3).collect())
     assert kept == [1, 3]
+
+
+def test_incremental_near_dedup_raises_on_failed_store_probe(spark,
+                                                             tmp_path):
+    """The store probe runs on a background thread.  When it fails (here:
+    the store's files vanish after ``near_store_read``), the call itself
+    must raise, not return a frame whose first action fails later."""
+    import shutil
+
+    from python_hll_spark.operators.dedup import (
+        incremental_near_dedup, minhash_signatures, near_store_read,
+        near_store_write)
+
+    path = str(tmp_path / "near_store")
+    near_store_write(minhash_signatures(_near_docs(spark), num_hashes=64,
+                                        n=3), path, bands=16)
+    sigs, bnds = near_store_read(spark, path)
+    shutil.rmtree(path)
+    batch = _near_docs(spark).selectExpr("doc_id + 100 AS doc_id", "text")
+    caches = []
+    try:
+        with pytest.raises(Exception, match="(?i)not.?exist|not found"):
+            incremental_near_dedup(batch, sigs, bnds, threshold=0.8,
+                                   num_hashes=64, bands=16, n=3,
+                                   cache_out=caches)
+    finally:
+        for c in caches:
+            c.unpersist()
 
 
 def test_incremental_near_dedup_tokens(spark):

@@ -75,3 +75,81 @@ def test_short_doc_trailing_repeat_not_collided(spark):
     assert sigs[1] == sigs[3]          # identical short docs
     assert sigs[1] != sigs[2]          # trailing repeat distinguishes
     assert sigs[4] != sigs[5]          # [a] vs [a,a]
+
+
+def _adapter_families():
+    """family -> (text entry point, tokens kernel); each takes the text
+    frame or its ``tokenize_word_hashes`` frame and returns comparable
+    Python values."""
+    from python_hll_spark.operators import dedup, dsir
+
+    def lr(toks):
+        return dsir.dsir_logratio(
+            dsir.bucket_counts_tokens(toks.where("doc_id % 3 = 0"),
+                                      buckets=64),
+            dsir.bucket_counts_tokens(toks, buckets=64), buckets=64)
+
+    def by_id(df, col):
+        return {r["doc_id"]: (tuple(r[col]) if isinstance(r[col], list)
+                              else r[col]) for r in df.collect()}
+
+    def counts(df):
+        return {r["bucket"]: r["cnt"] for r in df.collect()}
+
+    def weights(df):
+        return {r["doc_id"]: (r["n_features"], r["dsir_weight"])
+                for r in df.collect()}
+
+    def kept(df):
+        return sorted(r["doc_id"] for r in df.collect())
+
+    return {
+        "minhash": (
+            lambda df, t: by_id(dedup.minhash_signatures(
+                df, num_hashes=32), "sig"),
+            lambda df, t: by_id(dedup.minhash_signatures_tokens(
+                t, num_hashes=32), "sig")),
+        "simhash": (
+            lambda df, t: by_id(dedup.simhash_signatures(df), "simhash"),
+            lambda df, t: by_id(dedup._simhash_kernel(
+                t, "tokens", "doc_id"), "simhash")),
+        "bucket_counts": (
+            lambda df, t: counts(dsir.bucket_counts(df, buckets=64)),
+            lambda df, t: counts(dsir.bucket_counts_tokens(
+                t, buckets=64))),
+        "dsir_weights": (
+            lambda df, t: weights(dsir.dsir_weights(
+                df, lr(t), buckets=64)),
+            lambda df, t: weights(dsir.dsir_weights_tokens(
+                t, lr(t), buckets=64))),
+        "near_dedup": (
+            lambda df, t: kept(dedup.near_dedup(
+                df, threshold=0.5, num_hashes=32, bands=8)),
+            lambda df, t: kept(dedup.near_dedup_tokens(
+                t, threshold=0.5, num_hashes=32, bands=8))),
+    }
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "bucket_counts",
+                                    "dsir_weights", "near_dedup"])
+def test_text_entry_points_are_tokenizer_adapters(spark, family):
+    """Each text entry point equals its tokens kernel over
+    ``tokenize_word_hashes`` of the same docs — byte-identical signatures
+    and counts, ``==`` weights, the same kept ids — including empty,
+    whitespace-only, single-word and mixed-case docs."""
+    from python_hll_spark.operators.dedup import tokenize_word_hashes
+
+    rng = np.random.default_rng(9)
+    vocab = [f"w{i}" for i in range(60)]
+    base = "the quick brown fox jumps over the lazy dog by the river bank"
+    rows = [(i, " ".join(rng.choice(vocab, size=int(rng.integers(1, 30)))))
+            for i in range(30)]
+    rows += [(100, base), (101, base.upper()), (102, base + " today"),
+             (103, "The QUICK Brown fox jumps over the lazy dog"),
+             (104, ""), (105, " \t\n "), (106, "single"), (107, "SINGLE")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    toks = tokenize_word_hashes(df)
+    text_fn, tokens_fn = _adapter_families()[family]
+    got, want = text_fn(df, toks), tokens_fn(df, toks)
+    assert got == want
+    assert got  # a vacuous match would prove nothing

@@ -1,6 +1,9 @@
 """Tests for training-data pipeline operators: dedup, similarity, text
 analysis, multimodal plumbing — against exact oracles on testdata."""
 
+import re
+import string
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -8,7 +11,7 @@ from pyspark.sql import functions as F
 from python_hll_spark.functions.text import with_text_stats
 from python_hll_spark.operators.dedup import (
     dedup_exact, jaccard_word_pairs, minhash_dedup_pairs, minhash_signatures,
-    simhash_near_pairs, with_shingle_hashes,
+    simhash_near_pairs,
 )
 from python_hll_spark.operators.multimodal import (
     extract_image_features, resize_images, sample_frames,
@@ -63,6 +66,18 @@ def test_minhash_finds_near_dupes(spark, docs_with_dupes):
     assert found_near >= len(base_ids) * 0.7
 
 
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
+
+
+def _word_3grams(text):
+    """Exact word 3-gram set under the tokenizer's rules: ASCII lowercase,
+    split on ASCII whitespace; a doc shorter than 3 words is one shingle."""
+    words = [w for w in re.split(r"[ \t\n\v\f\r]+",
+                                 (text or "").translate(_ASCII_LOWER)) if w]
+    return {tuple(words[i:i + 3]) for i in range(max(len(words) - 2, 1))} \
+        if words else set()
+
+
 def test_minhash_estimates_match_exact_jaccard(spark, docs_with_dupes):
     """MinHash est_jaccard vs exact shingle Jaccard on the dup pairs."""
     sigs = minhash_signatures(docs_with_dupes, num_hashes=128, n=3)
@@ -70,8 +85,8 @@ def test_minhash_estimates_match_exact_jaccard(spark, docs_with_dupes):
     est = {(r["id_a"], r["id_b"]): r["est_jaccard"]
            for r in lsh_candidate_pairs(sigs, bands=32).collect()}
 
-    sh = with_shingle_hashes(docs_with_dupes, n=3).toPandas()
-    sets = {r.doc_id: set(r.shingles) for r in sh.itertuples()}
+    sets = {r["doc_id"]: _word_3grams(r["text"])
+            for r in docs_with_dupes.select("doc_id", "text").collect()}
     for (a, b), e in est.items():
         sa, sb = sets[a], sets[b]
         exact = len(sa & sb) / len(sa | sb)

@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 
 def test_xxhash64_int_matches_spark(spark):
-    """Single-arg (seed 42) and two-arg fold must equal F.xxhash64."""
+    """Single-arg (seed 42) and two-arg fold must equal F.xxhash64, for
+    int and bigint input."""
     from python_hll_spark.functions.hashing import xxhash64_int
 
     rng = np.random.default_rng(3)
@@ -29,6 +30,19 @@ def test_xxhash64_int_matches_spark(spark):
     assert np.array_equal(got1, np.array([r["h1"] for r in rows]))
     assert np.array_equal(got2, np.array([r["h2"] for r in rows]))
     assert np.array_equal(gotp, np.array([r["p"] for r in rows]))
+
+    # 8-byte input hashes as LongType (tokenize_word_hashes output)
+    la = rng.integers(-2**63, 2**63 - 1, 4000, dtype=np.int64)
+    lb = rng.integers(-2**63, 2**63 - 1, 4000, dtype=np.int64)
+    la[:3] = [0, -1, 2**63 - 1]
+    ldf = spark.createDataFrame([(int(x), int(y)) for x, y in zip(la, lb)],
+                                "a bigint, b bigint")
+    lrows = ldf.select(F.xxhash64("a").alias("h1"),
+                       F.xxhash64("a", "b").alias("h2")).collect()
+    lgot1 = xxhash64_int(la, 42)
+    assert np.array_equal(lgot1, np.array([r["h1"] for r in lrows]))
+    assert np.array_equal(xxhash64_int(lb, lgot1.view(np.uint64)),
+                          np.array([r["h2"] for r in lrows]))
 
 
 @pytest.fixture(scope="module")
