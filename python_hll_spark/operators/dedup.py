@@ -471,9 +471,7 @@ def lsh_candidate_pairs(sig_df: DataFrame, bands: int = 32,
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
                         num_hashes: int = 128, bands: int = 32,
                         threshold: float = 0.8, id_col: str = "doc_id",
-                        sigs: DataFrame | None = None,
-                        max_bucket: int = 512,
-                        cache_out: list | None = None) -> DataFrame:
+                        max_bucket: int = 512) -> DataFrame:
     """Near-dup candidate pairs above ``threshold`` estimated Jaccard.
 
     NOTE: runs one eager bounded job (the oversize-bucket key scan in
@@ -481,16 +479,11 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 
     Signatures are read 3x downstream (banding + both join sides) and are
     tiny (n_docs x num_hashes int64), so they're persisted rather than
-    recomputing the shingle+minhash pipeline per consumer.  Pass ``sigs``
-    (a persisted ``minhash_signatures`` frame) to own the cache lifecycle —
-    ``near_dedup`` does, and unpersists once components are resolved.
-    Internal persisted frames are appended to ``cache_out`` when given."""
-    if sigs is None:
-        sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
-        if cache_out is not None:
-            cache_out.append(sigs)
-    cand = lsh_candidate_pairs(sigs, bands, id_col, max_bucket=max_bucket,
-                               cache_out=cache_out)
+    recomputing the shingle+minhash pipeline per consumer; the cache lives
+    until the session drops it.  Callers that own cache lifecycles use
+    ``near_dedup``."""
+    sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
+    cand = lsh_candidate_pairs(sigs, bands, id_col, max_bucket=max_bucket)
     return cand.where(F.col("est_jaccard") >= threshold)
 
 

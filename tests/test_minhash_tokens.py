@@ -136,7 +136,11 @@ def test_text_entry_points_are_tokenizer_adapters(spark, family):
     """Each text entry point equals its tokens kernel over
     ``tokenize_word_hashes`` of the same docs — byte-identical signatures
     and counts, ``==`` weights, the same kept ids — including empty,
-    whitespace-only, single-word and mixed-case docs."""
+    whitespace-only, single-word and mixed-case docs.
+
+    The bucket_counts and dsir_weights cases check behaviour: the text DSIR
+    path used to hash word strings.  The other three pin the adapter shape,
+    so a second text-only path cannot come back unnoticed."""
     from python_hll_spark.operators.dedup import tokenize_word_hashes
 
     rng = np.random.default_rng(9)
