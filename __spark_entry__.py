@@ -168,7 +168,8 @@ def q_hll_sketch_hex_by_source(spark, sf_dir):
 def q_cms_top1_by_event_type(spark, sf_dir):
     from pyspark.sql.types import LongType
     from python_hll_spark.functions.hashing import splitmix64
-    from python_hll_spark.operators.aggregate import sketch_groupby
+    from python_hll_spark.operators.aggregate import (
+        SplitmixSpec, merge_sketches, scalar_partials_arrow)
     from python_hll_spark.sketches.cms import CMSConfig
     from python_hll_spark.sketches.specs import CMSSpec
 
@@ -176,11 +177,9 @@ def q_cms_top1_by_event_type(spark, sf_dir):
     cfg = CMSConfig(depth=5, width=65536)
     spec = CMSSpec(cfg)
 
-    def extract(pdf):
-        return splitmix64(pdf["user_id"].to_numpy(dtype=np.int64))
-
-    states = sketch_groupby(events.select("event_type", "user_id"),
-                            ["event_type"], extract, spec)
+    states = merge_sketches(
+        scalar_partials_arrow(events, ["event_type"], "user_id",
+                              SplitmixSpec(spec)), ["event_type"], spec)
 
     counted = (events.groupBy("event_type", "user_id")
                .agg(F.count("*").alias("cnt")))

@@ -6,7 +6,7 @@ AdRoll/python-hll (reference at /root/reference), re-expressed Spark-first:
 - ``sketches``  — pure-numpy mergeable sketch kernels (HLL storage-spec v1
   compatible, count-min, KLL, t-digest, Bloom).  No Spark dependency; all
   batch updates are vectorized (no per-element Python in the hot path).
-- ``operators`` — distributed aggregation: ``mapInPandas`` partial builds,
+- ``operators`` — distributed aggregation: ``mapInArrow`` partial builds,
   salted two-level tree merges, dedup, similarity search, top-k.
 - ``functions`` — vectorized hashing, text analysis, scalar pandas UDFs.
 - ``sources``   — deterministic synthetic token-sequence tables

@@ -5,7 +5,7 @@ rows* to the reducers (no partial aggregation), which is exactly what must
 never happen at 10^12 rows.  This operator hand-builds the partial/final
 split a native TypedImperativeAggregate would get from Catalyst:
 
-  stage 1  mapInPandas     one in-memory sketch per (group) per task; one
+  stage 1  mapInArrow      one in-memory sketch per (group) per task; one
                            vectorized numpy update per Arrow batch; emits one
                            tiny row (group, salt, state, lineage) per
                            partition x group.  The 100TB scan shuffles NOTHING.
@@ -28,13 +28,13 @@ HLL), so stages 2-3 are trivially small no matter the input scale.
 
 from __future__ import annotations
 
-from typing import Callable, Protocol
+from typing import Protocol
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, LongType, StructField,
-                               StructType)
+from pyspark.sql.types import (ArrayType, BinaryType, LongType,
+                               StructField, StructType)
 
 
 class SketchSpec(Protocol):
@@ -54,9 +54,6 @@ class SketchSpec(Protocol):
     def serialize(self, state) -> bytes: ...
 
     def deserialize(self, data: bytes): ...
-
-
-Extractor = Callable[["pandas.DataFrame"], np.ndarray]  # noqa: F821
 
 
 def dict_encode_groups(batch, group_cols: list[str]):
@@ -116,71 +113,32 @@ def _partial_schema(df: DataFrame, group_cols: list[str]) -> str:
     return ", ".join(fields)
 
 
-def sketch_partials(df: DataFrame, group_cols: list[str], extractor: Extractor,
+def sketch_partials(df: DataFrame, group_cols: list[str], value_col: str,
                     spec: SketchSpec, n_salts: int = 16) -> DataFrame:
-    """Stage 1: per-task partial sketches, one row per (task, group)."""
-    import pandas as pd
-    from pyspark import TaskContext
+    """Stage 1: per-task partial sketches, one row per (task, group).
 
-    out_schema = _partial_schema(df, group_cols)
-
-    def build(batches):
-        pid = TaskContext.get().partitionId()
-        states: dict = {}
-        counts: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if group_cols:
-                grouped = pdf.groupby(group_cols, sort=False).indices.items()
-            else:
-                grouped = [((), np.arange(len(pdf)))]
-            for key, idx in grouped:
-                if not isinstance(key, tuple):
-                    key = (key,)
-                sub = pdf.iloc[idx]
-                values = extractor(sub)
-                st = states.get(key)
-                if st is None:
-                    st = states[key] = spec.new()
-                    counts[key] = [0, 0]
-                spec.update(st, values)
-                counts[key][0] += len(sub)
-                counts[key][1] += len(values)
-        rows = []
-        for key, st in states.items():
-            rows.append((*key, pid % n_salts, spec.serialize(st),
-                         counts[key][0], counts[key][1], pid))
-        cols = group_cols + ["salt", "state", "n_rows", "n_values", "partition_id"]
-        yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(build, schema=out_schema)
+    The value column's Spark type picks the Arrow builder: an array column
+    is a token sequence (``token_partials_arrow`` hashes each token with
+    splitmix64); any other column feeds its values to the sketch as they
+    are (``scalar_partials_arrow``)."""
+    if isinstance(df.schema[value_col].dataType, ArrayType):
+        return token_partials_arrow(df, group_cols, value_col, spec, n_salts)
+    return scalar_partials_arrow(df, group_cols, value_col, spec, n_salts)
 
 
-def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
-                         spec: SketchSpec, n_salts: int = 16,
-                         hash_seed: int = 0) -> DataFrame:
-    """Stage 1 specialized for token-array columns, Arrow-native.
-
-    ``mapInArrow`` skips the Arrow->pandas list-column conversion (which
-    materializes one numpy object PER ROW) and flattens the ListArray
-    zero-copy — 4-5x faster per core, within ~1.5x of the raw parquet scan.
-    Group keys (any arity, NULLs included) go through ``dict_encode_groups``;
-    output schema matches ``sketch_partials`` so the same merge stages apply.
-    """
+def _arrow_partials(df: DataFrame, group_cols: list[str], value_col: str,
+                    spec: SketchSpec, n_salts: int, update) -> DataFrame:
+    """The bookkeeping both Arrow builders share: per task, one state and
+    one ``[n_rows, n_values]`` counter per group key, and the partial
+    rows they become.  Each batch's groups are registered (and their rows
+    counted) here; ``update(batch, codes, keys, states, counts)`` then
+    folds the batch's values into ``states`` and adds them to
+    ``counts[key][1]``.  Batches without groups never reach ``update``."""
     import pyarrow as pa
     from pyspark import TaskContext
 
-    from python_hll_spark.functions.hashing import splitmix64
-    from python_hll_spark.sketches.hll import (HLLSketch, HLLType,
-                                               _rho_and_index, _scatter_max)
-
-    out_schema = _partial_schema(df.select(*group_cols, token_col), group_cols)
-    pruned = df.select(*group_cols, token_col)
-
-    CHUNK = 131072  # ~1MB int64 temps: L2/L3-resident hash+scatter pipeline
-    #                 (measured optimum; 32 workers then scale on cores
-    #                 instead of queueing on DRAM bandwidth)
+    pruned = df.select(*group_cols, value_col)
+    out_schema = _partial_schema(pruned, group_cols)
 
     def build(batches):
         pid = TaskContext.get().partitionId()
@@ -190,76 +148,15 @@ def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
         for batch in batches:
             if gtypes is None:
                 gtypes = [batch.schema.field(c).type for c in group_cols]
-            tok = batch.column(token_col)
-            if isinstance(tok, pa.ChunkedArray):
-                tok = tok.combine_chunks()
-            flat = tok.flatten().to_numpy(zero_copy_only=False)
-            lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False))
             codes, keys = dict_encode_groups(batch, group_cols)
-            n_groups = len(keys)
-            row_counts = np.bincount(codes, minlength=n_groups)
+            row_counts = np.bincount(codes, minlength=len(keys))
             for g, key in enumerate(keys):
                 if key not in states:
                     states[key] = spec.new()
                     counts[key] = [0, 0]
                 counts[key][0] += int(row_counts[g])
-            if n_groups <= 1:
-                # single group in this batch (incl. ungrouped): no sort pass
-                if n_groups == 0:
-                    continue
-                key, st = keys[0], states[keys[0]]
-                for start in range(0, len(flat), CHUNK):
-                    hashed = splitmix64(flat[start:start + CHUNK].astype(np.int64),
-                                        seed=hash_seed)
-                    spec.update(st, hashed)
-                counts[key][1] += len(flat)
-                continue
-            value_groups = np.repeat(codes, lengths)
-            sts = [states[k] for k in keys]
-            if all(isinstance(s, HLLSketch) and s.type == HLLType.FULL
-                   for s in sts):
-                # all-FULL fast path (every batch after the states promote,
-                # i.e. the 100TB steady state): ONE fused rho/scatter-max
-                # over the whole chunk into a stacked (group, register)
-                # block via a combined index — the per-chunk stable argsort
-                # separation (~35% of kernel time at 5 groups) disappears.
-                # Scatter-max is order-independent, FULL states never
-                # re-check promotion, and counts are exact, so the partial
-                # rows are byte-identical to the sorted path's.
-                m = sts[0].cfg.m
-                stacked = np.empty((n_groups, m), dtype=np.uint8)
-                for g, s in enumerate(sts):
-                    stacked[g] = s.regs
-                stacked_flat = stacked.ravel()
-                for start in range(0, len(flat), CHUNK):
-                    sl = slice(start, start + CHUNK)
-                    hashed = splitmix64(flat[sl].astype(np.int64),
-                                        seed=hash_seed)
-                    j, rho = _rho_and_index(sts[0].cfg, hashed)
-                    j += value_groups[sl] * m
-                    _scatter_max(stacked_flat, j, rho)
-                vcnt = np.bincount(codes, weights=lengths,
-                                   minlength=n_groups).astype(np.int64)
-                for g, (key, s) in enumerate(zip(keys, sts)):
-                    s.regs[:] = stacked[g]
-                    counts[key][1] += int(vcnt[g])
-                continue
-            for start in range(0, len(flat), CHUNK):
-                sl = slice(start, start + CHUNK)
-                hashed = splitmix64(flat[sl].astype(np.int64), seed=hash_seed)
-                vg = value_groups[sl]
-                # counting-sort separation: one stable argsort pass,
-                # then each group's values are a contiguous view
-                order = np.argsort(vg, kind="stable")
-                hashed = hashed[order]
-                bounds = np.zeros(n_groups + 1, dtype=np.int64)
-                np.cumsum(np.bincount(vg, minlength=n_groups), out=bounds[1:])
-                for g, key in enumerate(keys):
-                    vals = hashed[bounds[g]:bounds[g + 1]]
-                    if len(vals) == 0:
-                        continue
-                    spec.update(states[key], vals)
-                    counts[key][1] += len(vals)
+            if keys:
+                update(batch, codes, keys, states, counts)
         if not states:
             return
         keys = list(states)
@@ -278,6 +175,91 @@ def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return pruned.mapInArrow(build, schema=out_schema)
+
+
+def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
+                         spec: SketchSpec, n_salts: int = 16) -> DataFrame:
+    """Stage 1 specialized for token-array columns, Arrow-native.
+
+    ``mapInArrow`` skips the Arrow->pandas list-column conversion (which
+    materializes one numpy object PER ROW) and flattens the ListArray
+    zero-copy — 4-5x faster per core, within ~1.5x of the raw parquet scan.
+    Group keys (any arity, NULLs included) go through ``dict_encode_groups``;
+    the partial rows come from ``_arrow_partials``, as for every stage-1
+    builder, so the same merge stages apply.
+    """
+    import pyarrow as pa
+
+    from python_hll_spark.functions.hashing import splitmix64
+    from python_hll_spark.sketches.hll import (HLLSketch, HLLType,
+                                               _rho_and_index, _scatter_max)
+
+    CHUNK = 131072  # ~1MB int64 temps: L2/L3-resident hash+scatter pipeline
+    #                 (measured optimum; 32 workers then scale on cores
+    #                 instead of queueing on DRAM bandwidth)
+
+    def update(batch, codes, keys, states, counts):
+        tok = batch.column(token_col)
+        if isinstance(tok, pa.ChunkedArray):
+            tok = tok.combine_chunks()
+        flat = tok.flatten().to_numpy(zero_copy_only=False)
+        lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False))
+        n_groups = len(keys)
+        if n_groups == 1:
+            # single group in this batch (incl. ungrouped): no sort pass
+            key, st = keys[0], states[keys[0]]
+            for start in range(0, len(flat), CHUNK):
+                hashed = splitmix64(flat[start:start + CHUNK].astype(np.int64))
+                spec.update(st, hashed)
+            counts[key][1] += len(flat)
+            return
+        value_groups = np.repeat(codes, lengths)
+        sts = [states[k] for k in keys]
+        if all(isinstance(s, HLLSketch) and s.type == HLLType.FULL
+               for s in sts):
+            # all-FULL fast path (every batch after the states promote,
+            # i.e. the 100TB steady state): ONE fused rho/scatter-max
+            # over the whole chunk into a stacked (group, register)
+            # block via a combined index — the per-chunk stable argsort
+            # separation (~35% of kernel time at 5 groups) disappears.
+            # Scatter-max is order-independent, FULL states never
+            # re-check promotion, and counts are exact, so the partial
+            # rows are byte-identical to the sorted path's.
+            m = sts[0].cfg.m
+            stacked = np.empty((n_groups, m), dtype=np.uint8)
+            for g, s in enumerate(sts):
+                stacked[g] = s.regs
+            stacked_flat = stacked.ravel()
+            for start in range(0, len(flat), CHUNK):
+                sl = slice(start, start + CHUNK)
+                hashed = splitmix64(flat[sl].astype(np.int64))
+                j, rho = _rho_and_index(sts[0].cfg, hashed)
+                j += value_groups[sl] * m
+                _scatter_max(stacked_flat, j, rho)
+            vcnt = np.bincount(codes, weights=lengths,
+                               minlength=n_groups).astype(np.int64)
+            for g, (key, s) in enumerate(zip(keys, sts)):
+                s.regs[:] = stacked[g]
+                counts[key][1] += int(vcnt[g])
+            return
+        for start in range(0, len(flat), CHUNK):
+            sl = slice(start, start + CHUNK)
+            hashed = splitmix64(flat[sl].astype(np.int64))
+            vg = value_groups[sl]
+            # counting-sort separation: one stable argsort pass,
+            # then each group's values are a contiguous view
+            order = np.argsort(vg, kind="stable")
+            hashed = hashed[order]
+            bounds = np.zeros(n_groups + 1, dtype=np.int64)
+            np.cumsum(np.bincount(vg, minlength=n_groups), out=bounds[1:])
+            for g, key in enumerate(keys):
+                vals = hashed[bounds[g]:bounds[g + 1]]
+                if len(vals) == 0:
+                    continue
+                spec.update(states[key], vals)
+                counts[key][1] += len(vals)
+
+    return _arrow_partials(df, group_cols, token_col, spec, n_salts, update)
 
 
 class SplitmixSpec:
@@ -307,12 +289,13 @@ class SplitmixSpec:
 
 
 def scalar_partials_arrow(df: DataFrame, group_cols: list[str], value_col: str,
-                          spec: SketchSpec, n_salts: int = 16,
-                          dtype=np.int64) -> DataFrame:
+                          spec: SketchSpec, n_salts: int = 16) -> DataFrame:
     """Stage 1 for scalar value columns (pre-hashed int64 keys, or float64
     measures for quantile sketches), Arrow-native: skips the Arrow->pandas
     conversion entirely and groups via dictionary-encoded codes + counting
     sort.  Group keys of any arity (NULLs included) via dict_encode_groups.
+    Floating-point columns reach the sketch as float64, all others as
+    int64.
 
     NULL *values* are excluded from the sketch (countDistinct semantics)
     but their groups still emit a state row — a group whose values are all
@@ -320,76 +303,41 @@ def scalar_partials_arrow(df: DataFrame, group_cols: list[str], value_col: str,
     applied via ``fill_null(0)`` + boolean select so int64 hashes never
     round-trip through float64 (which would corrupt high bits)."""
     import pyarrow as pa
-    from pyspark import TaskContext
 
-    out_schema = _partial_schema(df.select(*group_cols, value_col), group_cols)
-    pruned = df.select(*group_cols, value_col)
-
-    def build(batches):
-        pid = TaskContext.get().partitionId()
-        states: dict = {}
-        counts: dict = {}
-        gtypes = None
-        for batch in batches:
-            if gtypes is None:
-                gtypes = [batch.schema.field(c).type for c in group_cols]
-            col = batch.column(value_col)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            if col.null_count:
-                vmask = col.is_valid().to_numpy(zero_copy_only=False)
-                values = (col.fill_null(0).to_numpy(zero_copy_only=False)
-                          .astype(dtype, copy=False))
-            else:
-                vmask = None
-                values = col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
-            codes, keys = dict_encode_groups(batch, group_cols)
-            n_groups = len(keys)
-            if n_groups == 0:
-                continue
-            row_counts = np.bincount(codes, minlength=n_groups)
-            for g, key in enumerate(keys):
-                if key not in states:
-                    states[key] = spec.new()
-                    counts[key] = [0, 0]
-                counts[key][0] += int(row_counts[g])
-            if vmask is not None:
-                values = values[vmask]
-                codes = codes[vmask]
-            if n_groups == 1:
-                key = keys[0]
-                if len(values):
-                    spec.update(states[key], values)
-                    counts[key][1] += len(values)
-                continue
-            order = np.argsort(codes, kind="stable")
-            values = values[order]
-            bounds = np.zeros(n_groups + 1, dtype=np.int64)
-            np.cumsum(np.bincount(codes, minlength=n_groups), out=bounds[1:])
-            for g, key in enumerate(keys):
-                vals = values[bounds[g]:bounds[g + 1]]
-                if len(vals) == 0:
-                    continue
-                spec.update(states[key], vals)
-                counts[key][1] += len(vals)
-        if not states:
+    def update(batch, codes, keys, states, counts):
+        col = batch.column(value_col)
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        dtype = np.float64 if pa.types.is_floating(col.type) else np.int64
+        if col.null_count:
+            vmask = col.is_valid().to_numpy(zero_copy_only=False)
+            values = (col.fill_null(0).to_numpy(zero_copy_only=False)
+                      .astype(dtype, copy=False))
+        else:
+            vmask = None
+            values = col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+        n_groups = len(keys)
+        if vmask is not None:
+            values = values[vmask]
+            codes = codes[vmask]
+        if n_groups == 1:
+            key = keys[0]
+            if len(values):
+                spec.update(states[key], values)
+                counts[key][1] += len(values)
             return
-        keys = list(states)
-        arrays, names = [], []
-        for i, gcol_name in enumerate(group_cols):
-            arrays.append(pa.array([k[i] for k in keys], type=gtypes[i]))
-            names.append(gcol_name)
-        arrays += [
-            pa.array([pid % n_salts] * len(keys), pa.int32()),
-            pa.array([spec.serialize(states[k]) for k in keys], pa.binary()),
-            pa.array([counts[k][0] for k in keys], pa.int64()),
-            pa.array([counts[k][1] for k in keys], pa.int64()),
-            pa.array([pid] * len(keys), pa.int32()),
-        ]
-        names += ["salt", "state", "n_rows", "n_values", "partition_id"]
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        order = np.argsort(codes, kind="stable")
+        values = values[order]
+        bounds = np.zeros(n_groups + 1, dtype=np.int64)
+        np.cumsum(np.bincount(codes, minlength=n_groups), out=bounds[1:])
+        for g, key in enumerate(keys):
+            vals = values[bounds[g]:bounds[g + 1]]
+            if len(vals) == 0:
+                continue
+            spec.update(states[key], vals)
+            counts[key][1] += len(vals)
 
-    return pruned.mapInArrow(build, schema=out_schema)
+    return _arrow_partials(df, group_cols, value_col, spec, n_salts, update)
 
 
 def merge_states(spec: SketchSpec, blobs) -> bytes:
@@ -447,7 +395,14 @@ def merge_sketches(partials: DataFrame, group_cols: list[str],
     matter (> 64): a thousand-task 100 TB scan still tree-merges, while a
     small scan skips one shuffle + Python stage whose per-group input
     would have been a handful of rows anyway.  The decision reads the
-    plan's partitioning, not the data — no extra job."""
+    plan's partitioning, not the data — no extra job.
+
+    ``group_cols=[]`` merges everything into one row, under a constant
+    key that is dropped again: a keyless aggregate would emit a row for
+    empty input, the keyed one emits none."""
+    if not group_cols:
+        return merge_sketches(partials.withColumn("__g", F.lit(0)), ["__g"],
+                              spec, two_level).drop("__g")
     group_fields = [StructField(f.name, f.dataType)
                     for f in partials.schema.fields if f.name in group_cols]
     merged_schema = StructType(group_fields + [
@@ -465,18 +420,3 @@ def merge_sketches(partials: DataFrame, group_cols: list[str],
     if two_level and "salt" in partials.columns:
         lvl = _merge_level(partials, group_cols + ["salt"], spec, merged_schema)
     return _merge_level(lvl, group_cols, spec, merged_schema)
-
-
-def sketch_groupby(df: DataFrame, group_cols: list[str], extractor: Extractor,
-                   spec: SketchSpec, n_salts: int = 16) -> DataFrame:
-    """End-to-end: DataFrame -> one serialized sketch state per group."""
-    partials = sketch_partials(df, group_cols, extractor, spec, n_salts=n_salts)
-    return merge_sketches(partials, group_cols, spec)
-
-
-def sketch_global(df: DataFrame, extractor: Extractor, spec: SketchSpec,
-                  n_salts: int = 16) -> DataFrame:
-    """Ungrouped variant: one state row total."""
-    partials = sketch_partials(
-        df.withColumn("__g", F.lit(0)), ["__g"], extractor, spec, n_salts=n_salts)
-    return merge_sketches(partials, ["__g"], spec).drop("__g")

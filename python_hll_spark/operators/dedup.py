@@ -1167,6 +1167,8 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
                                  bands: int, id_col: str,
                                  cache_out: list | None,
                                  outputs: dict | None = None) -> DataFrame:
+    import uuid
+
     from pyspark import InheritableThread
 
     caches = cache_out if cache_out is not None else []
@@ -1225,9 +1227,12 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     caches.append(hits)
 
     probe_error: list = []
+    sc = new_df.sparkSession.sparkContext
+    probe_tag = f"near-dedup-store-probe-{uuid.uuid4().hex}"
 
     def _materialize_hits():
         try:
+            sc.addJobTag(probe_tag)
             hits.count()
         except Exception as e:  # noqa: BLE001 - re-raised on the caller
             probe_error.append(e)
@@ -1239,7 +1244,10 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     # cache) — the connected-components actions run while the store probe
     # streams on the thread above
     # the probe is joined even when the collapse raises, so its store-scan
-    # job never outlives this call and the frames the caller unpersists
+    # job never outlives this call and the frames the caller unpersists;
+    # a failed collapse cancels the probe first and its own error
+    # propagates.  The probe is found by a job tag, not a job group, so a
+    # caller's job group (which stage attribution reads) is left alone
     try:
         pairs = (cand0.where(F.col("est_jaccard") >= threshold)
                  .select("id_a", "id_b"))
@@ -1251,6 +1259,9 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
                     .select(F.col("id").alias(id_col)))
         batch = new_df.join(drop_ids, id_col, "left_anti")
         b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
+    except BaseException:
+        sc.cancelJobsWithTag(probe_tag)
+        raise
     finally:
         probe.join()
     # a failed store probe fails THIS call (the collapse succeeded, or its

@@ -28,10 +28,7 @@ def bloom_build(df: DataFrame, key_col: str, by: list[str] | None = None,
     by = by or []
     pruned = df.select(*by, F.col(key_col).cast("long").alias("__key"))
     partials = scalar_partials_arrow(pruned, by, "__key", SplitmixSpec(spec))
-    if by:
-        return merge_sketches(partials, by, spec)
-    return merge_sketches(partials.withColumn("__g", F.lit(0)),
-                          ["__g"], spec).drop("__g")
+    return merge_sketches(partials, by, spec)
 
 
 def bloom_probe(states: DataFrame, probes: DataFrame, key_col: str,

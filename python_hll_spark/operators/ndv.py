@@ -1,27 +1,18 @@
 """Approximate-NDV queries over token-sequence tables (the north-star query).
 
 All heavy lifting is Spark-first: column pruning happens because we select
-only the needed columns before mapInPandas; string keys are hashed JVM-side
-with xxhash64 inside whole-stage codegen so only int64s cross Arrow.
+only the needed columns before the Arrow partial builders (mapInArrow);
+string keys are hashed JVM-side with xxhash64 inside whole-stage codegen so
+only int64s cross Arrow.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from python_hll_spark.functions.hashing import hash_tokens
 from python_hll_spark.sketches.hll import HLLConfig
 from python_hll_spark.sketches.specs import HLLSpec
-
-
-def _tokens_extractor(pdf) -> np.ndarray:
-    vals = pdf["tokens"].to_numpy()
-    if len(vals) == 0:
-        return np.empty(0, dtype=np.int64)
-    flat = np.concatenate(vals)  # object-array of numpy arrays: single C pass
-    return hash_tokens(flat.astype(np.int64, copy=False))
 
 
 def hll_ndv_tokens(df: DataFrame, by: list[str] | None = None,
@@ -38,11 +29,7 @@ def hll_ndv_tokens(df: DataFrame, by: list[str] | None = None,
     spec = HLLSpec(cfg or HLLConfig.create(11, 5))
     by = by or []
     partials = token_partials_arrow(df, by, "tokens", spec, n_salts=n_salts)
-    if by:
-        states = merge_sketches(partials, by, spec)
-    else:
-        states = merge_sketches(partials.withColumn("__g", F.lit(0)),
-                                ["__g"], spec).drop("__g")
+    states = merge_sketches(partials, by, spec)
     return states.withColumn("ndv", hll_cardinality(F.col("state")))
 
 
@@ -89,11 +76,7 @@ def hll_ndv_column(df: DataFrame, value_col: str, by: list[str] | None = None,
     else:
         raise ValueError(f"unknown hasher {hasher!r}; use 'xxhash64' or 'murmur3'")
     partials = scalar_partials_arrow(hashed, by, "__h", spec, n_salts=n_salts)
-    if by:
-        states = merge_sketches(partials, by, spec)
-    else:
-        states = merge_sketches(partials.withColumn("__g", F.lit(0)),
-                                ["__g"], spec).drop("__g")
+    states = merge_sketches(partials, by, spec)
     return states.withColumn("ndv", hll_cardinality(F.col("state")))
 
 

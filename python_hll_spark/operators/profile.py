@@ -42,7 +42,7 @@ def _default_sketches():
 
 def token_profile(df: DataFrame, by: str = "source", token_col: str = "tokens",
                   len_col: str = "n_tok", n_salts: int = 16,
-                  sketches: dict | None = None, hash_seed: int = 0) -> DataFrame:
+                  sketches: dict | None = None) -> DataFrame:
     """One-scan multi-sketch build.  Returns (by, sketch, state, ...)."""
     import pyarrow as pa
     from pyspark import TaskContext
@@ -99,7 +99,7 @@ def token_profile(df: DataFrame, by: str = "source", token_col: str = "tokens",
             n_groups = len(dictionary)
             for start in range(0, len(flat), CHUNK):
                 sl = slice(start, start + CHUNK)
-                hashed = splitmix64(flat[sl].astype(np.int64), seed=hash_seed)
+                hashed = splitmix64(flat[sl].astype(np.int64))
                 vg = value_groups[sl]
                 order = np.argsort(vg, kind="stable")
                 hashed = hashed[order]

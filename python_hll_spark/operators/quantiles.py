@@ -32,19 +32,13 @@ def sketch_quantiles(df: DataFrame, value_col: str, qs: list[float],
         spec = TDigestSpec(TDigestConfig(compression=compression))
     else:
         raise ValueError(f"unknown quantile method {method!r}")
-    import numpy as np
-
     from python_hll_spark.operators.aggregate import (
         merge_sketches, scalar_partials_arrow)
 
     by = by or []
     pruned = df.select(*by, F.col(value_col).cast("double").alias("__v"))
-    partials = scalar_partials_arrow(pruned, by, "__v", spec, dtype=np.float64)
-    if by:
-        states = merge_sketches(partials, by, spec)
-    else:
-        states = merge_sketches(partials.withColumn("__g", F.lit(0)),
-                                ["__g"], spec).drop("__g")
+    partials = scalar_partials_arrow(pruned, by, "__v", spec)
+    states = merge_sketches(partials, by, spec)
     return states.withColumn("quantiles", _quantile_udf(spec, qs)(F.col("state")))
 
 

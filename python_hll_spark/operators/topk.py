@@ -73,17 +73,10 @@ def cms_topk(df: DataFrame, group_cols: list[str], key_col: str, k: int = 10,
     from python_hll_spark.operators.aggregate import (
         SplitmixSpec, dict_encode_groups, scalar_partials_arrow)
 
-    if shared_cms:
-        partials = scalar_partials_arrow(
-            pruned.drop("__key").withColumn("__g", F.lit(0)), ["__g"],
-            "__kh", SplitmixSpec(spec))
-        states = merge_sketches(partials, ["__g"], spec).drop("__g")
-        state_group_cols: list[str] = []
-    else:
-        partials = scalar_partials_arrow(pruned.drop("__key"), group_cols,
-                                         "__kh", SplitmixSpec(spec))
-        states = merge_sketches(partials, group_cols, spec)
-        state_group_cols = list(group_cols)
+    state_group_cols = [] if shared_cms else list(group_cols)
+    partials = scalar_partials_arrow(pruned.drop("__key"), state_group_cols,
+                                     "__kh", SplitmixSpec(spec))
+    states = merge_sketches(partials, state_group_cols, spec)
 
     group_fields = [f"`{f.name}` {f.dataType.simpleString()}"
                     for f in pruned.schema.fields if f.name in group_cols]

@@ -94,7 +94,7 @@ from python_hll_spark.plans.session import get_spark
 
 
 def _build_ndv(args) -> None:
-    from python_hll_spark.operators.ndv import _tokens_extractor, hll_ndv_tokens
+    from python_hll_spark.operators.ndv import hll_ndv_tokens
     from python_hll_spark.sketches.hll import HLLConfig
     from python_hll_spark.sketches.specs import HLLSpec
 
@@ -109,7 +109,7 @@ def _build_ndv(args) -> None:
 
         paths = sorted(glob.glob(os.path.join(args.input, "*.parquet")))
         cp = SketchCheckpoint(args.checkpoint)
-        cp.run(spark, paths, group_cols or [], _tokens_extractor, HLLSpec(cfg),
+        cp.run(spark, paths, group_cols or [], "tokens", HLLSpec(cfg),
                n_chunks=args.n_chunks)
         out = cp.finalize(spark, group_cols or [], HLLSpec(cfg))
         from python_hll_spark.functions.sketch_funcs import hll_cardinality

@@ -66,9 +66,10 @@ class SketchCheckpoint:
 
     # -- build ---------------------------------------------------------------
     def run(self, spark: SparkSession, paths: list[str], group_cols: list[str],
-            extractor, spec, n_chunks: int = 8, reader=None,
+            value_col: str, spec, n_chunks: int = 8, reader=None,
             fail_after_chunk: int | None = None) -> None:
         """Process ``paths`` in n_chunks file groups, committing each.
+        Each chunk's partials are ``sketch_partials`` of ``value_col``.
 
         ``fail_after_chunk`` simulates a mid-job crash for resume tests."""
         reader = reader or (lambda s, ps: s.read.parquet(*ps))
@@ -79,7 +80,7 @@ class SketchCheckpoint:
                 continue
             t0 = time.time()
             df = reader(spark, files)
-            partials = sketch_partials(df, group_cols, extractor, spec)
+            partials = sketch_partials(df, group_cols, value_col, spec)
             # idempotent retry: the chunk's directory is replaced wholesale,
             # so a crash between parquet commit and manifest rename cannot
             # leave two copies of the chunk's rows

@@ -127,13 +127,8 @@ class SketchStore:
         if bad:
             raise ValueError(f"rollup columns {bad} not in store group "
                              f"columns {self.group_cols}")
-        states = self.read(partitions).select(
-            *by, *_STATE_COLS) if by else self.read(partitions)
-        if by:
-            return merge_sketches(states, by, self.spec, two_level=False)
-        states = states.select(*_STATE_COLS).withColumn("__g", F.lit(0))
-        return merge_sketches(states, ["__g"], self.spec,
-                              two_level=False).drop("__g")
+        states = self.read(partitions).select(*by, *_STATE_COLS)
+        return merge_sketches(states, by, self.spec, two_level=False)
 
     def ndv(self, partitions: list | None = None,
             by: list[str] | None = None) -> DataFrame:

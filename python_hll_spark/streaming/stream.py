@@ -18,22 +18,25 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from python_hll_spark.operators.aggregate import merge_sketches, sketch_groupby
+from python_hll_spark.operators.aggregate import merge_sketches, sketch_partials
 
 
 class StreamingSketchBuild:
-    """Incremental per-group sketch state maintained across micro-batches."""
+    """Incremental per-group sketch state of ``value_col`` maintained
+    across micro-batches (each batch built by ``sketch_partials``)."""
 
-    def __init__(self, group_cols: list[str], extractor, spec, state_dir: str):
+    def __init__(self, group_cols: list[str], value_col: str, spec,
+                 state_dir: str):
         self.group_cols = group_cols
-        self.extractor = extractor
+        self.value_col = value_col
         self.spec = spec
         self.state_dir = state_dir
 
     def _merge_into_state(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        batch_states = sketch_groupby(batch_df, self.group_cols,
-                                      self.extractor, self.spec)
+        batch_states = merge_sketches(
+            sketch_partials(batch_df, self.group_cols, self.value_col,
+                            self.spec), self.group_cols, self.spec)
         current = os.path.join(self.state_dir, "current")
         if os.path.exists(current):
             prev = spark.read.parquet(current)

@@ -36,22 +36,35 @@ def test_spark_submit_build_ndv(tmp_path, spark):
     seqs_table(spark, 200, partitions=4).write.parquet(inp)
 
     zip_path = _make_pyfiles_zip(tmp_path)
-    out = str(tmp_path / "ndv_out")
     job = os.path.join(REPO, "python_hll_spark", "plans", "jobs.py")
     env = dict(os.environ)
     env.pop("PYSPARK_GATEWAY_PORT", None)
     env.pop("PYSPARK_GATEWAY_SECRET", None)
-    res = subprocess.run(
-        [SPARK_SUBMIT, "--master", "local[4]", "--py-files", zip_path, job,
-         "build-ndv", "--input", inp, "--output", out,
-         "--group-cols", "source", "--n-salts", "4"],
-        capture_output=True, text=True, timeout=300, env=env, cwd=str(tmp_path))
-    assert res.returncode == 0, res.stderr[-2000:]
 
-    lines = [json.loads(l) for l in res.stdout.strip().splitlines() if l.startswith("{")]
+    def build_ndv(name, *extra):
+        res = subprocess.run(
+            [SPARK_SUBMIT, "--master", "local[4]", "--py-files", zip_path, job,
+             "build-ndv", "--input", inp, "--output", str(tmp_path / name),
+             "--group-cols", "source", "--n-salts", "4", *extra],
+            capture_output=True, text=True, timeout=300, env=env,
+            cwd=str(tmp_path))
+        assert res.returncode == 0, res.stderr[-2000:]
+        # spark-submit hands the driver's stderr to stdout as well
+        return [json.loads(l) for l in res.stdout.strip().splitlines()
+                if l.startswith("{")]
+
+    lines = build_ndv("ndv_out")
     assert len(lines) == 5  # one per source
     for row in lines:
         assert row["ndv"] > 0
+
+    # the checkpointed build (chunked, manifest-committed) agrees per source
+    ckpt = build_ndv("ndv_ckpt_out", "--checkpoint", str(tmp_path / "ckpt"),
+                     "--n-chunks", "2")
+    (chunks,) = [r["chunks"] for r in ckpt if "chunks" in r]
+    assert len(chunks) == 2 and sum(c["n_rows"] for c in chunks) == 200
+    assert ({r["source"]: r["ndv"] for r in ckpt if "source" in r}
+            == {r["source"]: r["ndv"] for r in lines})
 
 
 @pytest.mark.slow

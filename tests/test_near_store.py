@@ -238,6 +238,45 @@ def test_refresh_single_signature_pass(spark, tmp_path, monkeypatch):
     store_sigs.unpersist()
 
 
+def test_collapse_failure_cancels_store_probe(spark, tmp_path, monkeypatch):
+    """A within-batch collapse that raises cancels the store probe running
+    beside it (by its job tag) and surfaces its own error, not the
+    cancellation; no Spark job outlives the call."""
+    import python_hll_spark.operators.dedup as D
+
+    corpus = _near_docs(spark)
+    path = str(tmp_path / "store")
+    D.near_store_write(D.minhash_signatures(corpus, num_hashes=64, n=3),
+                       path, bands=16)
+    store_sigs, store_bands = D.near_store_read(spark, path)
+
+    def failing_components(*a, **k):
+        raise RuntimeError("collapse failed")
+
+    monkeypatch.setattr(D, "connected_components", failing_components)
+    sc = spark.sparkContext
+    cancelled = []
+    cancel = sc.cancelJobsWithTag
+
+    def recording_cancel(tag):
+        cancelled.append(tag)
+        cancel(tag)
+
+    monkeypatch.setattr(sc, "cancelJobsWithTag", recording_cancel)
+
+    caches = []
+    with pytest.raises(RuntimeError, match="collapse failed"):
+        D.incremental_near_dedup(corpus, store_sigs, store_bands,
+                                 threshold=0.8, num_hashes=64, bands=16, n=3,
+                                 cache_out=caches)
+    # the status store is fed by the listener bus: drain it before asking
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert len(cancelled) == 1
+    for c in caches:
+        c.unpersist()
+
+
 def test_streaming_batch_replay_idempotent(spark, tmp_path):
     """process_near_dedup_batch called twice with the same batch_id (a
     foreachBatch crash-replay) leaves the store row-counts unchanged and

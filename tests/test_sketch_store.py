@@ -129,28 +129,27 @@ def test_store_is_spec_generic_cms(spark, tmp_path, docs3):
     byte-identical counts vs a one-shot build (sum merge is exact)."""
     from pyspark.sql import functions as F
 
-    from python_hll_spark.operators.aggregate import sketch_groupby
+    from python_hll_spark.operators.aggregate import (merge_sketches,
+                                                      sketch_partials)
     from python_hll_spark.sketches.cms import CMSConfig
     from python_hll_spark.sketches.specs import CMSSpec
     from python_hll_spark.sources.store import SketchStore
 
-    import numpy as np
-
     spec = CMSSpec(CMSConfig(depth=4, width=2048))
     hashed = docs3.select("source", "day", F.xxhash64("doc_id").alias("h"))
 
-    def extractor(pdf):
-        return pdf["h"].to_numpy(dtype=np.int64)
+    def states_of(df):
+        return merge_sketches(sketch_partials(df, ["source"], "h", spec),
+                              ["source"], spec)
 
     st = SketchStore(spark, str(tmp_path / "cms_store"), spec, ["source"],
                      partition_col="day")
     for day in range(3):
-        states = sketch_groupby(hashed.where(F.col("day") == day),
-                                ["source"], extractor, spec)
+        states = states_of(hashed.where(F.col("day") == day))
         st.write_partition(states, day)
     rolled = {r["source"]: bytes(r["state"]) for r in st.rollup().collect()}
     direct = {r["source"]: bytes(r["state"]) for r in
-              sketch_groupby(hashed, ["source"], extractor, spec).collect()}
+              states_of(hashed).collect()}
     assert rolled == direct
 
 

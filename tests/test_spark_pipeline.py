@@ -8,7 +8,7 @@ import os
 import numpy as np
 import pytest
 
-from python_hll_spark.operators.aggregate import sketch_global, sketch_groupby
+from python_hll_spark.operators.aggregate import merge_sketches, sketch_partials
 from python_hll_spark.operators.ndv import hll_ndv_column, hll_ndv_tokens
 from python_hll_spark.sketches.hll import HLLConfig, HLLSketch
 from python_hll_spark.sketches.specs import HLLSpec
@@ -33,8 +33,8 @@ def test_distributed_vector_replay_matches_single_process(spark):
 
     spec = HLLSpec(cfg)
     df = spark.createDataFrame([(v,) for v in values], "raw bigint").repartition(8)
-    out = sketch_global(df, lambda pdf: pdf["raw"].to_numpy(dtype=np.int64), spec,
-                        n_salts=4).collect()
+    out = merge_sketches(sketch_partials(df, [], "raw", spec, n_salts=4),
+                         [], spec).collect()
     assert len(out) == 1
     assert bytes(out[0]["state"]) == seq.to_bytes()
     assert out[0]["n_values"] == len(values)
@@ -158,17 +158,18 @@ def test_distributed_cms_and_bloom_byte_match(spark):
     hashed = splitmix64(values)
     df = spark.createDataFrame([(int(v),) for v in hashed], "h bigint").repartition(8)
 
-    def extract(pdf):
-        return pdf["h"].to_numpy(dtype=np.int64)
+    def state_of(spec):
+        merged = merge_sketches(sketch_partials(df, [], "h", spec), [], spec)
+        return bytes(merged.collect()[0]["state"])
 
     cms_spec = CMSSpec(CMSConfig(depth=4, width=4096))
-    cms_got = bytes(sketch_global(df, extract, cms_spec).collect()[0]["state"])
+    cms_got = state_of(cms_spec)
     cms_seq = CMSSketch(CMSConfig(depth=4, width=4096))
     cms_seq.update(hashed)
     assert cms_got == cms_seq.to_bytes()
 
     bl_spec = BloomSpec(BloomConfig(log2_bits=16, num_hashes=5))
-    bl_got = bytes(sketch_global(df, extract, bl_spec).collect()[0]["state"])
+    bl_got = state_of(bl_spec)
     bl_seq = BloomSketch(BloomConfig(log2_bits=16, num_hashes=5))
     bl_seq.update(hashed)
     assert bl_got == bl_seq.to_bytes()
@@ -178,7 +179,6 @@ def test_skewed_group_partials_spread_across_salts(spark):
     """Explicit skew handling: a group holding ~99% of the data must arrive
     at level-1 reducers under multiple salts (bounded fan-in), not one."""
     from pyspark.sql import functions as F
-    from python_hll_spark.operators.aggregate import sketch_partials
 
     n = 40_000
     df = (spark.range(n)
@@ -187,9 +187,7 @@ def test_skewed_group_partials_spread_across_salts(spark):
                   F.xxhash64("id").alias("h"))
           .repartition(16))
     spec = HLLSpec(HLLConfig.create(11, 5))
-    partials = sketch_partials(df, ["source"],
-                               lambda pdf: pdf["h"].to_numpy(dtype=np.int64),
-                               spec, n_salts=8)
+    partials = sketch_partials(df, ["source"], "h", spec, n_salts=8)
     per_salt = (partials.where("source = 'hot'")
                 .groupBy("salt").count().collect())
     assert len(per_salt) >= 4  # hot group spread across salts

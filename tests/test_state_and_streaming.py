@@ -1,14 +1,13 @@
 """Checkpoint/resume and Structured Streaming tests: a killed build resumed
-from its manifest must produce byte-identical final sketches to a clean run."""
+from its manifest must produce byte-identical final sketches to a clean run,
+and both equal the batch operator's (``hll_ndv_tokens``) states."""
 
 import os
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from python_hll_spark.operators.aggregate import sketch_groupby
-from python_hll_spark.operators.ndv import _tokens_extractor
+from python_hll_spark.operators.ndv import hll_ndv_tokens
 from python_hll_spark.sketches.hll import HLLConfig
 from python_hll_spark.sketches.specs import HLLSpec
 from python_hll_spark.sources.seqs import seqs_table
@@ -24,27 +23,38 @@ def seqs_files(spark, tmp_path_factory):
     return files
 
 
-def test_checkpoint_resume_byte_identical(spark, seqs_files, tmp_path):
+@pytest.fixture(scope="module")
+def batch_states(spark, seqs_files):
+    """Per-source HLL states of the one-shot batch operator."""
+    df = spark.read.parquet(*seqs_files)
+    return {r["source"]: bytes(r["state"]) for r in
+            hll_ndv_tokens(df, by=["source"],
+                           cfg=HLLConfig.create(11, 5)).collect()}
+
+
+def test_checkpoint_resume_byte_identical(spark, seqs_files, batch_states,
+                                          tmp_path):
     spec = HLLSpec(HLLConfig.create(11, 5))
 
     # clean run
     cp_clean = SketchCheckpoint(str(tmp_path / "clean"))
-    cp_clean.run(spark, seqs_files, ["source"], _tokens_extractor, spec, n_chunks=4)
+    cp_clean.run(spark, seqs_files, ["source"], "tokens", spec, n_chunks=4)
     clean = {r["source"]: bytes(r["state"])
              for r in cp_clean.finalize(spark, ["source"], spec).collect()}
 
     # crashed run: dies after chunk 1, resumed
     cp = SketchCheckpoint(str(tmp_path / "crashy"))
     with pytest.raises(RuntimeError, match="simulated failure"):
-        cp.run(spark, seqs_files, ["source"], _tokens_extractor, spec,
+        cp.run(spark, seqs_files, ["source"], "tokens", spec,
                n_chunks=4, fail_after_chunk=1)
     assert len(cp.committed_chunks()) == 2
-    cp.run(spark, seqs_files, ["source"], _tokens_extractor, spec, n_chunks=4)
+    cp.run(spark, seqs_files, ["source"], "tokens", spec, n_chunks=4)
     assert len(cp.committed_chunks()) == 4
     resumed = {r["source"]: bytes(r["state"])
                for r in cp.finalize(spark, ["source"], spec).collect()}
 
     assert resumed == clean
+    assert clean == batch_states  # checkpointed build == the operator's
 
     # lineage metrics recorded per chunk
     metrics = cp.chunk_metrics()
@@ -53,26 +63,24 @@ def test_checkpoint_resume_byte_identical(spark, seqs_files, tmp_path):
     assert sum(m["n_rows"] for m in metrics) == 300
 
 
-def test_streaming_sketch_build_matches_batch(spark, seqs_files, tmp_path):
+def test_streaming_sketch_build_matches_batch(spark, seqs_files, batch_states,
+                                              tmp_path):
     from python_hll_spark.streaming.stream import StreamingSketchBuild
 
     spec = HLLSpec(HLLConfig.create(11, 5))
     batch_df = spark.read.parquet(*seqs_files)
-    batch = {r["source"]: bytes(r["state"])
-             for r in sketch_groupby(batch_df, ["source"], _tokens_extractor,
-                                     spec).collect()}
 
     stream_df = (spark.readStream.schema(batch_df.schema)
                  .option("maxFilesPerTrigger", 2)
                  .parquet(os.path.dirname(seqs_files[0])))
-    build = StreamingSketchBuild(["source"], _tokens_extractor, spec,
+    build = StreamingSketchBuild(["source"], "tokens", spec,
                                  state_dir=str(tmp_path / "state"))
     q = build.attach(stream_df, checkpoint_dir=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     got = {r["source"]: bytes(r["state"])
            for r in build.current_state(spark).collect()}
-    assert got == batch
+    assert got == batch_states
 
 
 def test_tables_reader_parquet_fallback(spark, seqs_files):
@@ -86,23 +94,25 @@ def test_tables_reader_parquet_fallback(spark, seqs_files):
 
 
 def test_checkpoint_retry_after_manifest_crash_no_double_count(
-        spark, seqs_files, tmp_path):
+        spark, seqs_files, batch_states, tmp_path):
     """Crash AFTER the parquet job commits but BEFORE the manifest rename:
     the retry must overwrite the chunk's directory, not append a second
     copy (which would double CMS/KLL counts and n_rows lineage)."""
     spec = HLLSpec(HLLConfig.create(11, 5))
     cp = SketchCheckpoint(str(tmp_path / "mcrash"))
-    cp.run(spark, seqs_files, ["source"], _tokens_extractor, spec, n_chunks=4)
+    cp.run(spark, seqs_files, ["source"], "tokens", spec, n_chunks=4)
     # simulate the crash window: chunk 2's parquet exists, manifest doesn't
     os.remove(os.path.join(cp.manifest_dir, "chunk_2.json"))
     assert len(cp.committed_chunks()) == 3
-    cp.run(spark, seqs_files, ["source"], _tokens_extractor, spec, n_chunks=4)
+    cp.run(spark, seqs_files, ["source"], "tokens", spec, n_chunks=4)
     assert len(cp.committed_chunks()) == 4
     # lineage must count chunk 2's rows exactly once
     metrics = cp.chunk_metrics()
     assert sum(m["n_rows"] for m in metrics) == 300
-    final = cp.finalize(spark, ["source"], spec)
-    assert final.agg(F.sum("n_rows")).collect()[0][0] == 300
+    final = cp.finalize(spark, ["source"], spec).collect()
+    assert sum(r["n_rows"] for r in final) == 300
+    # and the resumed states are a clean build's, byte for byte
+    assert {r["source"]: bytes(r["state"]) for r in final} == batch_states
 
 
 def test_near_dedup_stream_across_microbatches(spark, tmp_path):

@@ -124,12 +124,11 @@ def test_streaming_sketch_build_cms_matches_batch(spark, tmp_path):
     """The foreachBatch incremental design is spec-generic: a CMS state
     built across micro-batches is byte-identical to a one-shot batch build
     (elementwise-sum merge is order-independent)."""
-    from python_hll_spark.operators.aggregate import sketch_groupby
+    from python_hll_spark.operators.aggregate import (merge_sketches,
+                                                      sketch_partials)
     from python_hll_spark.sketches.cms import CMSConfig
     from python_hll_spark.sketches.specs import CMSSpec
     from python_hll_spark.streaming.stream import StreamingSketchBuild
-
-    import numpy as np
 
     spec = CMSSpec(CMSConfig(depth=4, width=4096))
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
@@ -137,10 +136,7 @@ def test_streaming_sketch_build_cms_matches_batch(spark, tmp_path):
     src = str(tmp_path / "cms_stream")
     events.write.parquet(src)
 
-    def extractor(pdf):
-        return pdf["h"].to_numpy(dtype=np.int64)
-
-    build = StreamingSketchBuild(["event_type"], extractor, spec,
+    build = StreamingSketchBuild(["event_type"], "h", spec,
                                  str(tmp_path / "cms_state"))
     stream = (spark.readStream.schema(events.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
@@ -150,8 +146,9 @@ def test_streaming_sketch_build_cms_matches_batch(spark, tmp_path):
     streamed = {r["event_type"]: bytes(r["state"])
                 for r in build.current_state(spark).collect()}
     batch = {r["event_type"]: bytes(r["state"])
-             for r in sketch_groupby(events, ["event_type"],
-                                     extractor, spec).collect()}
+             for r in merge_sketches(
+                 sketch_partials(events, ["event_type"], "h", spec),
+                 ["event_type"], spec).collect()}
     assert set(streamed) == set(batch)
     for g in batch:
         assert streamed[g] == batch[g], f"CMS state mismatch for {g}"
