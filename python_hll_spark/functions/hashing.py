@@ -83,8 +83,3 @@ def xxhash64_int(values: np.ndarray, seed) -> np.ndarray:
         h ^= (iv & _U64(0xFFFFFFFF)) * _XXH_P1  # (input & 0xFFFFFFFFL)
         h = ((h << _U64(23)) | (h >> _U64(41))) * _XXH_P2 + _XXH_P3
     return _xxh64_fmix(h).view(np.int64)
-
-
-def hash_tokens(tokens: np.ndarray, seed: int = 0) -> np.ndarray:
-    """Hash int32 token ids to well-mixed signed int64 (HLL/CMS/Bloom input)."""
-    return splitmix64(tokens.astype(np.int64, copy=False), seed=seed)

@@ -33,6 +33,29 @@ def hll_ndv_tokens(df: DataFrame, by: list[str] | None = None,
     return states.withColumn("ndv", hll_cardinality(F.col("state")))
 
 
+def hll_column_partials(df: DataFrame, value_col: str, by: list[str],
+                        spec: HLLSpec, n_salts: int = 16,
+                        hasher: str = "xxhash64") -> DataFrame:
+    """Stage 1 of ``hll_ndv_column`` and of its stream: hash
+    ``value_col`` into per-task ``scalar_partials_arrow`` rows."""
+    from python_hll_spark.operators.aggregate import scalar_partials_arrow
+
+    if hasher == "murmur3":
+        # Arrow-buffer-native hashing (mapInArrow): the flat utf-8 buffer
+        # feeds the vectorized murmur3 kernel directly — no pandas object
+        # Series, no per-row astype(str)
+        from python_hll_spark.functions.murmur3 import murmur3_hash_frame
+        strd = df.select(*by, F.col(value_col).cast("string").alias("__v"))
+        hashed = murmur3_hash_frame(strd, by, "__v")
+    elif hasher == "xxhash64":
+        hash_expr = F.when(F.col(value_col).isNotNull(),
+                           F.xxhash64(F.col(value_col)))
+        hashed = df.select(*by, hash_expr.alias("__h"))
+    else:
+        raise ValueError(f"unknown hasher {hasher!r}; use 'xxhash64' or 'murmur3'")
+    return scalar_partials_arrow(hashed, by, "__h", spec, n_salts=n_salts)
+
+
 def hll_ndv_column(df: DataFrame, value_col: str, by: list[str] | None = None,
                    cfg: HLLConfig | None = None, n_salts: int = 16,
                    hasher: str = "xxhash64") -> DataFrame:
@@ -57,25 +80,11 @@ def hll_ndv_column(df: DataFrame, value_col: str, by: list[str] | None = None,
 
     Returns (by..., ndv bigint, state binary)."""
     from python_hll_spark.functions.sketch_funcs import hll_cardinality
-    from python_hll_spark.operators.aggregate import (
-        merge_sketches, scalar_partials_arrow)
+    from python_hll_spark.operators.aggregate import merge_sketches
 
     spec = HLLSpec(cfg or HLLConfig.create(11, 5))
     by = by or []
-    if hasher == "murmur3":
-        # Arrow-buffer-native hashing (mapInArrow): the flat utf-8 buffer
-        # feeds the vectorized murmur3 kernel directly — no pandas object
-        # Series, no per-row astype(str)
-        from python_hll_spark.functions.murmur3 import murmur3_hash_frame
-        strd = df.select(*by, F.col(value_col).cast("string").alias("__v"))
-        hashed = murmur3_hash_frame(strd, by, "__v")
-    elif hasher == "xxhash64":
-        hash_expr = F.when(F.col(value_col).isNotNull(),
-                           F.xxhash64(F.col(value_col)))
-        hashed = df.select(*by, hash_expr.alias("__h"))
-    else:
-        raise ValueError(f"unknown hasher {hasher!r}; use 'xxhash64' or 'murmur3'")
-    partials = scalar_partials_arrow(hashed, by, "__h", spec, n_salts=n_salts)
+    partials = hll_column_partials(df, value_col, by, spec, n_salts, hasher)
     states = merge_sketches(partials, by, spec)
     return states.withColumn("ndv", hll_cardinality(F.col("state")))
 

@@ -13,13 +13,27 @@ from python_hll_spark.sketches.specs import KLLSpec, TDigestSpec
 from python_hll_spark.sketches.tdigest import TDigestConfig
 
 
+def quantiles_of(spec, state: bytes, qs) -> list[float]:
+    """The finalizer of ``sketch_quantiles`` and of its stream."""
+    qarr = np.asarray(qs, dtype=np.float64)
+    return [float(x) for x in spec.deserialize(bytes(state)).quantile(qarr)]
+
+
 def _quantile_udf(spec, qs: list[float]):
     @F.pandas_udf(ArrayType(DoubleType()))
     def finalize(states: pd.Series) -> pd.Series:
-        qarr = np.asarray(qs, dtype=np.float64)
-        return states.map(
-            lambda b: [float(x) for x in spec.deserialize(bytes(b)).quantile(qarr)])
+        return states.map(lambda b: quantiles_of(spec, b, qs))
     return finalize
+
+
+def quantile_partials(df: DataFrame, value_col: str, by: list[str],
+                      spec) -> DataFrame:
+    """Stage 1 of ``sketch_quantiles`` and of its stream: ``value_col``
+    as double into per-task ``scalar_partials_arrow`` rows."""
+    from python_hll_spark.operators.aggregate import scalar_partials_arrow
+
+    pruned = df.select(*by, F.col(value_col).cast("double").alias("__v"))
+    return scalar_partials_arrow(pruned, by, "__v", spec)
 
 
 def sketch_quantiles(df: DataFrame, value_col: str, qs: list[float],
@@ -32,13 +46,10 @@ def sketch_quantiles(df: DataFrame, value_col: str, qs: list[float],
         spec = TDigestSpec(TDigestConfig(compression=compression))
     else:
         raise ValueError(f"unknown quantile method {method!r}")
-    from python_hll_spark.operators.aggregate import (
-        merge_sketches, scalar_partials_arrow)
+    from python_hll_spark.operators.aggregate import merge_sketches
 
     by = by or []
-    pruned = df.select(*by, F.col(value_col).cast("double").alias("__v"))
-    partials = scalar_partials_arrow(pruned, by, "__v", spec)
-    states = merge_sketches(partials, by, spec)
+    states = merge_sketches(quantile_partials(df, value_col, by, spec), by, spec)
     return states.withColumn("quantiles", _quantile_udf(spec, qs)(F.col("state")))
 
 

@@ -26,6 +26,23 @@ def _hash_keys(keys: np.ndarray) -> np.ndarray:
     return splitmix64(keys.astype(np.int64, copy=False))
 
 
+def space_saving_admit(summary: dict, floor: int, keys, counts,
+                       cap: int) -> int:
+    """Add ``counts`` of ``keys`` to one group's SpaceSaving summary (key
+    -> running count) and return the group's new floor.  An untracked key
+    enters at floor + count, floor being the largest count ever evicted,
+    so a tracked count bounds the key's true count from above and a
+    late-surging heavy hitter is never starved out by early keys.  Past
+    ``cap`` keys the ``cap`` largest stay, ties broken by ``str(key)``."""
+    for key, c in zip(keys, counts):
+        prev = summary.get(key)
+        summary[key] = floor + c if prev is None else prev + c
+    if len(summary) > cap:
+        items = sorted(summary.items(), key=lambda kv: (-kv[1], str(kv[0])))
+        summary.clear()
+        summary.update(items[:cap])
+        floor = max(floor, items[cap][1])
+    return floor
 
 
 def cms_topk(df: DataFrame, group_cols: list[str], key_col: str, k: int = 10,
@@ -48,17 +65,9 @@ def cms_topk(df: DataFrame, group_cols: list[str], key_col: str, k: int = 10,
     cfg = cfg or CMSConfig(depth=5, width=65536)
     spec = CMSSpec(cfg)
     cand_c = max(candidates_per_task, 4 * k)
-    # SpaceSaving bounded summary: the per-(task, group) candidate structure
-    # never holds more than `cap` keys no matter how many distinct keys
-    # stream through the task — the 100 TB memory guarantee.  True
-    # SpaceSaving admission semantics: a key not currently tracked enters at
-    # floor + count, where floor is the largest running count ever evicted
-    # for that group.  That makes the tracked count an UPPER bound on the
-    # key's true local frequency (error <= floor), so a heavy hitter that
-    # surges late can never be starved out by early-accumulating keys —
-    # plain restart-at-zero truncation does not provide that guarantee.
-    # Final reported counts come from the CMS, so the admission inflation
-    # never reaches the output.
+    # per-(task, group) SpaceSaving summary of at most `cap` keys however
+    # many distinct keys stream through — the 100 TB memory guarantee;
+    # reported counts come from the CMS, so admission inflation never shows
     cap = 4 * cand_c
 
     if shared_cms:
@@ -95,34 +104,19 @@ def cms_topk(df: DataFrame, group_cols: list[str], key_col: str, k: int = 10,
                 gtypes = [batch.schema.field(c).type for c in group_cols]
                 ktype = batch.schema.field("__key").type
             gcodes, gkeys = dict_encode_groups(batch, group_cols)
-            kcol = batch.column("__key")
-            if isinstance(kcol, pa.ChunkedArray):
-                kcol = kcol.combine_chunks()
-            kenc = kcol.dictionary_encode()
-            kidx = kenc.indices
-            kdict = kenc.dictionary.to_pylist()
-            if kidx.null_count:
-                kcodes = (kidx.fill_null(len(kdict))
-                          .to_numpy(zero_copy_only=False).astype(np.int64))
-                kdict = kdict + [None]
-            else:
-                kcodes = kidx.to_numpy(zero_copy_only=False).astype(np.int64)
-            comp = gcodes * np.int64(len(kdict)) + kcodes
-            uniq, cnts = np.unique(comp, return_counts=True)
-            card = len(kdict)
-            for code, c in zip(uniq.tolist(), cnts.tolist()):
-                gkey = gkeys[code // card]
-                key = kdict[code % card]
-                d = per_group.setdefault(gkey, {})
-                prev = d.get(key)
-                # SpaceSaving admission: unseen keys inherit the group's
-                # eviction floor so late-surging heavy hitters catch up
-                d[key] = (floors.get(gkey, 0) + c) if prev is None else prev + c
-            for gkey, d in per_group.items():
-                if len(d) > cap:
-                    items = sorted(d.items(), key=lambda kv: (-kv[1], str(kv[0])))
-                    per_group[gkey] = dict(items[:cap])
-                    floors[gkey] = max(floors.get(gkey, 0), items[cap][1])
+            kcodes, kkeys = dict_encode_groups(batch, ["__key"])
+            card = len(kkeys)
+            uniq, cnts = np.unique(gcodes * np.int64(card) + kcodes,
+                                   return_counts=True)
+            # uniq is sorted, so each group's keys are one contiguous run
+            gidx = uniq // card
+            starts = np.flatnonzero(np.diff(gidx, prepend=-1))
+            for a, b in zip(starts.tolist(), [*starts[1:].tolist(), len(uniq)]):
+                gkey = gkeys[int(gidx[a])]
+                floors[gkey] = space_saving_admit(
+                    per_group.setdefault(gkey, {}), floors.get(gkey, 0),
+                    [kkeys[c][0] for c in (uniq[a:b] % card).tolist()],
+                    cnts[a:b].tolist(), cap)
         g_out, k_out, c_out = [], [], []
         for gkey, d in per_group.items():
             items = sorted(d.items(), key=lambda kv: (-kv[1], str(kv[0])))

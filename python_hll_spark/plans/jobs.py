@@ -88,7 +88,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 from python_hll_spark.plans.session import get_spark
 
@@ -115,7 +114,6 @@ def _build_ndv(args) -> None:
         from python_hll_spark.functions.sketch_funcs import hll_cardinality
         from pyspark.sql import functions as F
         out = out.withColumn("ndv", hll_cardinality(F.col("state")))
-        print(json.dumps({"chunks": cp.chunk_metrics()}), file=sys.stderr)
     else:
         df = spark.read.parquet(args.input)
         out = hll_ndv_tokens(df, by=group_cols, cfg=cfg, n_salts=args.n_salts)

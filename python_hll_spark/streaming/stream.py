@@ -1,11 +1,14 @@
-"""Structured Streaming sketch builds.
+"""Structured Streaming sketch builds, each a composition of the batch
+operators — mergeability of the sketches does the work:
 
-``foreachBatch`` incremental design: every micro-batch runs the same
-partial-build + tree-merge used for batch jobs, then unions the batch's
-per-group states with the persisted state table and rewrites it (the state
-table has one tiny row per group, so the rewrite is O(groups), not O(data)).
-Mergeability of the sketches is exactly what makes the streaming operator a
-three-line composition of the batch operator — the monoid does the work.
+- ``StreamingSketchBuild`` (``foreachBatch``) merges every micro-batch's
+  batch build into the newest committed state version (one tiny row per
+  group, so each write is O(groups), not O(data)).
+- ``stateful_hll_stream`` / ``stateful_quantiles_stream``
+  (``applyInPandasWithState``) run the batch operator's stage 1 on the
+  stream and fold each group's partial rows (one per task, not one per
+  input row) into its state with ``merge_states``; ``stateful_topk_stream``
+  counts and admits keys as ``cms_topk`` does.
 
 For watermarked time-windowed NDV, ``windowed_ndv_stream`` shows the
 DataFrame-native shape (window column in the group key).
@@ -13,17 +16,36 @@ DataFrame-native shape (window column in the group key).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from python_hll_spark.operators.aggregate import merge_sketches, sketch_partials
+from python_hll_spark.operators.aggregate import (SplitmixSpec, merge_sketches,
+                                                  merge_states, sketch_partials)
+from python_hll_spark.operators.ndv import hll_column_partials
+from python_hll_spark.operators.quantiles import (quantile_partials,
+                                                  quantiles_of)
+from python_hll_spark.operators.topk import _hash_keys, space_saving_admit
+from python_hll_spark.sketches.cms import CMSConfig
+from python_hll_spark.sketches.hll import HLLConfig
+from python_hll_spark.sketches.kll import KLLConfig
+from python_hll_spark.sketches.specs import CMSSpec, HLLSpec, KLLSpec
 
 
 class StreamingSketchBuild:
     """Incremental per-group sketch state of ``value_col`` maintained
-    across micro-batches (each batch built by ``sketch_partials``)."""
+    across micro-batches (each batch built by ``sketch_partials``).
+
+    Batch ``b`` merges into the newest committed version with a smaller id
+    and writes the result to ``state_dir/batch=<b>`` (committed by Spark's
+    ``_SUCCESS`` marker), so a replayed batch rewrites its own version
+    instead of merging twice.  Versions older than that base are deleted."""
 
     def __init__(self, group_cols: list[str], value_col: str, spec,
                  state_dir: str):
@@ -32,24 +54,28 @@ class StreamingSketchBuild:
         self.spec = spec
         self.state_dir = state_dir
 
+    def _path(self, batch_id: int) -> str:
+        return os.path.join(self.state_dir, f"batch={batch_id}")
+
+    def _committed(self) -> list[int]:
+        marks = glob.glob(os.path.join(glob.escape(self.state_dir),
+                                       "batch=*", "_SUCCESS"))
+        return sorted(int(os.path.dirname(m).rsplit("=", 1)[1]) for m in marks)
+
     def _merge_into_state(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_states = merge_sketches(
+        merged = merge_sketches(
             sketch_partials(batch_df, self.group_cols, self.value_col,
                             self.spec), self.group_cols, self.spec)
-        current = os.path.join(self.state_dir, "current")
-        if os.path.exists(current):
-            prev = spark.read.parquet(current)
-            partials = prev.select(*self.group_cols, "state", "n_rows", "n_values") \
-                .unionByName(batch_states.select(*self.group_cols, "state",
-                                                 "n_rows", "n_values"))
-            merged = merge_sketches(partials, self.group_cols, self.spec,
-                                    two_level=False)
-        else:
-            merged = batch_states
-        staged = os.path.join(self.state_dir, f"_stage_{batch_id}")
-        merged.write.mode("overwrite").parquet(staged)
-        spark.read.parquet(staged).write.mode("overwrite").parquet(current)
+        older = [b for b in self._committed() if b < batch_id]
+        if older:
+            cols = [*self.group_cols, "state", "n_rows", "n_values"]
+            prev = batch_df.sparkSession.read.parquet(self._path(older[-1]))
+            merged = merge_sketches(
+                prev.select(*cols).unionByName(merged.select(*cols)),
+                self.group_cols, self.spec, two_level=False)
+        merged.write.mode("overwrite").parquet(self._path(batch_id))
+        for b in older[:-1]:
+            shutil.rmtree(self._path(b), ignore_errors=True)
 
     def attach(self, stream_df: DataFrame, checkpoint_dir: str,
                trigger_available_now: bool = True):
@@ -62,7 +88,35 @@ class StreamingSketchBuild:
         return writer.start()
 
     def current_state(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.state_dir, "current"))
+        """The newest committed state version."""
+        return spark.read.parquet(self._path(self._committed()[-1]))
+
+
+def _fold_stream(partials: DataFrame, spec, name: str, dtype: str,
+                 finalize) -> DataFrame:
+    """Fold stage-1 partial rows into one state per group ``g`` in Spark's
+    streaming state store with ``merge_states``; every update emits the
+    group's (g, <name> = finalize(state), n_rows, state)."""
+
+    def update(key, pdfs, state: GroupState):
+        blobs, n_rows = ([bytes(state.get[0])], state.get[1]) \
+            if state.exists else ([], 0)
+        for pdf in pdfs:
+            blobs.extend(pdf["state"])
+            n_rows += int(pdf["n_rows"].sum())
+        blob = merge_states(spec, blobs)
+        state.update((blob, n_rows))
+        yield pd.DataFrame({"g": [key[0]], name: [finalize(blob)],
+                            "n_rows": [n_rows], "state": [blob]})
+
+    return (partials.select("g", "state", "n_rows").groupBy("g")
+            .applyInPandasWithState(
+                update,
+                outputStructType=f"g string, {name} {dtype}, n_rows bigint, "
+                                 "state binary",
+                stateStructType="state binary, n_rows bigint",
+                outputMode="update",
+                timeoutConf=GroupStateTimeout.NoTimeout))
 
 
 def stateful_hll_stream(stream_df: DataFrame, group_col: str, key_col: str,
@@ -70,42 +124,17 @@ def stateful_hll_stream(stream_df: DataFrame, group_col: str, key_col: str,
     """Custom stateful streaming NDV via ``applyInPandasWithState``.
 
     Keeps one serialized HLL per group in Spark's streaming state store and
-    emits (group, ndv, n_rows) on every update — the arbitrary-stateful
-    counterpart to the foreachBatch design (exactly-once state handled by
-    Spark's checkpointing instead of our table rewrite).  Keys are hashed
-    JVM-side (xxhash64) before entering the state function.
+    emits (g, ndv, n_rows, state) on every update — the arbitrary-stateful
+    counterpart to the foreachBatch design.  Keys go through
+    ``hll_ndv_column``'s stage 1, so NULL keys count in ``n_rows`` but not
+    in ``ndv`` (an all-NULL group reports 0), and the final ``state``
+    equals ``hll_ndv_column``'s bytes.  Checkpoints of the earlier build,
+    which counted NULL as a key, must not be resumed.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    hashed = stream_df.select(F.col(group_col).alias("g"),
-                              F.xxhash64(F.col(key_col)).alias("h"))
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        from python_hll_spark.sketches.hll import HLLConfig, HLLSketch
-
-        if state.exists:
-            blob, n_rows = state.get
-            sk = HLLSketch.from_bytes(bytes(blob))
-        else:
-            sk, n_rows = HLLSketch(HLLConfig.create(log2m, regwidth)), 0
-        for pdf in pdfs:
-            sk.add_hashed(pdf["h"].to_numpy(dtype=np.int64))
-            n_rows += len(pdf)
-        state.update((sk.to_bytes(), n_rows))
-        yield pd.DataFrame({"g": [key[0]], "ndv": [sk.cardinality()],
-                            "n_rows": [n_rows]})
-
-    return (hashed.groupBy("g")
-            .applyInPandasWithState(
-                update,
-                outputStructType="g string, ndv bigint, n_rows bigint",
-                stateStructType="state binary, n_rows bigint",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    spec = HLLSpec(HLLConfig.create(log2m, regwidth))
+    keyed = stream_df.select(F.col(group_col).alias("g"), key_col)
+    return _fold_stream(hll_column_partials(keyed, key_col, ["g"], spec),
+                        spec, "ndv", "bigint", spec.estimate)
 
 
 def stateful_topk_stream(stream_df: DataFrame, group_col: str, key_col: str,
@@ -114,71 +143,54 @@ def stateful_topk_stream(stream_df: DataFrame, group_col: str, key_col: str,
     """Streaming heavy hitters per group via ``applyInPandasWithState``.
 
     State per group = one CMS (for count estimates with the published
-    eps*N overcount bound) + a bounded SpaceSaving candidate summary with
-    true admission semantics (same as the batch ``cms_topk``): unseen keys
-    enter at the group's eviction floor (the largest count ever evicted),
-    so a heavy hitter that surges late in the stream catches up instead of
-    being starved by early accumulators.  Candidate memory is bounded at
-    ``capacity`` keys (default 16k) regardless of how many distinct keys
-    stream through — the long-running-stream guarantee.
+    eps*N overcount bound) + a bounded SpaceSaving candidate summary, both
+    kept as ``cms_topk`` keeps them: the CMS is ``SplitmixSpec(CMSSpec)``
+    probed through ``topk._hash_keys``, so its estimates equal
+    ``cms_topk``'s on the same rows, and keys are admitted by
+    ``space_saving_admit``.  Candidate memory is bounded at ``capacity``
+    keys (default 16k) regardless of how many distinct keys stream
+    through — the long-running-stream guarantee.
 
     Keys are hashed JVM-side (xxhash64) before the state function; their
     hashes ride along in the state so estimates never re-hash in Python.
     Emits the current (group, key, est_count, n_rows) top-k per update,
     ranked by CMS estimate with deterministic key tie-break.
 
-    State-schema v2 (adds the ``floor bigint`` slot for SpaceSaving
-    admission): checkpoints written by the pre-floor build are NOT
-    compatible — Spark's state-store schema check rejects them, and the
-    5-tuple ``state.get`` unpacking would break even if it loaded.
-    Restart such a query from a fresh checkpoint location.
+    State-schema v3: the stored CMS counts splitmix-finalized hashes (v2
+    counted raw xxhash64 values; v1 lacked the ``floor`` slot).  The
+    schema is unchanged, so Spark's state-store check does NOT reject a
+    v2 checkpoint: restart such a query from a fresh checkpoint location.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from python_hll_spark.sketches.cms import CMSConfig, CMSSketch
-
     cap = capacity or 16 * k
-    cfg = CMSConfig(depth=depth, width=width)
+    spec = SplitmixSpec(CMSSpec(CMSConfig(depth=depth, width=width)))
 
     hashed = stream_df.select(F.col(group_col).alias("g"),
                               F.col(key_col).cast("string").alias("key"),
                               F.xxhash64(F.col(key_col)).alias("h"))
 
     def update(gkey, pdfs, state: GroupState):
-        import numpy as np
-
         if state.exists:
             blob, keys, counts, hashes, n_rows, floor = state.get
-            cms = CMSSketch.from_bytes(bytes(blob))
-            summary = {kk: [c, h] for kk, c, h in zip(keys, counts, hashes)}
+            cms = spec.deserialize(bytes(blob))
+            summary = dict(zip(keys, counts))
+            key_hash = dict(zip(keys, hashes))
         else:
-            cms, summary, n_rows, floor = CMSSketch(cfg), {}, 0, 0
+            cms, summary, key_hash, n_rows, floor = spec.new(), {}, {}, 0, 0
         for pdf in pdfs:
             n_rows += len(pdf)
+            spec.update(cms, pdf["h"].to_numpy(dtype=np.int64))
             grouped = pdf.groupby("key", sort=False, dropna=False).agg(
                 cnt=("h", "size"), h=("h", "first"))
-            cms.update(grouped["h"].to_numpy(dtype=np.int64),
-                       weights=grouped["cnt"].to_numpy(dtype=np.int64))
-            for kk, cnt, h in zip(grouped.index, grouped["cnt"], grouped["h"]):
-                kk = None if pd.isna(kk) else kk
-                ent = summary.get(kk)
-                if ent is None:
-                    # SpaceSaving admission: unseen keys inherit the
-                    # eviction floor so late heavy hitters catch up
-                    summary[kk] = [floor + int(cnt), int(h)]
-                else:
-                    ent[0] += int(cnt)
-            if len(summary) > cap:
-                items = sorted(summary.items(), key=lambda kv: -kv[1][0])
-                summary = dict(items[:cap])
-                floor = max(floor, items[cap][1][0])
+            batch_keys = [None if pd.isna(kk) else kk for kk in grouped.index]
+            key_hash.update(zip(batch_keys, grouped["h"].tolist()))
+            floor = space_saving_admit(summary, floor, batch_keys,
+                                       grouped["cnt"].tolist(), cap)
         keys = list(summary)
-        counts = [summary[kk][0] for kk in keys]
-        hashes = [summary[kk][1] for kk in keys]
-        state.update((cms.to_bytes(), keys, counts, hashes, n_rows, floor))
+        hashes = [key_hash[kk] for kk in keys]
+        state.update((spec.serialize(cms), keys, list(summary.values()),
+                      hashes, n_rows, floor))
 
-        est = cms.estimate(np.asarray(hashes, dtype=np.int64))
+        est = cms.estimate(_hash_keys(np.asarray(hashes, dtype=np.int64)))
         order = sorted(range(len(keys)),
                        key=lambda i: (-int(est[i]), str(keys[i])))[:k]
         yield pd.DataFrame({
@@ -206,45 +218,18 @@ def stateful_quantiles_stream(stream_df: DataFrame, group_col: str,
                               k: int = 200) -> DataFrame:
     """Streaming quantile profiles per group: one KLL sketch per group in
     Spark's streaming state store (``applyInPandasWithState``), emitting
-    the current quantile estimates on every update.  Completes the
-    streaming trio (NDV: ``stateful_hll_stream``, heavy hitters:
-    ``stateful_topk_stream``) — all three ride the same mergeable-state
-    design, so a restart resumes from the checkpointed sketch bytes."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from python_hll_spark.sketches.kll import KLLConfig, KLLSketch
-
-    qlist = [float(q) for q in qs]
-    typed = stream_df.select(F.col(group_col).alias("g"),
-                             F.col(value_col).cast("double").alias("v"))
-
-    def update(gkey, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.exists:
-            blob, n_rows = state.get
-            sk = KLLSketch.from_bytes(bytes(blob))
-        else:
-            sk, n_rows = KLLSketch(KLLConfig(k=k)), 0
-        for pdf in pdfs:
-            vals = pdf["v"].to_numpy(dtype=np.float64)
-            sk.update(vals[~np.isnan(vals)])
-            n_rows += len(pdf)
-        state.update((sk.to_bytes(), n_rows))
-        est = sk.quantile(np.asarray(qlist))
-        yield pd.DataFrame({"g": [gkey[0]],
-                            "quantiles": [[float(x) for x in est]],
-                            "n_rows": [n_rows]})
-
-    return (typed.groupBy("g")
-            .applyInPandasWithState(
-                update,
-                outputStructType="g string, quantiles array<double>, "
-                                 "n_rows bigint",
-                stateStructType="state binary, n_rows bigint",
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))
+    (g, quantiles, n_rows, state) on every update.  Values go through
+    ``sketch_quantiles``'s stage 1 and finalizer, so NULL values count in
+    ``n_rows`` but not in the sketch, and an all-NULL group is still
+    emitted (with NULL quantiles).  Completes the streaming trio (NDV:
+    ``stateful_hll_stream``, heavy hitters: ``stateful_topk_stream``) —
+    all three ride the same mergeable-state design, so a restart resumes
+    from the checkpointed sketch bytes."""
+    spec = KLLSpec(KLLConfig(k=k))
+    keyed = stream_df.select(F.col(group_col).alias("g"), value_col)
+    return _fold_stream(quantile_partials(keyed, value_col, ["g"], spec),
+                        spec, "quantiles", "array<double>",
+                        lambda blob: quantiles_of(spec, blob, qs))
 
 
 def dedup_stream(stream_df: DataFrame, text_col: str = "text",

@@ -49,9 +49,12 @@ def test_spark_submit_build_ndv(tmp_path, spark):
             capture_output=True, text=True, timeout=300, env=env,
             cwd=str(tmp_path))
         assert res.returncode == 0, res.stderr[-2000:]
-        # spark-submit hands the driver's stderr to stdout as well
-        return [json.loads(l) for l in res.stdout.strip().splitlines()
+        rows = [json.loads(l) for l in res.stdout.strip().splitlines()
                 if l.startswith("{")]
+        # every JSON line of stdout (spark-submit hands the driver's stderr
+        # to stdout as well) is a result row
+        assert all({"source", "ndv"} <= set(r) for r in rows), rows
+        return rows
 
     lines = build_ndv("ndv_out")
     assert len(lines) == 5  # one per source
@@ -59,11 +62,12 @@ def test_spark_submit_build_ndv(tmp_path, spark):
         assert row["ndv"] > 0
 
     # the checkpointed build (chunked, manifest-committed) agrees per source
+    from python_hll_spark.sources.state import SketchCheckpoint
     ckpt = build_ndv("ndv_ckpt_out", "--checkpoint", str(tmp_path / "ckpt"),
                      "--n-chunks", "2")
-    (chunks,) = [r["chunks"] for r in ckpt if "chunks" in r]
+    chunks = SketchCheckpoint(str(tmp_path / "ckpt")).chunk_metrics()
     assert len(chunks) == 2 and sum(c["n_rows"] for c in chunks) == 200
-    assert ({r["source"]: r["ndv"] for r in ckpt if "source" in r}
+    assert ({r["source"]: r["ndv"] for r in ckpt}
             == {r["source"]: r["ndv"] for r in lines})
 
 

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from python_hll_spark.functions.hashing import hash_tokens
+from python_hll_spark.functions.hashing import splitmix64
 from python_hll_spark.operators.profile import profile_summary, token_profile
 from python_hll_spark.sketches.hll import HLLConfig, HLLSketch
 from python_hll_spark.sketches.multi import sketch_from_bytes
@@ -25,7 +25,7 @@ def test_profile_hll_matches_standalone(spark, seqs):
     for src, sub in pdf.groupby("source"):
         flat = np.concatenate([np.asarray(t, dtype=np.int64) for t in sub["tokens"]])
         seq_hll = HLLSketch(HLLConfig.create(11, 5))
-        seq_hll.add_hashed(hash_tokens(flat))
+        seq_hll.add_hashed(splitmix64(flat))
         assert rows[(src, "hll_tokens")] == seq_hll.to_bytes(), src
 
     # every sketch kind present per source, deserializable, counts correct
@@ -64,7 +64,7 @@ def test_profile_cms_counts(spark, seqs):
         assert cms.total == len(flat)
         uniq, cnt = np.unique(flat, return_counts=True)
         top = uniq[np.argsort(-cnt)[:5]]
-        est = cms.estimate(hash_tokens(top.astype(np.int64)))
+        est = cms.estimate(splitmix64(top.astype(np.int64)))
         exact = np.sort(cnt)[::-1][:5]
         assert (est >= exact).all()
         assert (est - exact <= cms.cfg.eps * len(flat) + 1).all()

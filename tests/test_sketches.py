@@ -4,7 +4,7 @@ merge associativity under random partitionings, serialization round trips."""
 import numpy as np
 import pytest
 
-from python_hll_spark.functions.hashing import hash_tokens
+from python_hll_spark.functions.hashing import splitmix64
 from python_hll_spark.sketches.bloom import BloomConfig, BloomSketch
 from python_hll_spark.sketches.cms import CMSConfig, CMSSketch
 from python_hll_spark.sketches.kll import KLLConfig, KLLSketch
@@ -24,12 +24,12 @@ def _zipf_tokens(n, vocab=10000, s=1.2, seed=0):
 def test_cms_point_estimates_within_eps_n():
     cfg = CMSConfig(depth=5, width=4096)
     toks = _zipf_tokens(200_000)
-    hashed = hash_tokens(toks)
+    hashed = splitmix64(toks)
     sk = CMSSketch(cfg)
     sk.update(hashed)
 
     uniq, exact = np.unique(toks, return_counts=True)
-    est = sk.estimate(hash_tokens(uniq))
+    est = sk.estimate(splitmix64(uniq))
     assert (est >= exact).all()  # CMS never undercounts
     overshoot = est - exact
     n = len(toks)
@@ -41,7 +41,7 @@ def test_cms_point_estimates_within_eps_n():
 
 def test_cms_merge_equals_sequential():
     cfg = CMSConfig(depth=4, width=512)
-    toks = hash_tokens(_zipf_tokens(50_000, seed=3))
+    toks = splitmix64(_zipf_tokens(50_000, seed=3))
     seq = CMSSketch(cfg)
     seq.update(toks)
     parts = np.array_split(toks, 7)
@@ -59,8 +59,8 @@ def test_cms_merge_equals_sequential():
 # ---------------------------------------------------------------- Bloom
 def test_bloom_no_false_negatives_and_fp_rate():
     cfg = BloomConfig.from_capacity(50_000, fp_rate=0.01)
-    present = hash_tokens(np.arange(50_000, dtype=np.int64))
-    absent = hash_tokens(np.arange(50_000, 150_000, dtype=np.int64))
+    present = splitmix64(np.arange(50_000, dtype=np.int64))
+    absent = splitmix64(np.arange(50_000, 150_000, dtype=np.int64))
     sk = BloomSketch(cfg)
     sk.update(present)
     assert sk.might_contain(present).all()  # zero false negatives
@@ -71,8 +71,8 @@ def test_bloom_no_false_negatives_and_fp_rate():
 def test_bloom_merge_is_or():
     cfg = BloomConfig(log2_bits=16, num_hashes=5)
     a, b = BloomSketch(cfg), BloomSketch(cfg)
-    va = hash_tokens(np.arange(1000, dtype=np.int64))
-    vb = hash_tokens(np.arange(1000, 2000, dtype=np.int64))
+    va = splitmix64(np.arange(1000, dtype=np.int64))
+    vb = splitmix64(np.arange(1000, 2000, dtype=np.int64))
     a.update(va)
     b.update(vb)
     a.merge(b)

@@ -95,12 +95,12 @@ def test_merge_partials_grouped_bytes_match(spark):
     got = {r["source"]: bytes(r["state"])
            for r in hll_ndv_tokens(df, by=["source"], cfg=cfg).collect()}
 
-    from python_hll_spark.functions.hashing import hash_tokens
+    from python_hll_spark.functions.hashing import splitmix64
     pdf = df.toPandas()
     for src, sub in pdf.groupby("source"):
         seq = HLLSketch(cfg)
-        seq.add_hashed(hash_tokens(np.concatenate([np.asarray(t, dtype=np.int64)
-                                                   for t in sub["tokens"]])))
+        seq.add_hashed(splitmix64(np.concatenate([np.asarray(t, dtype=np.int64)
+                                                  for t in sub["tokens"]])))
         assert got[src] == seq.to_bytes(), src
 
 

@@ -83,6 +83,39 @@ def test_streaming_sketch_build_matches_batch(spark, seqs_files, batch_states,
     assert got == batch_states
 
 
+def test_streaming_sketch_build_replay_exactly_once(spark, tmp_path):
+    """A micro-batch replayed after its state write committed (a crash
+    before the stream's own commit) leaves the state as one application
+    would: CMS counts and n_rows are not merged twice, and no staging or
+    superseded state directories are left behind."""
+    from python_hll_spark.operators.aggregate import (merge_sketches,
+                                                      sketch_partials)
+    from python_hll_spark.sketches.cms import CMSConfig
+    from python_hll_spark.sketches.specs import CMSSpec
+    from python_hll_spark.streaming.stream import StreamingSketchBuild
+
+    spec = CMSSpec(CMSConfig(depth=3, width=256))
+    rows = [(f"g{i % 3}", i % 97) for i in range(1500)]
+    b0 = spark.createDataFrame(rows[:1000], "g string, h long")
+    b1 = spark.createDataFrame(rows[1000:], "g string, h long")
+    state_dir = str(tmp_path / "replay_state")
+    build = StreamingSketchBuild(["g"], "h", spec, state_dir)
+    build._merge_into_state(b0, 0)
+    build._merge_into_state(b1, 1)
+    build._merge_into_state(b1, 1)  # replay of batch 1
+
+    got = {r["g"]: r for r in build.current_state(spark).collect()}
+    once = {r["g"]: r for r in merge_sketches(
+        sketch_partials(b0.unionByName(b1), ["g"], "h", spec),
+        ["g"], spec).collect()}
+    assert set(got) == set(once)
+    for g, r in once.items():
+        assert got[g]["n_rows"] == r["n_rows"], g
+        assert bytes(got[g]["state"]) == bytes(r["state"]), g
+    assert sum(r["n_rows"] for r in got.values()) == 1500
+    assert sorted(os.listdir(state_dir)) == ["batch=0", "batch=1"]
+
+
 def test_tables_reader_parquet_fallback(spark, seqs_files):
     import os
     from python_hll_spark.sources.tables import iceberg_available, read_seqs
