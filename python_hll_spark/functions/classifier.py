@@ -32,7 +32,15 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from python_hll_spark.operators.aggregate import (append_columns,
+                                                  list_flat_offsets)
+from python_hll_spark.operators.dedup import map_word_hashes, word_hash_list
+
 _PHI64 = np.uint64(0x9E3779B97F4A7C15)
+#: gradient partials are int64 fixed point at this scale, so they sum
+#: exactly in any partition layout (a doc's coefficients sum to at most 1,
+#: so int64 holds the sums of up to 2^33 docs)
+_GRAD_SCALE = float(1 << 30)
 
 
 def synthetic_weights(n_buckets: int, seed: int = 7) -> np.ndarray:
@@ -85,37 +93,54 @@ def classifier_scores_tokens(df: DataFrame, tokens_col: str = "tokens",
     pre-hashed ``tokens array<bigint>`` column.  Empty/null token lists
     score sigmoid(bias) — rank-neutral, never dropped here (length
     filtering is a separate, explicit stage)."""
-    dtypes = dict(df.dtypes)
-    id_type = dtypes[id_col]
+    id_type = dict(df.dtypes)[id_col]
+    return df.select(id_col, tokens_col).mapInArrow(
+        _score_gen(tokens_col, id_col, n_buckets, seed, bias, weights,
+                   bigrams),
+        schema=f"`{id_col}` {id_type}, score double")
+
+
+def _token_scorer(n_buckets: int, seed: int, bias: float,
+                  weights: np.ndarray | None, bigrams: bool):
+    """Per-task setup of the scoring kernel: the weight vector (from the
+    seed when no trained vector is supplied: cheap, keeps the closure tiny)
+    and ``score(token-hash list array) -> float64 pa.Array``."""
+    import pyarrow as pa
+
+    w = np.asarray(weights if weights is not None
+                   else synthetic_weights(n_buckets, seed), dtype=np.float32)
     nb = np.uint64(n_buckets)
 
+    def score(toks):
+        flat, offs = list_flat_offsets(toks, np.uint64)
+        return pa.array(_score_segments(flat, offs, w, nb, bias, bigrams),
+                        pa.float64())
+    return score
+
+
+def _score_gen(tokens_col: str, id_col: str, *model):
+    """The scoring kernel's generator: (id, tokens) batches in, (id,
+    score) batches out; ``model`` is ``_token_scorer``'s arguments."""
     def gen(batches):
         import pyarrow as pa
 
-        # per-task weight materialization: regenerated from the seed when
-        # no trained vector is supplied (cheap, keeps the closure tiny)
-        w = np.asarray(weights if weights is not None
-                       else synthetic_weights(n_buckets, seed),
-                       dtype=np.float32)
+        score = _token_scorer(*model)
         for batch in batches:
-            toks = batch.column(tokens_col)
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            offs = toks.offsets.to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            offs = offs - offs[0]
-            flat = toks.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.uint64, copy=False)
-            score = _score_segments(flat, offs, w, nb, bias, bigrams)
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(score, pa.float64())],
+                [batch.column(id_col), score(batch.column(tokens_col))],
                 names=[id_col, "score"])
+    return gen
 
-    return df.select(id_col, tokens_col).mapInArrow(
-        gen, schema=f"`{id_col}` {id_type}, score double")
+
+def score_column(text_col: str, *model) -> tuple:
+    """``("score", "double", make)``: the classifier score of raw text as
+    an ``aggregate.append_columns`` spec — per task the scoring kernel is
+    set up once (``model`` is ``_token_scorer``'s arguments), and each
+    batch's text goes through the tokenizer (``dedup.word_hash_list``)."""
+    def make():
+        score = _token_scorer(*model)
+        return lambda batch: score(word_hash_list(batch.column(text_col)))
+    return "score", "double", make
 
 
 def with_classifier_score(df: DataFrame, text_col: str = "text",
@@ -123,52 +148,27 @@ def with_classifier_score(df: DataFrame, text_col: str = "text",
                           bias: float = 0.0,
                           weights: np.ndarray | None = None,
                           bigrams: bool = True) -> DataFrame:
-    """ALL original columns + ``score`` double, in ONE mapInArrow pass
-    (tokenize + feature-hash + score inline) — the filter-stage shape:
-    no (id, score) join back against the payload, no shuffle at all;
-    ``df.where(F.col("score") >= t)`` composes directly.  Scores are
-    identical to ``classifier_scores`` (same kernel)."""
-    import pyarrow as pa
-
-    from python_hll_spark.functions.murmur3 import word_hash_segments
-
-    nb = np.uint64(n_buckets)
-    text_idx = df.columns.index(text_col)
-
-    def gen(batches):
-        w = np.asarray(weights if weights is not None
-                       else synthetic_weights(n_buckets, seed),
-                       dtype=np.float32)
-        for batch in batches:
-            txt = batch.column(text_idx)
-            # same tokenization as dedup.tokenize_word_hashes: lowercase,
-            # whitespace split, murmur3 word hashes (word_hash_segments —
-            # buffer-tail-safe; see its docstring for the pyarrow
-            # utf8_split_whitespace overread this avoids)
-            hashes, counts = word_hash_segments(txt)
-            flat = hashes.view(np.uint64)
-            tok_offs = np.concatenate(
-                [[0], np.cumsum(counts)]).astype(np.int64)
-            score = _score_segments(flat, tok_offs, w, nb, bias, bigrams)
-            cols = [c.combine_chunks() if isinstance(c, pa.ChunkedArray)
-                    else c for c in batch.columns]
-            yield pa.RecordBatch.from_arrays(
-                cols + [pa.array(score, pa.float64())],
-                names=list(batch.schema.names) + ["score"])
-
-    fields = ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
-    return df.mapInArrow(gen, schema=f"{fields}, score double")
+    """ALL original columns + ``score`` double, in ONE passthrough
+    mapInArrow (``aggregate.append_columns`` with ``score_column``) — the
+    filter-stage shape: no (id, score) join back against the payload, no
+    shuffle at all; ``df.where(F.col("score") >= t)`` composes directly.
+    Scores are identical to ``classifier_scores`` (same tokenizer and
+    kernel)."""
+    return append_columns(df, [score_column(text_col, n_buckets, seed, bias,
+                                            weights, bigrams)])
 
 
 def classifier_scores(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", **kw) -> DataFrame:
-    """(id, score) from raw text: one shared Arrow tokenizer pass
-    (``dedup.tokenize_word_hashes``) then the token-hash kernel."""
-    from python_hll_spark.operators.dedup import tokenize_word_hashes
-
-    toks = tokenize_word_hashes(df, text_col=text_col, id_col=id_col)
-    return classifier_scores_tokens(toks, tokens_col="tokens",
-                                    id_col=id_col, **kw)
+                      id_col: str = "doc_id", n_buckets: int = 1 << 18,
+                      seed: int = 7, bias: float = 0.0,
+                      weights: np.ndarray | None = None,
+                      bigrams: bool = True) -> DataFrame:
+    """(id, score) from raw text: the shared Arrow tokenizer and the
+    token-hash kernel of ``classifier_scores_tokens`` in one
+    ``dedup.map_word_hashes`` pass."""
+    return map_word_hashes(
+        df, _score_gen("tokens", id_col, n_buckets, seed, bias, weights,
+                       bigrams), "score double", text_col, [id_col])
 
 
 # --------------------------------------------------------------- training
@@ -176,7 +176,8 @@ def _grad_segments(flat: np.ndarray, offs: np.ndarray, y: np.ndarray,
                    w: np.ndarray, nb: np.uint64, bias: float,
                    bigrams: bool):
     """One Arrow batch's contribution to the FULL-BATCH logistic-loss
-    gradient: (grad_w float64[nb], grad_b, n_docs, sum_logloss).
+    gradient: (grad_w int64[nb], grad_b int, n_docs, sum_logloss), the
+    two gradients in ``_GRAD_SCALE`` fixed point.
 
     Forward pass is the scoring kernel itself (``_score_segments``), so
     train-time and serve-time features are identical by construction.
@@ -191,8 +192,9 @@ def _grad_segments(flat: np.ndarray, offs: np.ndarray, y: np.ndarray,
         tot_n = tot_n + np.maximum(lens - 1, 0)
     err = score - y
     coef = np.divide(err, tot_n, out=np.zeros(n_docs), where=tot_n > 0)
+    coef = np.rint(coef * _GRAD_SCALE).astype(np.int64)
     doc_tok = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
-    gw = np.zeros(int(nb), dtype=np.float64)
+    gw = np.zeros(int(nb), dtype=np.int64)
     np.add.at(gw, (flat % nb).astype(np.int64), coef[doc_tok])
     if bigrams and len(flat) > 1:
         big = (((flat[:-1] * _PHI64) ^ flat[1:]) % nb).astype(np.int64)
@@ -204,7 +206,8 @@ def _grad_segments(flat: np.ndarray, offs: np.ndarray, y: np.ndarray,
     eps = 1e-12
     loss = -(y * np.log(score + eps)
              + (1.0 - y) * np.log(1.0 - score + eps)).sum()
-    return gw, float(err.sum()), n_docs, float(loss)
+    gb = int(np.rint(err * _GRAD_SCALE).astype(np.int64).sum())
+    return gw, gb, n_docs, float(loss)
 
 
 def classifier_train_tokens(df: DataFrame, label_col: str,
@@ -216,14 +219,16 @@ def classifier_train_tokens(df: DataFrame, label_col: str,
     "train a quality classifier on labeled docs" step of CCNet/GPT-3
     style pipelines, expressed in this library's one idiom: every
     iteration is ONE mergeable aggregation.  Each partition emits a
-    dense float64 gradient partial (``n_buckets`` slots, 2 MB at 2^18 —
+    dense int64 fixed-point gradient partial (``n_buckets`` slots, 2 MB
+    at 2^18 —
     the same shape discipline as a sketch partial), partials sum on the
     driver, and an Adam step updates the weights; the next iteration's
     task closure carries the new 1 MB float32 vector.
 
     Full-batch gradient (not SGD): deterministic given the input and
-    ``iters``/``lr`` — re-running training reproduces the model
-    bit-for-bit up to partial-sum association, which the tests bound.
+    ``iters``/``lr``.  The gradient partials sum exactly (fixed point,
+    ``_GRAD_SCALE``), so the partition layout leaves only the forward
+    pass's float rounding, which the tests bound.
     The input frame is persisted for the duration (``iters`` scans).
 
     Returns ``{"weights": float32[n_buckets], "bias": float,
@@ -251,19 +256,13 @@ def classifier_train_tokens(df: DataFrame, label_col: str,
 
             def part(batches):
                 from pyspark import TaskContext
-                gw = np.zeros(n_buckets, dtype=np.float64)
-                gb = 0.0
+                gw = np.zeros(n_buckets, dtype=np.int64)
+                gb = 0
                 n = 0
                 loss = 0.0
                 for batch in batches:
-                    toks = batch.column(0)
-                    if isinstance(toks, pa.ChunkedArray):
-                        toks = toks.combine_chunks()
-                    offs = toks.offsets.to_numpy(zero_copy_only=False) \
-                        .astype(np.int64, copy=False)
-                    offs = offs - offs[0]
-                    flat = toks.flatten().to_numpy(zero_copy_only=False) \
-                        .astype(np.uint64, copy=False)
+                    flat, offs = list_flat_offsets(batch.column(0),
+                                                   np.uint64)
                     y = batch.column(1).to_numpy(zero_copy_only=False) \
                         .astype(np.float64, copy=False)
                     pgw, pgb, pn, pl = _grad_segments(
@@ -278,16 +277,16 @@ def classifier_train_tokens(df: DataFrame, label_col: str,
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([pid % 16], pa.int32()),
                      pa.array([gw.tobytes()], pa.binary()),
-                     pa.array([gb], pa.float64()),
+                     pa.array([gb], pa.int64()),
                      pa.array([n], pa.int64()),
                      pa.array([loss], pa.float64())],
                     names=["salt", "gw", "gb", "n", "loss"])
 
             def merge_partials(pdf):
                 import pandas as pd
-                acc = np.zeros(n_buckets, dtype=np.float64)
+                acc = np.zeros(n_buckets, dtype=np.int64)
                 for blob in pdf["gw"]:
-                    acc += np.frombuffer(blob, dtype=np.float64)
+                    acc += np.frombuffer(blob, dtype=np.int64)
                 return pd.DataFrame({
                     "gw": [acc.tobytes()],
                     "gb": [pdf["gb"].sum()],
@@ -301,22 +300,22 @@ def classifier_train_tokens(df: DataFrame, label_col: str,
             # pickled rows
             parts = (pruned.mapInArrow(
                 part,
-                schema="salt int, gw binary, gb double, n bigint, "
+                schema="salt int, gw binary, gb bigint, n bigint, "
                        "loss double")
                 .groupBy("salt")
                 .applyInPandas(merge_partials,
-                               schema="gw binary, gb double, n bigint, "
+                               schema="gw binary, gb bigint, n bigint, "
                                       "loss double")
                 .toPandas())
             if len(parts) == 0:
                 raise ValueError("classifier_train: empty input frame")
-            gw = np.zeros(n_buckets, dtype=np.float64)
-            gb = float(parts["gb"].sum())
+            gw = np.zeros(n_buckets, dtype=np.int64)
+            gb = int(parts["gb"].sum()) / _GRAD_SCALE
             n = int(parts["n"].sum())
             loss = float(parts["loss"].sum())
             for blob in parts["gw"]:
-                gw += np.frombuffer(blob, dtype=np.float64)
-            gw = gw / n + l2 * w.astype(np.float64)
+                gw += np.frombuffer(blob, dtype=np.int64)
+            gw = gw / _GRAD_SCALE / n + l2 * w.astype(np.float64)
             gb = gb / n
             history.append(loss / n)
             # Adam
@@ -334,15 +333,14 @@ def classifier_train_tokens(df: DataFrame, label_col: str,
 
 
 def classifier_train(df: DataFrame, label_col: str, text_col: str = "text",
-                     id_col: str = "doc_id", **kw) -> dict:
-    """Train from raw text: one shared Arrow tokenizer pass
-    (``dedup.tokenize_word_hashes`` — the exact serve-time tokenizer)
-    then the token-hash trainer."""
-    from python_hll_spark.operators.dedup import tokenize_word_hashes
-
-    toks = tokenize_word_hashes(df, text_col=text_col, id_col=id_col)
-    labeled = toks.join(df.select(id_col, label_col), id_col)
-    return classifier_train_tokens(labeled, label_col, **kw)
+                     **kw) -> dict:
+    """Train from raw text: the shared Arrow tokenizer
+    (``dedup.map_word_hashes`` — the exact serve-time tokenizer) passes
+    ``label_col`` through beside each doc's tokens, in one pass with no
+    join back to ``df``, and feeds the token-hash trainer."""
+    toks = map_word_hashes(df, lambda batches: batches,
+                           "tokens array<bigint>", text_col, [label_col])
+    return classifier_train_tokens(toks, label_col, **kw)
 
 
 def save_model(spark, model: dict, path: str, n_buckets: int,

@@ -250,8 +250,6 @@ def word_hash_segments(txt, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
     """
     import pyarrow as pa
 
-    if isinstance(txt, pa.ChunkedArray):
-        txt = txt.combine_chunks()
     n_docs = len(txt)
     empty = (np.empty(0, dtype=np.int64), np.zeros(n_docs, dtype=np.int64))
     if n_docs == 0:
@@ -314,8 +312,6 @@ def murmur3_hash_frame(df, by: list[str], value_col: str,
     def gen(batches):
         for batch in batches:
             v = batch.column(value_col)
-            if isinstance(v, pa.ChunkedArray):
-                v = v.combine_chunks()
             if v.null_count:
                 valid = v.is_valid().to_numpy(zero_copy_only=False)
                 vals = np.zeros(len(v), dtype=np.int64)

@@ -298,19 +298,10 @@ def bigram_logprob_tokens(df, tokens_col: str = "tokens",
     import numpy as np
     import pyarrow as pa
 
+    from python_hll_spark.operators.aggregate import list_flat_offsets
+
     if not 0.0 <= lam <= 1.0:
         raise ValueError("lam must be in [0, 1]")
-
-    def _flat_offsets(batch):
-        toks = batch.column(tokens_col)
-        if isinstance(toks, pa.ChunkedArray):
-            toks = toks.combine_chunks()
-        offs = toks.offsets.to_numpy(zero_copy_only=False) \
-            .astype(np.int64, copy=False)
-        offs = offs - offs[0]
-        flat = toks.flatten().to_numpy(zero_copy_only=False) \
-            .astype(np.int64, copy=False)
-        return toks, flat, offs
 
     def _pair_keys(flat, offs):
         """(keys int64[], doc_of_pair int64[]) for within-doc adjacent
@@ -338,7 +329,7 @@ def bigram_logprob_tokens(df, tokens_col: str = "tokens",
     def freq_partials(batches):
         acc_k, acc_c = [], []
         for batch in batches:
-            _, flat, offs = _flat_offsets(batch)
+            flat, offs = list_flat_offsets(batch.column(tokens_col))
             if len(flat) == 0:
                 continue
             pk, _ = _pair_keys(flat, offs)
@@ -407,7 +398,7 @@ def bigram_logprob_tokens(df, tokens_col: str = "tokens",
         hks, hc, hlp = bc_hot.value
         nh = len(hks)
         for batch in batches:
-            toks, flat, offs = _flat_offsets(batch)
+            flat, offs = list_flat_offsets(batch.column(tokens_col))
             n_docs = len(offs) - 1
             if n_docs == 0 or len(flat) < 2:
                 continue
@@ -424,8 +415,6 @@ def bigram_logprob_tokens(df, tokens_col: str = "tokens",
             np.add.at(c_h, docs[is_hot], hc[pos[is_hot]])
             np.add.at(lp_h, docs[is_hot], hlp[pos[is_hot]])
             ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             tail = ~is_hot
             tail_docs = docs[tail]
             has_hot = n_h > 0
@@ -540,7 +529,7 @@ def boilerplate_ngram_stats(df, n: int = 5, min_docs: int = 2,
                         .otherwise(F.lit(0.0))))
 
 
-def _utf8_buffer(col):
+def _utf8_buffer(txt):
     """(data uint8[], offs int64[]) zero-copy view of a pyarrow string
     column's concatenated utf-8 buffer and ABSOLUTE offsets into it —
     the one shared copy of the slice/null/large-string/array-offset
@@ -551,7 +540,6 @@ def _utf8_buffer(col):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    txt = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
     if txt.null_count:
         txt = pc.fill_null(txt, "")
     if pa.types.is_large_string(txt.type):
@@ -687,11 +675,8 @@ def winnowing_fingerprints(df: DataFrame, text_col: str = "text",
             np.cumsum(counts, out=list_offsets[1:])
             fps = pa.ListArray.from_arrays(pa.array(list_offsets, pa.int32()),
                                            pa.array(values, pa.int64()))
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             yield pa.RecordBatch.from_arrays(
-                [ids, fps], names=[id_col, "fingerprints"])
+                [batch.column(id_col), fps], names=[id_col, "fingerprints"])
 
     id_type = dict(df.dtypes)[id_col]
     return pruned.mapInArrow(compute,
@@ -922,7 +907,6 @@ def char_entropy_frame(df: DataFrame, text_col: str = "text",
     On non-ASCII text this is byte entropy, not code-point entropy — still
     the right quality signal (it is what the compression bound sees), just
     not SQL-char-mirrorable.  NULL text counts as empty (entropy 0.0)."""
-    import numpy as np
     import pyarrow as pa
 
     id_type = dict(df.dtypes)[id_col]
@@ -971,29 +955,22 @@ def _entropy_math(data, offs, n_docs):
     return lengths, distinct, ent
 
 
+def entropy_column(text_col: str) -> tuple:
+    """``("entropy", "double", make)``: per-row byte entropy of
+    ``text_col`` as an ``aggregate.append_columns`` spec (same math as
+    ``char_entropy_frame``)."""
+    def entropy(batch):
+        txt = batch.column(text_col)
+        return _entropy_math(*_utf8_buffer(txt), n_docs=len(txt))[2]
+    return "entropy", "double", lambda: entropy
+
+
 def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     """ALL original columns + ``entropy`` double in ONE passthrough
-    mapInArrow pass — the filter-stage shape (mirrors
-    ``classifier.with_classifier_score``): no (id, entropy) join back,
-    no shuffle; ``df.where(F.col("entropy").between(lo, hi))`` composes
-    directly.  Values identical to ``char_entropy_frame`` (same math)."""
-    import numpy as np
-    import pyarrow as pa
+    mapInArrow (``aggregate.append_columns`` with ``entropy_column``) —
+    the filter-stage shape: no (id, entropy) join back, no shuffle;
+    ``df.where(F.col("entropy").between(lo, hi))`` composes directly.
+    Values identical to ``char_entropy_frame`` (same math)."""
+    from python_hll_spark.operators.aggregate import append_columns
 
-    text_idx = df.columns.index(text_col)
-
-    def gen(batches):
-        for batch in batches:
-            txt = batch.column(text_idx)
-            n_docs = len(txt)
-            if n_docs == 0:
-                continue
-            _, _, ent = _entropy_math(*_utf8_buffer(txt), n_docs=n_docs)
-            cols = [c.combine_chunks() if isinstance(c, pa.ChunkedArray)
-                    else c for c in batch.columns]
-            yield pa.RecordBatch.from_arrays(
-                cols + [pa.array(ent, pa.float64())],
-                names=list(batch.schema.names) + ["entropy"])
-
-    fields = ", ".join(f"`{n}` {t}" for n, t in df.dtypes)
-    return df.mapInArrow(gen, schema=f"{fields}, entropy double")
+    return append_columns(df, [entropy_column(text_col)])

@@ -74,15 +74,11 @@ def dict_encode_groups(batch, group_cols: list[str]):
       re-densified with ``np.unique`` after each combine, so intermediate
       products stay < batch_rows**2 and never overflow int64.
     """
-    import pyarrow as pa
-
     if not group_cols:
         return np.zeros(batch.num_rows, dtype=np.int64), [()]
     per_col = []
     for name in group_cols:
         col = batch.column(name)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
         enc = col.dictionary_encode()
         idx = enc.indices
         vals = enc.dictionary.to_pylist()
@@ -103,6 +99,43 @@ def dict_encode_groups(batch, group_cols: list[str]):
         keys = [keys[int(u) // card] + (vals_i[int(u) % card],)
                 for u in uniq.tolist()]
     return codes, keys
+
+
+def list_flat_offsets(col, dtype=np.int64):
+    """``(flat, offs)`` of an Arrow list column — the one list reader of the
+    token kernels: values as ``dtype`` (``None`` keeps theirs) and int64
+    offsets rebased to 0, so row ``i`` is ``flat[offs[i]:offs[i + 1]]``."""
+    offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    offs -= offs[0]
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if dtype is not None:
+        flat = flat.astype(dtype, copy=False)
+    return flat, offs
+
+
+def append_columns(df: DataFrame, columns: list) -> DataFrame:
+    """ALL columns of ``df`` plus one column per ``(name, type, make)``
+    spec, in ONE passthrough ``mapInArrow`` shared by every spec: input
+    columns ride along zero-copy, with no join back and no shuffle.
+    ``make()`` runs once per task (per-task setup, e.g. a weight vector)
+    and returns ``fn(batch)`` -> one value per row (Arrow or numpy)."""
+    fields = [f"`{f.name}` {f.dataType.simpleString()}"
+              for f in df.schema.fields]
+    fields += [f"`{name}` {type_}" for name, type_, _ in columns]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        fns = [(name, make()) for name, _, make in columns]
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            out = batch
+            for name, fn in fns:
+                out = out.append_column(name, pa.array(fn(batch)))
+            yield out
+
+    return df.mapInArrow(gen, schema=", ".join(fields))
 
 
 def _partial_schema(df: DataFrame, group_cols: list[str]) -> str:
@@ -188,8 +221,6 @@ def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
     the partial rows come from ``_arrow_partials``, as for every stage-1
     builder, so the same merge stages apply.
     """
-    import pyarrow as pa
-
     from python_hll_spark.functions.hashing import splitmix64
     from python_hll_spark.sketches.hll import (HLLSketch, HLLType,
                                                _rho_and_index, _scatter_max)
@@ -200,8 +231,6 @@ def token_partials_arrow(df: DataFrame, group_cols: list[str], token_col: str,
 
     def update(batch, codes, keys, states, counts):
         tok = batch.column(token_col)
-        if isinstance(tok, pa.ChunkedArray):
-            tok = tok.combine_chunks()
         flat = tok.flatten().to_numpy(zero_copy_only=False)
         lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False))
         n_groups = len(keys)
@@ -306,8 +335,6 @@ def scalar_partials_arrow(df: DataFrame, group_cols: list[str], value_col: str,
 
     def update(batch, codes, keys, states, counts):
         col = batch.column(value_col)
-        if isinstance(col, pa.ChunkedArray):
-            col = col.combine_chunks()
         dtype = np.float64 if pa.types.is_floating(col.type) else np.int64
         if col.null_count:
             vmask = col.is_valid().to_numpy(zero_copy_only=False)

@@ -3,12 +3,13 @@ n-gram/word-set Jaccard (the oracle the approximate paths are tested against).
 
 Scale shape: exact dedup is a hash-groupBy on a 64-bit JVM-side fingerprint
 (shuffles 8-byte keys, never text).  MinHash and SimHash each have ONE
-signature kernel, a mapInArrow pass over a token-hash array column; the
-text entry points are adapters that run ``tokenize_word_hashes`` (one
-Arrow pass: lowercase, whitespace split, murmur3 word hashes) and then
-that kernel.  LSH banding turns the quadratic pair search into an
-equi-join on (band, band_key) buckets, which Catalyst shuffles like any
-other join key.
+signature kernel, a generator over token-hash array batches that the
+tokens entry point runs as a mapInArrow pass; the text entry points are
+adapters that feed the tokenizer's batches (lowercase, whitespace split,
+murmur3 word hashes) straight into that kernel inside the SAME mapInArrow
+(``map_word_hashes``), so text crosses into Python once.  LSH banding
+turns the quadratic pair search into an equi-join on (band, band_key)
+buckets, which Catalyst shuffles like any other join key.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 
 from python_hll_spark.functions.hashing import splitmix64
 from python_hll_spark.functions.text import doc_fingerprint
+from python_hll_spark.operators.aggregate import list_flat_offsets
 
 
 # ------------------------------------------------------------------ exact
@@ -105,41 +107,57 @@ def fan_out_small_input(df: DataFrame, min_partitions: int | None = None) -> Dat
 
 
 # ------------------------------------------------------------- tokenizer
-def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """(id, tokens array<bigint>): lowercase + whitespace word split + 64-bit
-    murmur3 word hashes, ONE Arrow pass — turns raw text into the
-    pre-tokenized shape ``minhash_signatures_tokens`` consumes.
-
-    Every text entry point of the MinHash, SimHash and DSIR families runs
-    this and then its tokens kernel.  The split+hash is pure numpy over
-    the chunk's contiguous utf-8 buffer
-    (``word_hash_segments`` — NOT ``pc.utf8_split_whitespace``, whose
-    buffer-tail overread made the last token of a doc nondeterministic on
-    Spark-delivered buffers; see its docstring).  No per-row Python, no
-    shuffle.  Empty/null docs yield an EMPTY token list (sentinel
-    signature downstream)."""
+def word_hash_list(txt):
+    """The tokenizer: a pyarrow string array -> ``list<int64>`` array of
+    its docs' word hashes (lowercase + ASCII-whitespace word split + 64-bit
+    murmur3).  The split+hash is pure numpy over the contiguous utf-8
+    buffer (``word_hash_segments`` — NOT ``pc.utf8_split_whitespace``,
+    whose buffer-tail overread made the last token of a doc
+    nondeterministic on Spark-delivered buffers; see its docstring).
+    Empty/null docs yield an EMPTY token list."""
     import pyarrow as pa
 
     from python_hll_spark.functions.murmur3 import word_hash_segments
 
-    df = fan_out_small_input(df)
+    hashes, counts = word_hash_segments(txt)
+    tok_offsets = pa.array(
+        np.concatenate([[0], np.cumsum(counts)]).astype(np.int32))
+    return pa.ListArray.from_arrays(tok_offsets, pa.array(hashes))
 
-    def gen(batches):
-        for batch in batches:
-            hashes, counts = word_hash_segments(batch.column(text_col))
-            tok_offsets = pa.array(
-                np.concatenate([[0], np.cumsum(counts)]).astype(np.int32))
-            tok_arr = pa.ListArray.from_arrays(tok_offsets, pa.array(hashes))
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
-            yield pa.RecordBatch.from_arrays(
-                [ids, tok_arr], names=[id_col, "tokens"])
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInArrow(
-        gen, schema=f"`{id_col}` {id_type}, tokens array<bigint>")
+def map_word_hashes(df: DataFrame, kernel, fields: str,
+                    text_col: str = "text", keep: list = ()) -> DataFrame:
+    """ONE ``mapInArrow`` of ``kernel`` over the tokenizer's ``(keep...,
+    tokens)`` batches (``word_hash_list`` of ``text_col``): raw text
+    crosses into Python once, and the word hashes go straight into a
+    tokens kernel's generator instead of back to the JVM.  Every text
+    entry point of the MinHash, SimHash, DSIR and classifier families is
+    this call.  The kernel yields the ``keep`` columns, then ``fields``.
+    Small inputs fan out first (``fan_out_small_input``)."""
+    keep = list(keep)
+    dtypes = dict(df.dtypes)
+    schema = ", ".join([f"`{c}` {dtypes[c]}" for c in keep] + [fields])
+
+    def tokenized(batches):
+        import pyarrow as pa
+
+        return kernel(pa.RecordBatch.from_arrays(
+            [b.column(c) for c in keep] + [word_hash_list(b.column(text_col))],
+            names=[*keep, "tokens"]) for b in batches)
+
+    return (fan_out_small_input(df).select(*keep, text_col)
+            .mapInArrow(tokenized, schema=schema))
+
+
+def tokenize_word_hashes(df: DataFrame, text_col: str = "text",
+                         id_col: str = "doc_id") -> DataFrame:
+    """(id, tokens array<bigint>): lowercase + whitespace word split + 64-bit
+    murmur3 word hashes, ONE Arrow pass — turns raw text into the
+    pre-tokenized shape ``minhash_signatures_tokens`` consumes.  The text
+    entry points fuse this tokenizer with their kernel instead
+    (``map_word_hashes``); this is that pass with no kernel."""
+    return map_word_hashes(df, lambda batches: batches,
+                           "tokens array<bigint>", text_col, [id_col])
 
 
 # ---------------------------------------------------------------- MinHash
@@ -147,12 +165,10 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", n: int = 3,
                        num_hashes: int = 128,
                        id_col: str = "doc_id") -> DataFrame:
     """(id, sig array<bigint>): K permutation-minima over the word n-gram
-    hashes of raw text.  Adapter: ``tokenize_word_hashes`` then
-    ``minhash_signatures_tokens`` (the one MinHash kernel) over the word
-    hashes."""
-    return minhash_signatures_tokens(
-        tokenize_word_hashes(df, text_col, id_col), "tokens",
-        n, num_hashes, id_col)
+    hashes of raw text.  Adapter: the tokenizer and the one MinHash kernel
+    (``minhash_signatures_tokens``) in one ``map_word_hashes`` pass."""
+    return map_word_hashes(df, _minhash_gen("tokens", id_col, n, num_hashes),
+                           "sig array<bigint>", text_col, [id_col])
 
 
 _EMPTY_SIG_SENTINEL = np.iinfo(np.int64).max
@@ -178,24 +194,28 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
 
     Output is join-compatible with ``lsh_candidate_pairs`` /
     ``connected_components`` — the rest of the dedup pipeline is shared."""
-    import pyarrow as pa
+    id_type = dict(df.dtypes)[id_col]
+    pruned = df.select(id_col, tokens_col)
+    return pruned.mapInArrow(
+        _minhash_gen(tokens_col, id_col, n, num_hashes),
+        schema=f"`{id_col}` {id_type}, sig array<bigint>")
 
+
+def _minhash_gen(tokens_col: str, id_col: str, n: int, num_hashes: int):
+    """``minhash_signatures_tokens``'s generator: (id, tokens) -> (id, sig)."""
     ks = np.arange(1, num_hashes + 1, dtype=np.int64)
     A = splitmix64(ks, seed=0xA5).view(np.uint64) | np.uint64(1)
     B = splitmix64(ks, seed=0xB7).view(np.uint64)
 
     def compute(batches):
+        import pyarrow as pa
+
         for batch in batches:
             col = batch.column(tokens_col)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
             n_docs = len(col)
             if n_docs == 0:
                 continue
-            flat = col.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = offs - offs[0]
+            flat, offs = list_flat_offsets(col)
             lengths = np.diff(offs)
             sig_mat = np.full((n_docs, num_hashes),
                               np.iinfo(np.int64).max, dtype=np.int64)
@@ -274,21 +294,15 @@ def minhash_signatures_tokens(df: DataFrame, tokens_col: str = "tokens",
                     for k in range(num_hashes):
                         sig_mat[sidx, k] = (acc_s * A[k] + B[k]) \
                             .astype(np.int64)
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             sig_offsets = pa.array(
                 np.arange(0, (n_docs + 1) * num_hashes, num_hashes,
                           dtype=np.int32))
             sig_arr = pa.ListArray.from_arrays(sig_offsets,
                                                pa.array(sig_mat.ravel()))
             yield pa.RecordBatch.from_arrays(
-                [ids, sig_arr], names=[id_col, "sig"])
+                [batch.column(id_col), sig_arr], names=[id_col, "sig"])
 
-    id_type = dict(df.dtypes)[id_col]
-    pruned = df.select(id_col, tokens_col)
-    return pruned.mapInArrow(
-        compute, schema=f"`{id_col}` {id_type}, sig array<bigint>")
+    return compute
 
 
 def _band_keys_frame(sig_df: DataFrame, bands: int,
@@ -301,13 +315,10 @@ def _band_keys_frame(sig_df: DataFrame, bands: int,
         import pyarrow as pa
         for batch in batches:
             sig = batch.column("sig")
-            if isinstance(sig, pa.ChunkedArray):
-                sig = sig.combine_chunks()
             n = len(sig)
             if n == 0:
                 continue
-            flat = sig.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
+            flat, _ = list_flat_offsets(sig)
             K = len(flat) // n
             sig_mat = flat.reshape(n, K)
             keep = ~(sig_mat == _EMPTY_SIG_SENTINEL).all(axis=1)
@@ -322,12 +333,9 @@ def _band_keys_frame(sig_df: DataFrame, bands: int,
                 hashed = splitmix64(np.ascontiguousarray(chunk).ravel(),
                                     seed=b).reshape(n2, r)
                 keys[:, b] = hashed.view(np.uint64).sum(axis=1).view(np.int64)
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             take_idx = np.repeat(np.nonzero(keep)[0], bands)
             yield pa.RecordBatch.from_arrays([
-                ids.take(pa.array(take_idx)),
+                batch.column(id_col).take(pa.array(take_idx)),
                 pa.array(np.tile(np.arange(bands, dtype=np.int32), n2)),
                 pa.array(keys.ravel()),
             ], names=[id_col, "band", "band_key"])
@@ -491,10 +499,11 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """(id, simhash bigint): 64-bit sign-sum fingerprint over the word
-    hashes of raw text.  Adapter: ``tokenize_word_hashes`` then
-    ``_simhash_kernel``; docs with no words get signature 0."""
-    return _simhash_kernel(tokenize_word_hashes(df, text_col, id_col),
-                           "tokens", id_col)
+    hashes of raw text.  Adapter: the tokenizer and the one SimHash kernel
+    (``_simhash_kernel``) in one ``map_word_hashes`` pass; docs with no
+    words get signature 0."""
+    return map_word_hashes(df, _simhash_gen("tokens", id_col),
+                           "simhash bigint", text_col, [id_col])
 
 
 def _simhash_kernel(df: DataFrame, tokens_col: str,
@@ -507,22 +516,24 @@ def _simhash_kernel(df: DataFrame, tokens_col: str,
     doc boundaries gives per-doc bit-vote sums; signatures re-assemble with
     ``np.packbits``.  Chunked at doc boundaries so the bit matrix stays
     ~8 MB regardless of batch size."""
+    id_type = dict(df.dtypes)[id_col]
+    return df.select(id_col, tokens_col).mapInArrow(
+        _simhash_gen(tokens_col, id_col),
+        schema=f"`{id_col}` {id_type}, simhash bigint")
+
+
+def _simhash_gen(tokens_col: str, id_col: str):
+    """``_simhash_kernel``'s generator: (id, tokens) -> (id, simhash)."""
     CHUNK_WORDS = 131072  # 64-wide uint8 bit matrix ~8MB per chunk
 
     def compute(batches):
         import pyarrow as pa
         for batch in batches:
             wh = batch.column(tokens_col)
-            if isinstance(wh, pa.ChunkedArray):
-                wh = wh.combine_chunks()
             n = len(wh)
             if n == 0:
                 continue
-            all_offsets = wh.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            base = all_offsets[0]
-            offsets = all_offsets - base          # n+1 doc boundaries into flat
-            flat = wh.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
+            flat, offsets = list_flat_offsets(wh)  # n+1 doc boundaries
             lengths = np.diff(offsets)
             out = np.zeros(n, dtype=np.int64)
             # chunk over DOCS such that each chunk holds <= CHUNK_WORDS words
@@ -548,15 +559,11 @@ def _simhash_kernel(df: DataFrame, tokens_col: str,
                     idx = np.arange(doc_start, doc_end)[nonempty]
                     out[idx] = sigs
                 doc_start = doc_end
-            ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(out)], names=[id_col, "simhash"])
+                [batch.column(id_col), pa.array(out)],
+                names=[id_col, "simhash"])
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, tokens_col).mapInArrow(
-        compute, schema=f"`{id_col}` {id_type}, simhash bigint")
+    return compute
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int = 3,

@@ -21,12 +21,13 @@ Implements the Data Selection via Importance Resampling recipe
    ``exp(w)``), planned as TakeOrderedAndProject — count-free, bounded
    driver result, no global sort.
 
-There is one kernel per step.  The text entry points (``bucket_counts``,
-``dsir_weights``, ``dsir_select``) are adapters: ``tokenize_word_hashes``
-(lowercase, ASCII-whitespace split, 64-bit murmur3 word hashes, one
-Arrow pass) and then the tokens kernel.  So a text feature is xxhash64 of
-a word HASH, not of the word string, and a doc with no words has no
-features and drops out of the weights frame.
+There is one kernel per step, a generator over token batches.  The text
+entry points (``bucket_counts``, ``dsir_weights``, ``dsir_select``) are
+adapters: ``map_word_hashes`` runs the tokenizer (lowercase,
+ASCII-whitespace split, 64-bit murmur3 word hashes) and the tokens kernel
+in one Arrow pass, so text crosses into Python once.  A text feature is
+xxhash64 of a word HASH, not of the word string, and a doc with no words
+has no features and drops out of the weights frame.
 
 The reference library (AdRoll/python-hll) has no selection surface at all;
 this operator exists for the training-data-pipeline tier of the target
@@ -37,10 +38,13 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from python_hll_spark.operators.dedup import tokenize_word_hashes
+from python_hll_spark.functions.hashing import xxhash64_int
+from python_hll_spark.operators.aggregate import list_flat_offsets
+from python_hll_spark.operators.dedup import map_word_hashes
 
 
 def hashed_ngram_features_tokens(tokens: Column, buckets: int = 10000,
@@ -70,12 +74,13 @@ def bucket_counts(df: DataFrame, text_col: str = "text",
                   buckets: int = 10000, bigrams: bool = True) -> DataFrame:
     """(bucket bigint, cnt bigint) hashed-feature occurrence counts of raw
     text — the sufficient statistics of a bag-of-buckets unigram model.
-    Adapter: ``tokenize_word_hashes`` then ``bucket_counts_tokens`` over
-    the word hashes (the tokenizer needs an id column; a constant one
-    serves, since counts are corpus-wide)."""
-    docs = df.select(F.lit(0).alias("__doc"), F.col(text_col))
-    return bucket_counts_tokens(tokenize_word_hashes(docs, text_col, "__doc"),
-                                "tokens", buckets, bigrams)
+    Adapter: the tokenizer and the ``bucket_counts_tokens`` kernel in one
+    ``map_word_hashes`` pass over the word hashes (counts are corpus-wide,
+    so no column rides along)."""
+    partials = map_word_hashes(df, _bucket_count_gen("tokens", buckets,
+                                                     bigrams),
+                               "bucket bigint, cnt bigint", text_col)
+    return partials.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def bucket_counts_tokens(df: DataFrame, tokens_col: str = "tokens",
@@ -87,23 +92,20 @@ def bucket_counts_tokens(df: DataFrame, tokens_col: str = "tokens",
     emitting at most ``buckets`` (bucket, cnt) partial rows per task for a
     final tiny sum.  Counts are integers, so the result is EXACTLY the
     explode + groupBy plan's, without materializing ~2 JVM rows per token."""
-    import numpy as np
-    import pyarrow as pa
+    partials = df.select(tokens_col).mapInArrow(
+        _bucket_count_gen(tokens_col, buckets, bigrams),
+        schema="bucket bigint, cnt bigint")
+    return partials.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
-    from python_hll_spark.functions.hashing import xxhash64_int
 
-    nb = buckets
-
+def _bucket_count_gen(tokens_col: str, nb: int, bigrams: bool):
+    """``bucket_counts_tokens``'s generator: tokens -> per-task partials."""
     def gen(batches):
+        import pyarrow as pa
+
         acc = np.zeros(nb, dtype=np.int64)
         for batch in batches:
-            toks = batch.column(tokens_col)
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            offs = toks.offsets.to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            offs = offs - offs[0]
-            flat = toks.flatten().to_numpy(zero_copy_only=False)
+            flat, offs = list_flat_offsets(batch.column(tokens_col), None)
             if len(flat) == 0:
                 continue
             h_uni = xxhash64_int(flat, 42)
@@ -121,10 +123,7 @@ def bucket_counts_tokens(df: DataFrame, tokens_col: str = "tokens",
         yield pa.RecordBatch.from_arrays(
             [pa.array(nz, pa.int64()), pa.array(acc[nz], pa.int64())],
             names=["bucket", "cnt"])
-
-    partials = df.select(tokens_col).mapInArrow(
-        gen, schema="bucket bigint, cnt bigint")
-    return partials.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
+    return gen
 
 
 def dsir_logratio(target_counts: DataFrame, raw_counts: DataFrame,
@@ -157,12 +156,13 @@ def dsir_weights(df: DataFrame, logratio: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id", buckets: int = 10000,
                  bigrams: bool = True) -> DataFrame:
     """(id, n_features, dsir_weight): per-doc log importance weight of raw
-    text — the feature-count-weighted sum of the log-ratios.  Adapter:
-    ``tokenize_word_hashes`` then ``dsir_weights_tokens`` over the word
-    hashes, so docs with no words drop out and ``logratio`` is collected
-    eagerly (see there)."""
-    return dsir_weights_tokens(tokenize_word_hashes(df, text_col, id_col),
-                               logratio, "tokens", id_col, buckets, bigrams)
+    text — the feature-count-weighted sum of the log-ratios.  Adapter: the
+    tokenizer and the ``dsir_weights_tokens`` kernel in one
+    ``map_word_hashes`` pass over the word hashes, so docs with no words
+    drop out and ``logratio`` is collected eagerly (see there)."""
+    return map_word_hashes(
+        df, _dsir_weight_gen(logratio, "tokens", id_col, buckets, bigrams),
+        "n_features bigint, dsir_weight double", text_col, [id_col])
 
 
 def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
@@ -186,33 +186,33 @@ def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
 
     NOTE: materializes ``logratio`` eagerly (buckets-row collect — the
     same rows the join plan would broadcast)."""
-    import numpy as np
-    import pyarrow as pa
+    id_type = dict(df.dtypes)[id_col]
+    return df.select(id_col, tokens_col).mapInArrow(
+        _dsir_weight_gen(logratio, tokens_col, id_col, buckets, bigrams),
+        schema=f"`{id_col}` {id_type}, n_features bigint, "
+               f"dsir_weight double")
 
-    from python_hll_spark.functions.hashing import xxhash64_int
 
-    table = np.zeros(buckets, dtype=np.float64)
-    present = np.zeros(buckets, dtype=bool)
+def _dsir_weight_gen(logratio: DataFrame, tokens_col: str, id_col: str,
+                     nb: int, bigrams: bool):
+    """``dsir_weights_tokens``'s generator: (id, tokens) -> (id,
+    n_features, dsir_weight).  Collects ``logratio`` into a broadcast
+    ``float64[nb]`` table now; each task reads it once."""
+    table = np.zeros(nb, dtype=np.float64)
+    present = np.zeros(nb, dtype=bool)
     for r in logratio.select("bucket", "logratio").collect():
         table[r["bucket"]] = r["logratio"]
         present[r["bucket"]] = True
     all_present = bool(present.all())
-    sc = df.sparkSession.sparkContext
+    sc = logratio.sparkSession.sparkContext
     bc = sc.broadcast((table, None if all_present else present))
-    id_type = dict(df.dtypes)[id_col]
-    nb = buckets
 
     def gen(batches):
+        import pyarrow as pa
+
         tbl, pres = bc.value
         for batch in batches:
-            toks = batch.column(tokens_col)
-            if isinstance(toks, pa.ChunkedArray):
-                toks = toks.combine_chunks()
-            offs = toks.offsets.to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
-            offs = offs - offs[0]
-            flat = toks.flatten().to_numpy(zero_copy_only=False)
-            n_docs = len(offs) - 1
+            flat, offs = list_flat_offsets(batch.column(tokens_col), None)
             lens = offs[1:] - offs[:-1]
             h_uni = xxhash64_int(flat, 42)
             ub = np.remainder(h_uni, nb)
@@ -247,8 +247,6 @@ def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
                 n_feat = n_feat + (vcnt[e] - vcnt[s])
             keep = n_feat > 0
             ids = batch.column(id_col)
-            if isinstance(ids, pa.ChunkedArray):
-                ids = ids.combine_chunks()
             if not keep.all():
                 mask = pa.array(keep)
                 ids = ids.filter(mask)
@@ -259,9 +257,7 @@ def dsir_weights_tokens(df: DataFrame, logratio: DataFrame,
                  pa.array(weight, pa.float64())],
                 names=[id_col, "n_features", "dsir_weight"])
 
-    return df.select(id_col, tokens_col).mapInArrow(
-        gen, schema=f"`{id_col}` {id_type}, n_features bigint, "
-                    f"dsir_weight double")
+    return gen
 
 
 def _weights_impl(df: DataFrame, feats: Column, logratio: DataFrame,

@@ -19,6 +19,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 
+from python_hll_spark.operators.aggregate import list_flat_offsets
+
 
 def pack_sequences(df: DataFrame, token_col: str = "tokens",
                    seq_len: int = 2048, pad_id: int = 0,
@@ -56,16 +58,10 @@ def pack_sequences(df: DataFrame, token_col: str = "tokens",
                 names=["seq_id", "tokens", "n_tokens"])
 
         for batch in batches:
-            col = batch.column(token_col)
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            flat = col.flatten().to_numpy(zero_copy_only=False) \
-                .astype(np.int64, copy=False)
+            flat, offs = list_flat_offsets(batch.column(token_col))
             if eod_id is not None:
-                offs = col.offsets.to_numpy(zero_copy_only=False) \
-                    .astype(np.int64, copy=False)
-                ends = offs[1:] - offs[0]   # one insert point per doc end
-                flat = np.insert(flat, ends, np.int64(eod_id))
+                # one insert point per doc end
+                flat = np.insert(flat, offs[1:], np.int64(eod_id))
             flat = np.concatenate([leftover, flat])
             n_full = len(flat) // seq_len
             if n_full:

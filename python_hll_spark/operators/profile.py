@@ -64,13 +64,9 @@ def token_profile(df: DataFrame, by: str = "source", token_col: str = "tokens",
         counts: dict = {}
         for batch in batches:
             tok = batch.column(token_col)
-            if isinstance(tok, pa.ChunkedArray):
-                tok = tok.combine_chunks()
             flat = tok.flatten().to_numpy(zero_copy_only=False)
             lengths = np.diff(tok.offsets.to_numpy(zero_copy_only=False))
             n_toks = batch.column(len_col)
-            if isinstance(n_toks, pa.ChunkedArray):
-                n_toks = n_toks.combine_chunks()
             n_toks = n_toks.to_numpy(zero_copy_only=False)
             # null-safe dense group codes (NULL group = its own key,
             # matching Spark groupBy semantics)

@@ -69,8 +69,7 @@ def _local_topk_prune(narrow: DataFrame, by: list[str], k: int,
 
         carry = None
         for batch in batches:
-            arrs = [c.combine_chunks() if isinstance(c, pa.ChunkedArray)
-                    else c for c in batch.columns]
+            arrs = batch.columns
             if carry is not None:
                 arrs = [pa.concat_arrays([ca, a])
                         for ca, a in zip(carry, arrs)]

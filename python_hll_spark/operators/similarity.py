@@ -14,6 +14,9 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from python_hll_spark.operators.aggregate import (append_columns,
+                                                  list_flat_offsets)
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -58,39 +61,27 @@ def _batch_matrix(vec, dtype=np.float64) -> np.ndarray:
     (the pattern the dedup kernels use).  Embeddings are fixed-dim by
     contract; ragged input raises rather than silently mis-shaping."""
     import pyarrow as pa
-    if isinstance(vec, pa.ChunkedArray):
-        vec = vec.combine_chunks()
     n = len(vec)
     if pa.types.is_fixed_size_list(vec.type):
         dim = vec.type.list_size
         flat = vec.flatten().to_numpy(zero_copy_only=False)
         return flat.astype(dtype, copy=False).reshape(n, dim)
-    offsets = vec.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    lengths = np.diff(offsets)
+    flat, offs = list_flat_offsets(vec, dtype)
+    lengths = np.diff(offs)
     if n and (lengths != lengths[0]).any():
         raise ValueError("embedding column is ragged; expected fixed dim")
-    flat = vec.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(dtype, copy=False).reshape(n, int(lengths[0]) if n else 0)
+    return flat.reshape(n, int(lengths[0]) if n else 0)
 
 
-def _arrow_append_column(df: DataFrame, vec_col: str, out: str,
-                         out_type: str, compute_np):
-    """mapInArrow pass-through that appends ``out`` computed from the
-    vector column's (n, dim) matrix — every other column rides along
-    zero-copy, so this is the Arrow-native replacement for a scalar
-    pandas UDF over 10^9 corpus vectors."""
-    import pyarrow as pa
-
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    schema = f"{fields}, `{out}` {out_type}"
-
-    def gen(batches):
-        for batch in batches:
-            mat = _batch_matrix(batch.column(vec_col))
-            yield batch.append_column(out, pa.array(compute_np(mat)))
-
-    return df.mapInArrow(gen, schema=schema)
+def _append_from_matrix(df: DataFrame, vec_col: str, out: str,
+                        out_type: str, compute_np) -> DataFrame:
+    """Append ``out`` computed from the vector column's (n, dim) matrix in
+    one ``aggregate.append_columns`` passthrough — every other column
+    rides along zero-copy, so this is the Arrow-native replacement for a
+    scalar pandas UDF over 10^9 corpus vectors."""
+    def fn(batch):
+        return compute_np(_batch_matrix(batch.column(vec_col)))
+    return append_columns(df, [(out, out_type, lambda: fn)])
 
 
 def with_srp_bucket(df: DataFrame, vec_col: str, dim: int, n_bits: int,
@@ -104,7 +95,7 @@ def with_srp_bucket(df: DataFrame, vec_col: str, dim: int, n_bits: int,
         bits = (mat @ planes.T) > 0
         return (bits @ weights).astype(np.int32)
 
-    return _arrow_append_column(df, vec_col, out, "int", compute)
+    return _append_from_matrix(df, vec_col, out, "int", compute)
 
 
 def with_ivf_lists(df: DataFrame, vec_col: str, centroids: np.ndarray,
@@ -127,7 +118,7 @@ def with_ivf_lists(df: DataFrame, vec_col: str, centroids: np.ndarray,
         return pa.FixedSizeListArray.from_arrays(flat, top.shape[1]) \
             .cast(pa.list_(pa.int32()))
 
-    return _arrow_append_column(df, vec_col, out, "array<int>", compute)
+    return _append_from_matrix(df, vec_col, out, "array<int>", compute)
 
 
 def srp_topk(corpus: DataFrame, probes: DataFrame, k: int = 10, n_bits: int = 8,

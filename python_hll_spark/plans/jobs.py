@@ -207,8 +207,7 @@ def _train_classifier(args) -> None:
                                         tokens_col=args.tokens_col, **kw)
     else:
         model = classifier_train(df, args.label_col,
-                                 text_col=args.text_col,
-                                 id_col=args.id_col, **kw)
+                                 text_col=args.text_col, **kw)
     save_model(spark, model, args.output, args.n_buckets,
                bigrams=not args.no_bigrams)
     print(json.dumps({"first_loss": model["history"][0],
@@ -591,7 +590,6 @@ def main(argv=None) -> None:
     tc.add_argument("--content", choices=("text", "tokens"), default="text")
     tc.add_argument("--text-col", default="text")
     tc.add_argument("--tokens-col", default="tokens")
-    tc.add_argument("--id-col", default="doc_id")
     tc.add_argument("--n-buckets", type=int, default=1 << 18)
     tc.add_argument("--iters", type=int, default=20)
     tc.add_argument("--lr", type=float, default=0.5)

@@ -20,7 +20,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from python_hll_spark.functions.text import with_text_stats
+from python_hll_spark.functions.classifier import score_column
+from python_hll_spark.functions.text import entropy_column, with_text_stats
+from python_hll_spark.operators.aggregate import append_columns
 from python_hll_spark.operators.dedup import near_dedup
 
 
@@ -170,33 +172,39 @@ def prepare_corpus(df: DataFrame, cfg: CorpusFilterConfig | None = None,
         F.sum(keep_pred.cast("long")).alias("rows_after_quality"))
     filtered = observed.where(keep_pred)
 
+    # the model score and the char entropy are appended in ONE passthrough
+    # Arrow pass (every column, text included, crosses into Python once);
+    # no join, no shuffle.  The model filter still runs first, so the
+    # entropy filter counts only the rows it keeps.
+    appended = []
+    if cfg.min_model_score is not None:
+        appended.append(score_column(
+            text_col, cfg.model_buckets, cfg.model_seed, cfg.model_bias,
+            cfg.model_weights, cfg.model_bigrams))
+    with_entropy = cfg.min_entropy is not None or cfg.max_entropy is not None
+    if with_entropy:
+        appended.append(entropy_column(text_col))
+    if appended:
+        filtered = append_columns(filtered, appended)
+
     model_obs = None
     if cfg.min_model_score is not None:
-        from python_hll_spark.functions.classifier import \
-            with_classifier_score
-        # one passthrough Arrow pass appends `score`; no join, no shuffle
-        model_scored = with_classifier_score(
-            filtered, text_col=text_col, n_buckets=cfg.model_buckets,
-            seed=cfg.model_seed, weights=cfg.model_weights,
-            bias=cfg.model_bias, bigrams=cfg.model_bigrams)
         model_pred = F.col("score") >= cfg.min_model_score
         model_obs = Observation("model_filter")
-        filtered = (model_scored
+        filtered = (filtered
                     .observe(model_obs,
                              F.sum(model_pred.cast("long"))
                              .alias("rows_after_model"))
                     .where(model_pred))
 
     entropy_obs = None
-    if cfg.min_entropy is not None or cfg.max_entropy is not None:
-        from python_hll_spark.functions.text import with_char_entropy
-        # one passthrough Arrow pass appends `entropy`; no join, no shuffle
+    if with_entropy:
         lo = cfg.min_entropy if cfg.min_entropy is not None else 0.0
         hi = cfg.max_entropy if cfg.max_entropy is not None else 8.0
         ent_pred = F.col("entropy").between(F.lit(float(lo)),
                                             F.lit(float(hi)))
         entropy_obs = Observation("entropy_filter")
-        filtered = (with_char_entropy(filtered, text_col=text_col)
+        filtered = (filtered
                     .observe(entropy_obs,
                              F.sum(ent_pred.cast("long"))
                              .alias("rows_after_entropy"))
@@ -418,9 +426,18 @@ def refresh_corpus_tokens(new_batch: DataFrame, fp_store: DataFrame,
 
 def _refresh_impl(new_batch, fp_store, near_sigs, near_bands,
                   exact_fn, near_fn, fps_fn):
-    metrics = {"rows_in": new_batch.count()}
-    exact_kept = exact_fn(new_batch, fp_store).persist()
-    metrics["rows_after_exact_tier"] = exact_kept.count()
+    from pyspark.sql import Observation
+
+    # rows_in is observed on the exact tier's own action, not a separate
+    # count; a tier that keeps nothing lets AQE fold its plan into an empty
+    # relation and drop the metrics, so only then is the batch counted
+    obs = Observation("refresh_in")
+    exact_kept = exact_fn(new_batch.observe(
+        obs, F.count(F.lit(1)).alias("rows_in")), fp_store).persist()
+    n_exact = exact_kept.count()
+    metrics = {"rows_in": int(obs.get["rows_in"]) if n_exact
+               else new_batch.count(),
+               "rows_after_exact_tier": n_exact}
     caches: list = []
     outputs: dict = {}
     kept = near_fn(exact_kept, caches, outputs).localCheckpoint()

@@ -1,7 +1,8 @@
 """Round-6 plan audit: dump .explain('formatted') for EVERY registered
 query (at sf0.001 so eager pieces are tiny) and grep each plan for the
 optimization-guide red flags — BatchEvalPython (row-at-a-time Python),
-CartesianProduct, SortMergeJoin, Exchange count, missing PushedFilters.
+CartesianProduct, SortMergeJoin, Exchange count, missing PushedFilters —
+and count its Python crossings (``MapInArrow`` nodes in the plan tree).
 
 Usage: python scripts/plan_audit.py [outdir] [only...]
 Writes <outdir>/<query>.txt and prints one summary line per query.
@@ -53,6 +54,9 @@ def main():
         n_cart = len(re.findall(r"CartesianProduct|BroadcastNestedLoop",
                                 plan))
         n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
+        # the formatted plan repeats each node in its details section;
+        # count the tree only
+        n_mia = plan.split("\n\n", 1)[0].count("MapInArrow")
         n_shj = len(re.findall(r"ShuffledHashJoin", plan))
         flags = []
         if n_bep:
@@ -62,8 +66,9 @@ def main():
         if n_cart:
             flags.append(f"NESTEDLOOP={n_cart}")
         rows.append((name,
-                     f"Exchange={n_ex} ArrowPy={n_aep} BHJ={n_bhj} "
-                     f"SHJ={n_shj} " + (" ".join(flags) if flags else "ok")))
+                     f"Exchange={n_ex} ArrowPy={n_aep} MapInArrow={n_mia} "
+                     f"BHJ={n_bhj} SHJ={n_shj} "
+                     + (" ".join(flags) if flags else "ok")))
     width = max(len(n) for n, _ in rows)
     for name, summary in rows:
         print(f"{name:<{width}}  {summary}")

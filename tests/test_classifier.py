@@ -182,6 +182,25 @@ def test_train_tolerates_empty_docs(spark):
     assert len(model["history"]) == 3
 
 
+def test_train_model_ignores_doc_ids(spark):
+    """The text trainer carries each label beside its doc's tokens, so doc
+    ids play no part: repeated and NULL ids train the same model as unique
+    ones (a join back on the id dropped the NULL-id doc and multiplied the
+    repeated id's rows)."""
+    from python_hll_spark.functions.classifier import classifier_train
+
+    docs = [("alpha beta gamma", 1.0), ("beta gamma delta", 1.0),
+            ("one two three", 0.0), ("two three four", 0.0)]
+    models = [classifier_train(
+        spark.createDataFrame([(i, t, y) for i, (t, y) in zip(ids, docs)],
+                              "doc_id long, text string, y double"),
+        "y", n_buckets=1 << 10, iters=3)
+        for ids in [(1, 1, 2, None), (0, 1, 2, 3)]]
+    m_dup, m_uniq = models
+    assert abs(m_dup["bias"] - m_uniq["bias"]) < 1e-6
+    assert float(np.abs(m_dup["weights"] - m_uniq["weights"]).max()) < 1e-5
+
+
 def test_train_tokens_partition_invariant(spark):
     """The round-6 executor-side gradient tree-merge (16-way salted merge
     feeding an Arrow collect) must leave training numerically unchanged

@@ -134,9 +134,10 @@ def test_dsir_separation_and_resample(spark):
 
 
 def test_dsir_weights_plan_broadcasts_ratio(spark):
-    """Text scoring is the tokenizer plus the tokens kernel, with the
-    buckets-row ratio table broadcast into it: no join and no hash
-    Exchange, and no per-occurrence rows (corpus-scale) are built."""
+    """Text scoring is the tokenizer fused with the tokens kernel in one
+    Arrow pass, with the buckets-row ratio table broadcast into it: no
+    join and no hash Exchange, and no per-occurrence rows (corpus-scale)
+    are built."""
     from python_hll_spark.operators.dsir import (
         bucket_counts, dsir_logratio, dsir_weights)
 
@@ -149,7 +150,7 @@ def test_dsir_weights_plan_broadcasts_ratio(spark):
     assert "Join" not in plan
     assert "hashpartitioning" not in plan
     tree = plan.split("\n\n", 1)[0]
-    assert tree.count("MapInArrow") == 2  # tokenizer, weights kernel
+    assert tree.count("MapInArrow") == 1  # tokenizer + weights kernel
 
 
 def test_dsir_select_end_to_end(spark):

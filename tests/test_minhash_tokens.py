@@ -157,3 +157,55 @@ def test_text_entry_points_are_tokenizer_adapters(spark, family):
     got, want = text_fn(df, toks), tokens_fn(df, toks)
     assert got == want
     assert got  # a vacuous match would prove nothing
+
+
+def _train_input(df, monkeypatch):
+    """The frame ``classifier_train`` hands its token trainer."""
+    from python_hll_spark.functions import classifier
+
+    seen = []
+    real = classifier.classifier_train_tokens
+
+    def spy(frame, *a, **kw):
+        seen.append(frame)
+        return real(frame, *a, **kw)
+
+    monkeypatch.setattr(classifier, "classifier_train_tokens", spy)
+    classifier.classifier_train(df, "y", n_buckets=1 << 8, iters=1)
+    return seen[0]
+
+
+@pytest.mark.parametrize("adapter", [
+    "minhash_signatures", "simhash_signatures", "classifier_scores",
+    "classifier_train", "bucket_counts", "dsir_weights"])
+def test_text_adapters_cross_into_python_once(spark, adapter, monkeypatch):
+    """Each text adapter runs the tokenizer and its tokens kernel in ONE
+    ``MapInArrow``: the word-hash lists never go back to the JVM between
+    them.  ``classifier_train`` carries the label through the tokenizer,
+    so its training input has no join back to the docs either."""
+    from python_hll_spark.functions.classifier import classifier_scores
+    from python_hll_spark.operators import dedup, dsir
+
+    df = spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 5} shared words here", float(i % 2))
+         for i in range(40)], "doc_id long, text string, y double")
+    def lr():
+        return dsir.dsir_logratio(
+            dsir.bucket_counts(df.where("doc_id % 3 = 0"), buckets=64),
+            dsir.bucket_counts(df, buckets=64), buckets=64)
+
+    frames = {
+        "minhash_signatures": lambda: dedup.minhash_signatures(
+            df, num_hashes=32),
+        "simhash_signatures": lambda: dedup.simhash_signatures(df),
+        "classifier_scores": lambda: classifier_scores(df,
+                                                       n_buckets=1 << 8),
+        "classifier_train": lambda: _train_input(df, monkeypatch),
+        "bucket_counts": lambda: dsir.bucket_counts(df, buckets=64),
+        "dsir_weights": lambda: dsir.dsir_weights(df, lr(), buckets=64),
+    }
+    out = frames[adapter]()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "Join" not in plan
+    assert out.count() > 0

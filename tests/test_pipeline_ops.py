@@ -528,6 +528,40 @@ def test_prepare_corpus_entropy_gate(spark, documents):
     assert metrics["rows_after_entropy"] == n_docs
 
 
+def test_prepare_corpus_model_and_entropy_share_one_crossing(spark,
+                                                             documents):
+    """With both the model and the entropy filter on, ``score`` and
+    ``entropy`` are appended in ONE passthrough ``MapInArrow``, and the
+    filters keep their order: the entropy metric counts only the rows the
+    model filter kept."""
+    from python_hll_spark.plans.pipeline import (
+        CorpusFilterConfig, prepare_corpus)
+
+    weights = np.zeros(1 << 12, dtype=np.float32)
+    cfg = CorpusFilterConfig(
+        min_quality=0.0, min_words=1, run_near_dedup=False,
+        min_model_score=0.6, model_weights=weights, model_buckets=1 << 12,
+        min_entropy=3.0, max_entropy=5.0)
+    clean, metrics = prepare_corpus(documents, cfg)
+    # sigmoid(0) = 0.5 < 0.6: the model filter drops every row first
+    assert metrics["rows_after_quality"] > 0
+    assert metrics["rows_after_model"] == 0
+    assert metrics["rows_after_entropy"] == 0
+    clean.unpersist()
+    plan = clean.select("*")._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+
+    kept, m2 = prepare_corpus(documents, CorpusFilterConfig(
+        min_quality=0.0, min_words=1, run_near_dedup=False,
+        min_model_score=0.4, model_weights=weights, model_buckets=1 << 12,
+        min_entropy=3.0, max_entropy=5.0))
+    assert m2["rows_after_model"] == m2["rows_after_quality"]
+    assert m2["rows_after_entropy"] == m2["rows_out"] == kept.count()
+    assert kept.columns == clean.columns
+    assert "score" in kept.columns and "entropy" not in kept.columns
+    kept.unpersist()
+
+
 def test_with_char_entropy_matches_frame(spark, documents):
     """Passthrough entropy == (id, ...) frame kernel, all columns kept."""
     from python_hll_spark.functions.text import (char_entropy_frame,
