@@ -7,15 +7,16 @@ signature kernel, a generator over token-hash array batches that the
 tokens entry point runs as a mapInArrow pass; the text entry points are
 adapters that feed the tokenizer's batches (lowercase, whitespace split,
 murmur3 word hashes) straight into that kernel inside the SAME mapInArrow
-(``map_word_hashes``), so text crosses into Python once.  LSH banding
-turns the quadratic pair search into an equi-join on (band, band_key)
-buckets, which Catalyst shuffles like any other join key.
+(``map_word_hashes``), so text crosses into Python once.  The
+near-dedup paths emit each doc's LSH band keys from that same pass, and
+banding turns the quadratic pair search into one exchange on (band,
+band_key) buckets, expanded to capped pairs by a window per bucket.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from python_hll_spark.functions.hashing import splitmix64
@@ -305,136 +306,144 @@ def _minhash_gen(tokens_col: str, id_col: str, n: int, num_hashes: int):
     return compute
 
 
+def _band_keys(sig, bands: int):
+    """The one band-key function: a ``list<int64>`` signature array ->
+    its ``list<int64>`` band keys, ``bands`` per doc.  Band b of a
+    K-slot signature sums (mod 2^64) the splitmix64(seed=b) hashes of its
+    r = K // bands slots.  An empty-doc (all-sentinel) signature gets a
+    NULL entry, so it bands into no bucket."""
+    import pyarrow as pa
+
+    n = len(sig)
+    flat, _ = list_flat_offsets(sig)
+    sig_mat = flat.reshape(n, -1) if n else flat.reshape(0, 0)
+    K = sig_mat.shape[1]
+    r = K // bands
+    keys = np.empty((n, bands), dtype=np.int64)
+    for b in range(bands):
+        chunk = np.ascontiguousarray(sig_mat[:, b * r:(b + 1) * r])
+        hashed = splitmix64(chunk.ravel(), seed=b).reshape(n, r)
+        keys[:, b] = hashed.view(np.uint64).sum(axis=1).view(np.int64)
+    empty = (sig_mat == _EMPTY_SIG_SENTINEL).all(axis=1)
+    offsets = pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32))
+    return pa.ListArray.from_arrays(offsets, pa.array(keys.ravel()),
+                                    mask=pa.array(empty))
+
+
+def _with_band_keys(sig_gen, bands: int):
+    """Compose a generator of ``(id, sig)`` batches with ``_band_keys``:
+    each batch leaves with a ``bkeys`` column beside ``sig``, in the same
+    Python crossing that computed (or received) the signatures."""
+
+    def compute(batches):
+        for batch in sig_gen(batches):
+            yield batch.append_column("bkeys",
+                                      _band_keys(batch.column("sig"), bands))
+
+    return compute
+
+
+_SIG_BKEYS = "sig array<bigint>, bkeys array<bigint>"
+
+
+def _minhash_band_frame(df: DataFrame, tokens_col: str, n: int,
+                        num_hashes: int, bands: int,
+                        id_col: str) -> DataFrame:
+    """(id, sig, bkeys): the MinHash kernel and the band keys of its
+    signatures in ONE ``mapInArrow`` over a token array column."""
+    id_type = dict(df.dtypes)[id_col]
+    return df.select(id_col, tokens_col).mapInArrow(
+        _with_band_keys(_minhash_gen(tokens_col, id_col, n, num_hashes),
+                        bands),
+        schema=f"`{id_col}` {id_type}, {_SIG_BKEYS}")
+
+
+def _minhash_band_frame_text(df: DataFrame, text_col: str, n: int,
+                             num_hashes: int, bands: int,
+                             id_col: str) -> DataFrame:
+    """``_minhash_band_frame`` over raw text: the tokenizer, the MinHash
+    kernel and the band keys in ONE ``map_word_hashes`` pass."""
+    return map_word_hashes(
+        df, _with_band_keys(_minhash_gen("tokens", id_col, n, num_hashes),
+                            bands),
+        _SIG_BKEYS, text_col, [id_col])
+
+
 def _band_keys_frame(sig_df: DataFrame, bands: int,
                      id_col: str = "doc_id") -> DataFrame:
-    """(id, band, band_key) rows: each signature split into ``bands``
-    hashed band keys; empty-signature (sentinel) docs dropped.  Shared by
-    the dedup self-join and the decontamination train-vs-eval join."""
-
-    def band_rows(batches):
-        import pyarrow as pa
-        for batch in batches:
-            sig = batch.column("sig")
-            n = len(sig)
-            if n == 0:
-                continue
-            flat, _ = list_flat_offsets(sig)
-            K = len(flat) // n
-            sig_mat = flat.reshape(n, K)
-            keep = ~(sig_mat == _EMPTY_SIG_SENTINEL).all(axis=1)
-            if not keep.any():
-                continue
-            sig_mat = sig_mat[keep]
-            n2 = len(sig_mat)
-            r = K // bands
-            keys = np.empty((n2, bands), dtype=np.int64)
-            for b in range(bands):
-                chunk = sig_mat[:, b * r:(b + 1) * r]
-                hashed = splitmix64(np.ascontiguousarray(chunk).ravel(),
-                                    seed=b).reshape(n2, r)
-                keys[:, b] = hashed.view(np.uint64).sum(axis=1).view(np.int64)
-            take_idx = np.repeat(np.nonzero(keep)[0], bands)
-            yield pa.RecordBatch.from_arrays([
-                batch.column(id_col).take(pa.array(take_idx)),
-                pa.array(np.tile(np.arange(bands, dtype=np.int32), n2)),
-                pa.array(keys.ravel()),
-            ], names=[id_col, "band", "band_key"])
-
-    id_type = dict(sig_df.dtypes)[id_col]
-    return sig_df.mapInArrow(
-        band_rows, schema=f"`{id_col}` {id_type}, band int, band_key bigint")
+    """(id, band, band_key) rows: ``posexplode`` of each doc's band keys,
+    so empty-signature (sentinel) docs, whose ``bkeys`` is NULL, yield no
+    row.  A frame from the fused MinHash pass already carries ``bkeys``
+    and bands in the JVM alone; a plain (id, sig) frame gets its keys from
+    one ``mapInArrow`` of ``_band_keys`` first.  Shared by the dedup
+    bucket join, the store's ``bands`` rows and decontamination's
+    train-vs-eval join."""
+    if "bkeys" not in sig_df.columns:
+        id_type = dict(sig_df.dtypes)[id_col]
+        sig_df = sig_df.select(id_col, "sig").mapInArrow(
+            _with_band_keys(lambda batches: batches, bands),
+            schema=f"`{id_col}` {id_type}, {_SIG_BKEYS}")
+    return sig_df.select(id_col,
+                         F.posexplode("bkeys").alias("band", "band_key"))
 
 
-#: driver-safety cap on the oversize-bucket key collect: above this many
-#: oversize keys the plan falls back to an executor-side persisted frame
-#: (lazy joins) instead of materializing the set on the driver.
-_MAX_OVERSIZE_COLLECT = 65536
+def _capped_bucket_pairs(rows: DataFrame, bucket_cols: list,
+                         id_col: str, max_bucket: int) -> DataFrame:
+    """Candidate (id_a, id_b) pairs within each bucket (``bucket_cols``)
+    of ``rows``, degrading buckets larger than ``max_bucket`` to a star
+    against the bucket's min id: O(B) edges instead of O(B^2), and
+    connectivity is kept.  Shared by MinHash-LSH band buckets and SimHash
+    chunk buckets.
 
-
-def _capped_bucket_pairs(rows: DataFrame, bucket_cols: list, id_col: str,
-                         id_type, max_bucket: int,
-                         max_oversize_keys: int = _MAX_OVERSIZE_COLLECT):
-    """Self-join ``rows`` within each bucket (``bucket_cols``) into
-    candidate (id_a, id_b) pairs, degrading buckets larger than
-    ``max_bucket`` to a star against the bucket's min id — O(B) edges
-    instead of O(B^2), connectivity preserved.  Shared by MinHash-LSH band
-    buckets, SimHash chunk buckets, and SRP embedding buckets.
-
-    Returns ``(pairs, oversize_cache)``.  Driver safety: the oversize-key
-    set is bounded by rows/max_bucket, which is KBs in any realistic
-    corpus but corpus-proportional under adversarial dup density — so the
-    eager scan collects at most ``max_oversize_keys + 1`` rows
-    (``limit()``-bounded job).  Within the cap the keys broadcast from the
-    driver (one job, no re-planned aggregation per consumer); beyond it
-    they stay executor-side as a persisted frame joined lazily (AQE may
-    still broadcast at runtime if the built relation turns out small) and
-    the persist handle is returned as ``oversize_cache`` for the caller to
-    release — ``None`` on the collect path."""
-    big_agg = (rows.groupBy(*bucket_cols)
-               .agg(F.count("*").alias("__bsz"),
-                    F.min(id_col).alias("__rep"))
-               .where(F.col("__bsz") > max_bucket)
-               .select(*bucket_cols, "__rep"))
-    big_rows = big_agg.limit(max_oversize_keys + 1).collect()
-    oversize_cache = None
-    if len(big_rows) > max_oversize_keys:
-        big_rows = None
-        oversize_cache = big_agg.persist()
-        bbig = oversize_cache
-    elif big_rows:
-        big = rows.sparkSession.createDataFrame(
-            big_rows, schema=rows.select(*bucket_cols).schema
-            .add("__rep", id_type))
-        bbig = F.broadcast(big)
-    else:
-        # no oversize buckets (the overwhelmingly common case): the plan
-        # collapses to the bare self-join, no anti-join, no star branch
-        bbig = None
-    if bbig is not None:
-        small = rows.join(bbig.select(*bucket_cols), bucket_cols, "left_anti")
-        pairs_large = (rows.join(bbig, bucket_cols)
-                       .where(F.col(id_col) != F.col("__rep"))
-                       .select(F.col("__rep").alias("id_a"),
-                               F.col(id_col).alias("id_b")))
-    else:
-        small, pairs_large = rows, None
-    # shuffle-hash beats sort-merge here: both sides are the same large
-    # narrow frame, keys are near-unique, and the bucket cap already
-    # bounds per-partition skew — no reason to sort 2x the rows
-    a, b = small.alias("a"), small.hint("shuffle_hash").alias("b")
-    pairs_small = (a.join(b, on=bucket_cols)
-                   .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-                   .select(F.col(f"a.{id_col}").alias("id_a"),
-                           F.col(f"b.{id_col}").alias("id_b")))
-    pairs = pairs_small if pairs_large is None \
-        else pairs_small.unionByName(pairs_large)
-    return pairs.distinct(), oversize_cache
+    Lazy, and ONE exchange on ``bucket_cols``: a window over the bucket
+    gives its size and min id, singleton buckets drop out, and a second
+    window over the same partitioning collects the member ids of buckets
+    within the cap (at most ``max_bucket`` of them; an oversize bucket
+    collects none).  One ``explode`` then emits every ``i < j`` pair of a
+    small bucket and a ``(min id, id)`` star edge for each other member
+    of an oversize bucket; ``distinct`` merges pairs found in several
+    buckets."""
+    w = Window.partitionBy(*bucket_cols)
+    sized = (rows.select(*bucket_cols, id_col,
+                         F.count(F.lit(1)).over(w).alias("__bsz"),
+                         F.min(id_col).over(w).alias("__rep"))
+             .where(F.col("__bsz") > 1))
+    small = F.col("__bsz") <= max_bucket
+    members = sized.select(
+        id_col, "__rep", small.alias("__small"),
+        F.collect_list(F.when(small, F.col(id_col))).over(w).alias("__ids"))
+    anchor = F.when(F.col("__small"), F.col(id_col)).otherwise(F.col("__rep"))
+    partners = F.when(F.col("__small"), F.col("__ids")) \
+        .otherwise(F.array(F.col(id_col)))
+    return (members.select(anchor.alias("id_a"),
+                           F.explode(F.filter(partners,
+                                              lambda j: j > anchor))
+                           .alias("id_b"))
+            .distinct())
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, bands: int = 32,
                         id_col: str = "doc_id",
                         max_bucket: int = 512,
-                        persist_bands: bool = True,
-                        cache_out: list | None = None,
-                        max_oversize_keys: int = _MAX_OVERSIZE_COLLECT,
-                        banded: DataFrame | None = None) -> DataFrame:
+                        cache_out: list | None = None) -> DataFrame:
     """Band the signatures and self-join buckets -> (id_a, id_b, est_jaccard).
 
     est_jaccard = fraction of matching signature positions.
 
-    NOTE: calling this runs ONE eager job (the bounded oversize-bucket key
-    scan, ``limit(max_oversize_keys + 1)``) before returning the lazy pair
-    frame.  Persisted frames created here (the banding cache; the
-    oversize-key frame on the adversarial fallback path) are appended to
-    ``cache_out`` when given — pipeline drivers pass a list and unpersist
-    its entries once the edge list is materialized.  Without ``cache_out``
-    the caches live until the session releases them.
+    Lazy: no Spark job runs before the returned frame's first action, and
+    the band rows cross ONE exchange (``_capped_bucket_pairs``).  A frame
+    from the fused MinHash pass (with ``bkeys``) bands in the JVM; a plain
+    (id, sig) frame gets its band keys from one ``mapInArrow``.  Nothing
+    is persisted here, so ``cache_out`` (kept for callers that pass a
+    list to release) receives no entry; ``sig_df`` is read three times
+    (banding and both sides of the scoring join), so pass it persisted.
 
     Scale hardening (the two ways banded LSH melts down at 100 TB):
     - docs with zero shingles keep the int64-max sentinel in every
       signature slot, so they'd all share every band key and pile into ONE
-      bucket whose self-join emits O(E^2) pairs — they're dropped before
-      banding (an empty doc has no meaningful Jaccard neighbours);
+      bucket whose self-join emits O(E^2) pairs — they get NULL band keys
+      and never enter a bucket (an empty doc has no meaningful Jaccard
+      neighbours);
     - buckets larger than ``max_bucket`` switch from full pairwise
       expansion (O(B^2) pairs) to a star against the bucket's min id
       (O(B) pairs): connected-components connectivity survives, the
@@ -442,31 +451,8 @@ def lsh_candidate_pairs(sig_df: DataFrame, bands: int = 32,
       buckets are hash-collision floods or exact-dup clusters, and exact
       dups should be removed by dedup_exact first anyway.
     """
-
-    if banded is None:
-        banded = _band_keys_frame(sig_df, bands, id_col)
-        if persist_bands:
-            # the banded frame feeds THREE consumers (sizes agg, the small
-            # self-join, the star branch); persisting it runs the banding
-            # kernel once instead of three times
-            banded = banded.persist()
-            if cache_out is not None:
-                cache_out.append(banded)
-    # else: caller supplies an (id, band, band_key) frame it already
-    # persists/releases — the incremental probe shares ONE banding pass
-    # between the within-batch LSH and the store probe
-
-    # Oversize buckets are BOUNDED in number: at most rows/max_bucket =
-    # bands*N/max_bucket of them.  The eager size scan (which also
-    # materializes the banding cache for the downstream consumers)
-    # replaces the lazy sub-DAG that each of the three consumers would
-    # otherwise re-plan — three identical shuffles at 2M docs.
-    pairs, oversize_cache = _capped_bucket_pairs(
-        banded, ["band", "band_key"], id_col,
-        sig_df.schema[id_col].dataType, max_bucket, max_oversize_keys)
-    if oversize_cache is not None and cache_out is not None:
-        cache_out.append(oversize_cache)
-
+    pairs = _capped_bucket_pairs(_band_keys_frame(sig_df, bands, id_col),
+                                 ["band", "band_key"], id_col, max_bucket)
     sig_a = sig_df.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sig_df.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     joined = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
@@ -482,15 +468,14 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
                         max_bucket: int = 512) -> DataFrame:
     """Near-dup candidate pairs above ``threshold`` estimated Jaccard.
 
-    NOTE: runs one eager bounded job (the oversize-bucket key scan in
-    ``lsh_candidate_pairs``) before returning the lazy pair frame.
-
-    Signatures are read 3x downstream (banding + both join sides) and are
-    tiny (n_docs x num_hashes int64), so they're persisted rather than
+    Signatures and their band keys come from one pass; they are read 3x
+    downstream (banding + both join sides) and are tiny (n_docs x
+    (num_hashes + bands) int64), so they're persisted rather than
     recomputing the shingle+minhash pipeline per consumer; the cache lives
     until the session drops it.  Callers that own cache lifecycles use
     ``near_dedup``."""
-    sigs = minhash_signatures(df, text_col, n, num_hashes, id_col).persist()
+    sigs = _minhash_band_frame_text(df, text_col, n, num_hashes, bands,
+                                    id_col).persist()
     cand = lsh_candidate_pairs(sigs, bands, id_col, max_bucket=max_bucket)
     return cand.where(F.col("est_jaccard") >= threshold)
 
@@ -570,13 +555,12 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
                        id_col: str = "doc_id",
                        sigs: DataFrame | None = None,
                        max_bucket: int = 512,
-                       cache_out: list | None = None,
-                       max_oversize_keys: int = _MAX_OVERSIZE_COLLECT
-                       ) -> DataFrame:
+                       cache_out: list | None = None) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, bucketed on 16-bit chunks
     (two of four chunks must match exactly when distance <= 3).
 
-    Scale hardening (same ``__bsz``/star pattern as ``lsh_candidate_pairs``):
+    Scale hardening (the ``_capped_bucket_pairs`` star rule of
+    ``lsh_candidate_pairs``, lazy and one exchange on the chunk bucket):
     there are only 4 x 65,536 possible chunk buckets, so at web scale every
     bucket grows linearly with the corpus and a full pairwise self-join is
     quadratic per bucket.  Buckets larger than ``max_bucket`` degrade to a
@@ -602,14 +586,8 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
                      .bitwiseAND(F.lit(0xFFFF)).alias("ckey"))
             for i in range(4)])).alias("c")
     ).select(id_col, "c.chunk", "c.ckey")
-    # same capped-bucket shape as lsh_candidate_pairs: the oversize set is
-    # bounded by 4*N/max_bucket rows, ONE eager bounded size scan, and
-    # with no oversize buckets the plan is the bare self-join
-    pairs, oversize_cache = _capped_bucket_pairs(
-        chunks, ["chunk", "ckey"], id_col, sigs.schema[id_col].dataType,
-        max_bucket, max_oversize_keys)
-    if oversize_cache is not None and cache_out is not None:
-        cache_out.append(oversize_cache)
+    pairs = _capped_bucket_pairs(chunks, ["chunk", "ckey"], id_col,
+                                 max_bucket)
     sh_a = sigs.select(F.col(id_col).alias("id_a"),
                        F.col("simhash").alias("sh_a"))
     sh_b = sigs.select(F.col(id_col).alias("id_b"),
@@ -697,7 +675,11 @@ def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
     union-find on the driver, each node labeled with its component's min
     member id — the exact contract of the distributed paths (and checked
     against them in tests), in one createDataFrame instead of an iteration
-    loop of checkpoint+collect actions."""
+    loop of checkpoint+collect actions.  The frame is built from an Arrow
+    table, so it plans as a ``LocalTableScan`` with size statistics and
+    the keep anti-joins downstream can broadcast it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
     from pyspark.sql.types import StructField, StructType
 
     parent: dict = {}
@@ -724,10 +706,14 @@ def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
         cur = comp_min.get(root)
         if cur is None or node < cur:
             comp_min[root] = node
-    rows = [(n, comp_min[find(n)]) for n in parent]
+    ids = list(parent)
+    arrow_type = to_arrow_type(id_type)
+    table = pa.table({
+        "id": pa.array(ids, arrow_type),
+        "component": pa.array([comp_min[find(n)] for n in ids], arrow_type)})
     schema = StructType([StructField("id", id_type, False),
                          StructField("component", id_type, False)])
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(table, schema)
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
@@ -747,9 +733,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     when the edge count is <= ``small_cap`` (default 2^20 ~ 16 MB of id
     pairs on the driver) the components are solved with ONE bounded
     CollectLimit action and a driver-side union-find, replacing the
-    2-actions-per-iteration distributed loop.  Above the cap the probe is
-    discarded and the distributed path runs — at that scale the one
-    bounded collect is noise next to the iterations it tried to save.
+    2-actions-per-iteration distributed loop; its (id, component) frame
+    is built from an Arrow table, a ``LocalTableScan`` with size
+    statistics, so a join against it can broadcast.  Above the cap the
+    probe is discarded and the distributed path runs — at that scale the
+    one bounded collect is noise next to the iterations it tried to save.
     Results are identical (component = min member id).  Pass
     ``small_cap=None`` to force the distributed path (the convergence /
     checkpoint tests do).
@@ -1134,13 +1122,14 @@ def incremental_near_dedup(new_df: DataFrame, store_sigs: DataFrame,
     ``near_store_write(..., mode="append")``.  ``survivor_sigs`` reads the
     persist handles in ``cache_out``, so materialize it (e.g.
     ``localCheckpoint``) before unpersisting them or appending to the
-    store the lineage probes.  The persist handles (signatures, banding
-    caches, store-probe hits) land in ``cache_out`` when given, else live
-    until the session releases them.  ``fan_out`` (default True)
+    store the lineage probes.  The persist handles (the batch signatures
+    with their band keys, and the store-probe hits) land in ``cache_out``
+    when given, else live until the session releases them.  ``fan_out`` (default True)
     rebalances the batch before the signature kernel — see
     ``_fan_out_batch`` for why a derived batch needs it."""
     new_df = _fan_out_batch(new_df, fan_out)
-    sigs_all = minhash_signatures(new_df, text_col, n, num_hashes, id_col)
+    sigs_all = _minhash_band_frame_text(new_df, text_col, n, num_hashes,
+                                        bands, id_col)
     return _incremental_near_dedup_impl(new_df, sigs_all, store_sigs,
                                         store_bands, threshold, bands,
                                         id_col, cache_out, outputs)
@@ -1161,8 +1150,8 @@ def incremental_near_dedup_tokens(new_df: DataFrame, store_sigs: DataFrame,
     collapse, the ``outputs["survivor_sigs"]`` contract, and the
     ``fan_out`` batch rebalance (``_fan_out_batch``) are shared."""
     new_df = _fan_out_batch(new_df, fan_out)
-    sigs_all = minhash_signatures_tokens(new_df, tokens_col, n, num_hashes,
-                                         id_col)
+    sigs_all = _minhash_band_frame(new_df, tokens_col, n, num_hashes, bands,
+                                   id_col)
     return _incremental_near_dedup_impl(new_df, sigs_all, store_sigs,
                                         store_bands, threshold, bands,
                                         id_col, cache_out, outputs)
@@ -1179,19 +1168,12 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     from pyspark import InheritableThread
 
     caches = cache_out if cache_out is not None else []
+    # (id, sig, bkeys) from the ONE signature pass, shared by the
+    # within-batch LSH, the store probe and the store-append slice; both
+    # band-row frames below are a JVM posexplode of the cached bkeys
     sigs_all = sigs_all.persist()
     caches.append(sigs_all)
-
-    # ONE banding pass shared by the within-batch LSH and the store probe
-    # (the probe used to re-band the post-collapse survivors — a second
-    # kernel pass over ~the whole batch).  The LSH's eager oversize-bucket
-    # scan below is the action that materializes sigs_all + banded, so the
-    # two concurrent consumers read the cache instead of racing to compute
-    # the first touch — and no extra materialization job is paid.
-    banded = _band_keys_frame(sigs_all, bands, id_col).persist()
-    caches.append(banded)
-    cand0 = lsh_candidate_pairs(sigs_all, bands, id_col, cache_out=caches,
-                                banded=banded)
+    cand0 = lsh_candidate_pairs(sigs_all, bands, id_col)
 
     # store probe, DECOUPLED from the within-batch collapse: probing with
     # ALL batch signatures (not just within-batch survivors) is
@@ -1200,7 +1182,8 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     # against post-collapse frames — and it lets the two store scans run
     # on a background thread OVERLAPPING the connected-components actions
     # below instead of serializing behind them.
-    b_bands = banded.withColumnRenamed(id_col, "__new_id")
+    b_bands = _band_keys_frame(sigs_all, bands, id_col) \
+        .withColumnRenamed(id_col, "__new_id")
     cand = (store_bands.join(F.broadcast(b_bands), ["band", "band_key"])
             .select(F.col(id_col).alias("__store_id"), "__new_id")
             .distinct())
@@ -1265,7 +1248,8 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
         drop_ids = (comps.where(F.col("id") != F.col("component"))
                     .select(F.col("id").alias(id_col)))
         batch = new_df.join(drop_ids, id_col, "left_anti")
-        b_sigs = sigs_all.join(drop_ids, id_col, "left_anti")
+        b_sigs = sigs_all.select(id_col, "sig").join(drop_ids, id_col,
+                                                     "left_anti")
     except BaseException:
         sc.cancelJobsWithTag(probe_tag)
         raise
@@ -1291,12 +1275,14 @@ def near_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                n: int = 3) -> DataFrame:
     """Near-duplicate REMOVAL of raw text: MinHash-LSH pair discovery ->
     connected components -> keep the min-id representative per duplicate
-    cluster.  Adapter: ``minhash_signatures`` (tokenizer + the MinHash
-    kernel) then the pipeline shared with ``near_dedup_tokens``.
+    cluster.  Adapter: the tokenizer, the MinHash kernel and the band
+    keys in one ``map_word_hashes`` pass, then the pipeline shared with
+    ``near_dedup_tokens``.
 
     Returns the deduplicated rows of ``df`` (all original columns)."""
     return _near_dedup_impl(
-        df, minhash_signatures(df, text_col, n, num_hashes, id_col),
+        df, _minhash_band_frame_text(df, text_col, n, num_hashes, bands,
+                                     id_col),
         threshold, bands, id_col)
 
 
@@ -1307,15 +1293,19 @@ def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
     """Near-duplicate REMOVAL over PRE-TOKENIZED docs (the input_hint table
     shape) — the composition a 100 TB tokenized corpus actually runs:
 
-        minhash_signatures_tokens (one shuffle-free Arrow pass)
-        -> lsh_candidate_pairs    (banded, bucket-capped 8-byte-key join)
+        MinHash kernel + band keys (one shuffle-free Arrow pass emitting
+                                   (id, sig, bkeys))
+        -> lsh_candidate_pairs    (JVM posexplode of bkeys, ONE exchange
+                                   on (band, band_key), capped buckets)
         -> connected_components   (min-label, or a driver union-find when
                                    the edge list is small)
-        -> keep min-id representative per duplicate cluster
+        -> keep min-id representative per duplicate cluster (an
+           anti-join that broadcasts the driver-built components frame)
 
-    Returns the deduplicated rows of ``df`` (all original columns)."""
+    No Spark job runs before connected components collects the edge
+    list.  Returns the deduplicated rows of ``df`` (all original columns)."""
     return _near_dedup_impl(
-        df, minhash_signatures_tokens(df, tokens_col, n, num_hashes, id_col),
+        df, _minhash_band_frame(df, tokens_col, n, num_hashes, bands, id_col),
         threshold, bands, id_col)
 
 
@@ -1327,16 +1317,16 @@ def _near_dedup_impl(df: DataFrame, sigs: DataFrame, threshold: float,
     ``connected_components`` stops at ``max_iter`` without converging
     (``on_nonconverged="warn"``, the default), labels are not yet the
     cluster minimum; see its docstring for what the rule then keeps."""
+    # (id, sig, bkeys) is read three times: banding and both sides of the
+    # scoring join
     sigs = sigs.persist()
-    caches = [sigs]
-    cand = lsh_candidate_pairs(sigs, bands, id_col, cache_out=caches)
+    cand = lsh_candidate_pairs(sigs, bands, id_col)
     pairs = (cand.where(F.col("est_jaccard") >= threshold)
              .select("id_a", "id_b"))
-    # connected_components materializes the edge list eagerly (checkpoint +
-    # per-iteration action), so the signature/banding caches can go here
+    # connected_components materializes the edge list eagerly (a collect,
+    # or checkpoint + per-iteration actions), so the cache can go here
     comps = connected_components(pairs)
-    for c in caches:
-        c.unpersist()
+    sigs.unpersist()
     # component IS the min member id (the connected_components contract),
     # so the keep-representative rule is a filter, not an agg + join
     drop_ids = (comps.where(F.col("id") != F.col("component"))

@@ -395,7 +395,7 @@ def refresh_corpus(new_batch: DataFrame, fp_store: DataFrame,
             df, near_sigs, near_bands, threshold=threshold,
             num_hashes=num_hashes, bands=bands, n=n, text_col=text_col,
             id_col=id_col, cache_out=caches, outputs=outputs),
-        fps_fn=lambda df: fingerprint_frame(df, text_col))
+        fps_fn=lambda df: fingerprint_frame(df, text_col), id_col=id_col)
 
 
 def refresh_corpus_tokens(new_batch: DataFrame, fp_store: DataFrame,
@@ -421,11 +421,12 @@ def refresh_corpus_tokens(new_batch: DataFrame, fp_store: DataFrame,
             df, near_sigs, near_bands, threshold=threshold,
             num_hashes=num_hashes, bands=bands, n=n, tokens_col=tokens_col,
             id_col=id_col, cache_out=caches, outputs=outputs),
-        fps_fn=lambda df: fingerprint_frame_tokens(df, tokens_col))
+        fps_fn=lambda df: fingerprint_frame_tokens(df, tokens_col),
+        id_col=id_col)
 
 
 def _refresh_impl(new_batch, fp_store, near_sigs, near_bands,
-                  exact_fn, near_fn, fps_fn):
+                  exact_fn, near_fn, fps_fn, id_col):
     from pyspark.sql import Observation
 
     # rows_in is observed on the exact tier's own action, not a separate
@@ -440,7 +441,16 @@ def _refresh_impl(new_batch, fp_store, near_sigs, near_bands,
                "rows_after_exact_tier": n_exact}
     caches: list = []
     outputs: dict = {}
-    kept = near_fn(exact_kept, caches, outputs).localCheckpoint()
+    if n_exact:
+        kept = near_fn(exact_kept, caches, outputs).localCheckpoint()
+    else:
+        # nothing left for the near tier to probe; running it on the empty
+        # batch left an AQE broadcast stage running after this call
+        # returned (its plan had folded to an empty relation)
+        kept = exact_kept.localCheckpoint()
+        id_type = dict(exact_kept.dtypes)[id_col]
+        outputs["survivor_sigs"] = exact_kept.sparkSession.createDataFrame(
+            [], f"`{id_col}` {id_type}, sig array<bigint>")
     metrics["rows_out"] = kept.count()
     # the store-append signature frame is SLICED from the near tier's
     # persisted batch signatures (outputs contract) — ONE signature-kernel

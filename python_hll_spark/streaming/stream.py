@@ -221,15 +221,25 @@ def stateful_quantiles_stream(stream_df: DataFrame, group_col: str,
     (g, quantiles, n_rows, state) on every update.  Values go through
     ``sketch_quantiles``'s stage 1 and finalizer, so NULL values count in
     ``n_rows`` but not in the sketch, and an all-NULL group is still
-    emitted (with NULL quantiles).  Completes the streaming trio (NDV:
-    ``stateful_hll_stream``, heavy hitters: ``stateful_topk_stream``) —
-    all three ride the same mergeable-state design, so a restart resumes
-    from the checkpointed sketch bytes."""
+    emitted (with NULL quantiles).  An empty sketch's quantiles leave the
+    state function as one NULL array and are expanded to NULL elements in
+    the JVM: NULL elements inside an Arrow-backed array break Spark's row
+    decoding (the memory sink fails with ``EXPRESSION_DECODING_FAILED``).
+    Completes the streaming trio (NDV: ``stateful_hll_stream``, heavy
+    hitters: ``stateful_topk_stream``) — all three ride the same
+    mergeable-state design, so a restart resumes from the checkpointed
+    sketch bytes."""
     spec = KLLSpec(KLLConfig(k=k))
     keyed = stream_df.select(F.col(group_col).alias("g"), value_col)
-    return _fold_stream(quantile_partials(keyed, value_col, ["g"], spec),
-                        spec, "quantiles", "array<double>",
-                        lambda blob: quantiles_of(spec, blob, qs))
+
+    def finalize(blob):
+        q = quantiles_of(spec, blob, qs)
+        return None if np.isnan(q).all() else q
+
+    out = _fold_stream(quantile_partials(keyed, value_col, ["g"], spec),
+                       spec, "quantiles", "array<double>", finalize)
+    return out.withColumn("quantiles", F.coalesce(
+        "quantiles", F.array_repeat(F.lit(None).cast("double"), len(qs))))
 
 
 def dedup_stream(stream_df: DataFrame, text_col: str = "text",

@@ -311,41 +311,73 @@ def test_prepare_corpus_optional_stages_single_pass(spark):
     clean.unpersist()
 
 
-# ------------------------------------- round-4: driver-safe oversize scan
-def test_oversize_collect_fallback_equivalence(spark):
-    """When the oversize-key set exceeds max_oversize_keys the plan must
-    NOT materialize it on the driver: it falls back to an executor-side
-    persisted frame joined lazily.  Both paths must emit the identical
-    pair set, and the fallback's persist handle must surface through
-    cache_out for the caller to release."""
-    from python_hll_spark.operators.dedup import (lsh_candidate_pairs,
-                                                  minhash_signatures)
+# ---------------------------------------------- capped bucket pair rule
+def _capped_reference(bucket_rows, max_bucket):
+    """The capped pair rule in plain Python over (bucket, id) rows: every
+    i < j pair in a bucket of 2..max_bucket ids, and a star from the
+    bucket's min id to each other member above that size."""
+    buckets = {}
+    for key, i in bucket_rows:
+        buckets.setdefault(key, []).append(i)
+    pairs = set()
+    for ids in buckets.values():
+        if len(ids) < 2:
+            continue
+        if len(ids) <= max_bucket:
+            pairs |= {(a, b) for a in ids for b in ids if a < b}
+        else:
+            rep = min(ids)
+            pairs |= {(rep, i) for i in ids if i != rep}
+    return pairs
 
-    # 30 distinct duplicate clusters x 12 docs: every cluster floods its
-    # own band buckets past max_bucket=4 -> bands*30 oversize keys.
+
+@pytest.fixture(scope="module")
+def flood_docs(spark):
+    """30 duplicate clusters x 12 docs, plus singletons and empty docs."""
     rows = []
     for c in range(30):
         text = (f"cluster {c} body token{c * 7} filler words repeated "
                 f"enough to produce shingles for group {c} ") * 3
         rows += [(c * 100 + i, text) for i in range(12)]
-    sigs = minhash_signatures(_docs(spark, rows), num_hashes=32, n=3).persist()
+    rows += [(10000 + i, f"singleton number {i} with its own words w{i} "
+                         f"z{i * 3}") for i in range(20)]
+    rows += [(20000 + i, "") for i in range(15)]
+    return _docs(spark, rows)
 
-    def pair_set(max_keys, caches):
-        p = lsh_candidate_pairs(sigs, bands=8, max_bucket=4,
-                                cache_out=caches, max_oversize_keys=max_keys)
-        return {(r["id_a"], r["id_b"]) for r in
-                p.select("id_a", "id_b").collect()}
 
-    collect_caches, fallback_caches = [], []
-    via_collect = pair_set(10 ** 6, collect_caches)
-    via_fallback = pair_set(5, fallback_caches)
-    assert via_collect == via_fallback
-    assert via_collect  # the flood actually produced edges
-    # fallback persisted one extra frame (the oversize-key agg)
-    assert len(fallback_caches) == len(collect_caches) + 1
-    for c in collect_caches + fallback_caches:
-        c.unpersist()
+@pytest.mark.parametrize("max_bucket", [11, 12, 13])
+def test_capped_bucket_pairs_match_reference(spark, flood_docs, max_bucket):
+    """The lazy window-capped bucket join emits exactly the capped rule's
+    pairs, on both sides of the cluster size (12): LSH band buckets
+    against band keys collected to the driver, SimHash chunk buckets
+    against signatures collected to the driver."""
+    from python_hll_spark.operators.dedup import (
+        _band_keys_frame, lsh_candidate_pairs, minhash_signatures,
+        simhash_near_pairs, simhash_signatures)
+
+    sigs = minhash_signatures(flood_docs, num_hashes=32, n=3).persist()
+    bands = _band_keys_frame(sigs, 8).collect()
+    # empty docs have no band rows
+    assert not {r["doc_id"] for r in bands} & set(range(20000, 20015))
+    want = _capped_reference(
+        [((r["band"], r["band_key"]), r["doc_id"]) for r in bands],
+        max_bucket)
+    got = {(r["id_a"], r["id_b"]) for r in
+           lsh_candidate_pairs(sigs, bands=8, max_bucket=max_bucket)
+           .select("id_a", "id_b").collect()}
+    assert got == want and got
     sigs.unpersist()
+
+    simhash = {r["doc_id"]: r["simhash"] for r in
+               simhash_signatures(flood_docs).collect()}
+    chunk_rows = [((c, (h >> (16 * c)) & 0xFFFF), i)
+                  for i, h in simhash.items() for c in range(4)]
+    want = {(a, b) for a, b in _capped_reference(chunk_rows, max_bucket)
+            if bin((simhash[a] ^ simhash[b]) & (2 ** 64 - 1)).count("1") <= 6}
+    got = {(r["id_a"], r["id_b"]) for r in
+           simhash_near_pairs(flood_docs, max_hamming=6,
+                              max_bucket=max_bucket).collect()}
+    assert got == want and got
 
 
 def test_tokens_short_batch_large_shingle_no_crash(spark):

@@ -192,13 +192,18 @@ def test_incremental_near_dedup_store_roundtrip(spark, tmp_path):
         (111, fresh + " minor twist"),         # within-batch near-dup of 110
     ], "doc_id long, text string")
 
-    caches = []
+    caches, outputs = [], {}
     kept = incremental_near_dedup(batch, sigs, bnds, threshold=0.8,
                                   num_hashes=64, bands=16, n=3,
-                                  cache_out=caches)
+                                  cache_out=caches, outputs=outputs)
     got = sorted(r["doc_id"] for r in kept.select("doc_id").collect())
     assert got == [110], got
     assert set(kept.columns) == {"doc_id", "text"}
+    # the store-append frame keeps the store schema: the band keys the
+    # signature pass emits beside ``sig`` stay out of the store
+    assert outputs["survivor_sigs"].columns == ["doc_id", "sig"]
+    assert sigs.columns == ["doc_id", "sig"]
+    assert bnds.columns == ["doc_id", "band", "band_key"]
     for c in caches:
         c.unpersist()
 
@@ -405,6 +410,45 @@ def test_refresh_corpus_edge_shapes(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [10, 11]
     sigs.unpersist()
     esigs.unpersist()
+
+
+def test_refresh_corpus_leaves_no_job_running(spark):
+    """No Spark job of a refresh outlives the call.  Two refreshes of the
+    sf0.01 documents against a store of the even ids: a mixed batch, then
+    a batch of exact re-crawls that the exact tier empties (its near tier
+    used to leave an AQE broadcast stage running after the return)."""
+    from conftest import TESTDATA_DIR
+
+    from python_hll_spark.operators.dedup import (_band_keys_frame,
+                                                  fingerprint_frame,
+                                                  minhash_signatures)
+    from python_hll_spark.plans.pipeline import refresh_corpus
+
+    docs = spark.read.parquet(f"{TESTDATA_DIR}/sf0.01/documents.parquet") \
+        .select("doc_id", "text")
+    store = docs.where("doc_id % 2 = 0")
+    fp_store = fingerprint_frame(store)
+    sigs = minhash_signatures(store, num_hashes=64).persist()
+    bands = _band_keys_frame(sigs, 16).persist()
+    copies = store.select((F.col("doc_id") + 10 ** 6).alias("doc_id"), "text")
+    mixed = docs.where("doc_id % 2 = 1").unionByName(
+        copies.where("doc_id % 4 = 0"))
+    exact = copies.where("doc_id % 4 = 2")
+    sc = spark.sparkContext
+
+    def refresh(batch):
+        _, m, _, new_sigs = refresh_corpus(batch, fp_store, sigs, bands)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getActiveJobsIds() == []
+        assert new_sigs.columns == ["doc_id", "sig"]
+        return m
+
+    m = refresh(mixed)
+    assert m["rows_after_exact_tier"] == docs.where("doc_id % 2 = 1").count()
+    m = refresh(exact)
+    assert m["rows_in"] > 0 and m["rows_after_exact_tier"] == m["rows_out"] == 0
+    sigs.unpersist()
+    bands.unpersist()
 
 
 def test_refresh_corpus_tokens_two_tiers(spark):

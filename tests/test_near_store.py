@@ -206,12 +206,15 @@ def test_refresh_single_signature_pass(spark, tmp_path, monkeypatch):
 
     calls = {"n": 0}
     orig = D.minhash_signatures
+    kernel = D._minhash_gen
 
     def counting(*a, **k):
         calls["n"] += 1
-        return orig(*a, **k)
+        return kernel(*a, **k)
 
-    monkeypatch.setattr(D, "minhash_signatures", counting)
+    # every signature frame, fused with band keys or not, is built around
+    # one instance of the kernel's generator
+    monkeypatch.setattr(D, "_minhash_gen", counting)
 
     corpus = _near_docs(spark)
     fp_store = D.fingerprint_frame(corpus)
@@ -224,6 +227,7 @@ def test_refresh_single_signature_pass(spark, tmp_path, monkeypatch):
         (110, "fresh doc about solar panels " * 5),      # survives
         (111, "fresh doc about solar panels " * 5 + "x"),  # near-dup of 110
     ])
+    calls["n"] = 0
     kept, metrics, new_fps, new_sigs = refresh_corpus(
         batch, fp_store, store_sigs, store_bands, threshold=0.8,
         num_hashes=64, bands=16, n=3)

@@ -302,3 +302,54 @@ def test_strip_spans_plan_text_never_shuffles(spark):
         {"doc_id", "__g"}, m
     assert "partial_count" in plan
     _assert_text_scan_feeds_broadcast_join(plan)
+
+
+def test_near_dedup_one_band_shuffle_and_broadcast_keep(spark):
+    """Near-dedup's shape: ``lsh_candidate_pairs`` starts no job before
+    its first action and its band rows cross ONE exchange; the driver
+    union-find's components frame is a LocalTableScan (not an RDD scan
+    without statistics), so ``near_dedup_tokens``' keep anti-join
+    broadcasts it."""
+    import numpy as np
+
+    from python_hll_spark.operators.dedup import (connected_components,
+                                                  lsh_candidate_pairs,
+                                                  minhash_signatures_tokens,
+                                                  near_dedup_tokens)
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [int(x) for x in rng.integers(0, 500, 40)])
+            for i in range(60)]
+    rows += [(100 + i, rows[i][1]) for i in range(10)]  # exact token copies
+    df = spark.createDataFrame(rows, "doc_id long, tokens array<bigint>")
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    sigs = minhash_signatures_tokens(df, num_hashes=64).persist()
+    sigs.count()
+    before = job_ids()
+    pairs = lsh_candidate_pairs(sigs, bands=16)
+    assert job_ids() == before, "lsh_candidate_pairs ran a job eagerly"
+    plan = _final_plan(pairs)
+    band_exchanges = re.findall(
+        r"Exchange hashpartitioning\(band#\d+, band_key#\d+L?,", plan)
+    assert len(band_exchanges) == 1, plan
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} \
+        == {(i, 100 + i) for i in range(10)}
+    sigs.unpersist()
+
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "id_a long, id_b long")
+    comps = connected_components(edges)
+    cplan = _plan(comps)
+    assert "LocalTableScan" in cplan and "ExistingRDD" not in cplan, cplan
+    assert sorted(map(tuple, comps.collect())) \
+        == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+
+    kept = near_dedup_tokens(df, num_hashes=64, bands=16)
+    kplan = _final_plan(kept)
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", kplan), kplan
+    assert sorted(r["doc_id"] for r in kept.collect()) == list(range(60))

@@ -12,8 +12,7 @@ def _null_key_rows():
 def _run_final(spark, tmp_path, rows, schema, make_stream, name):
     """Stream ``rows`` through ``make_stream`` in several micro-batches;
     return the input, every row of each group's last emission, and the
-    executed plan.  Rows are gathered with ``foreachBatch``: the memory
-    sink cannot decode the NULL elements of an empty sketch's quantiles."""
+    executed plan.  Rows are gathered with ``foreachBatch``."""
     df = spark.createDataFrame(rows, schema)
     src = str(tmp_path / name)
     df.repartition(4).write.parquet(src)
@@ -72,6 +71,30 @@ def test_stateful_streams_null_keys_match_batch(spark, tmp_path):
     # 50 values < k: both sketches are exact, so NULLs cannot hide
     assert quant["a"]["quantiles"] == batch["a"]["quantiles"]
     assert quant["b"]["quantiles"] == batch["b"]["quantiles"] == [None] * 3
+
+
+def test_stateful_quantiles_stream_memory_sink_all_null_group(spark,
+                                                             tmp_path):
+    """Spark's memory sink takes an all-NULL group's row: its quantiles
+    are NULL elements that the sink decodes (NULL elements inside an
+    Arrow-backed array used to fail it with EXPRESSION_DECODING_FAILED)."""
+    from python_hll_spark.streaming.stream import stateful_quantiles_stream
+
+    df = spark.createDataFrame([("a", 1), ("b", None)], "grp string, v int")
+    src = str(tmp_path / "mem_src")
+    df.write.parquet(src)
+    stream = spark.readStream.schema(df.schema).parquet(src)
+    q = (stateful_quantiles_stream(stream, "grp", "v").writeStream
+         .format("memory").queryName("quantiles_all_null")
+         .option("checkpointLocation", str(tmp_path / "mem_ckpt"))
+         .outputMode("update").start())
+    try:
+        q.processAllAvailable()
+        got = {r["g"]: (r["quantiles"], r["n_rows"]) for r in
+               spark.sql("SELECT * FROM quantiles_all_null").collect()}
+    finally:
+        q.stop()
+    assert got == {"a": ([1.0] * 3, 1), "b": ([None] * 3, 1)}
 
 
 def test_stateful_topk_cms_matches_cms_topk(spark, tmp_path):
