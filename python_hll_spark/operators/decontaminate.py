@@ -52,7 +52,7 @@ def contamination_near(train: DataFrame, eval_df: DataFrame,
     near-duplicate contamination report.  Bands the eval side (tiny) and
     broadcast-joins it against the train bands."""
     from python_hll_spark.operators.dedup import (
-        _band_keys_frame, minhash_signatures)
+        _band_keys_frame, _est_jaccard, minhash_signatures)
 
     t_sigs = minhash_signatures(train, text_col, n, num_hashes, id_col)
     e_sigs = minhash_signatures(eval_df, text_col, n, num_hashes, id_col)
@@ -66,11 +66,9 @@ def contamination_near(train: DataFrame, eval_df: DataFrame,
                         F.col("sig").alias("t_sig"))
     e_s = e_sigs.select(F.col(id_col).alias("eval_id"),
                         F.col("sig").alias("e_sig"))
-    match_frac = (F.size(F.filter(F.zip_with("t_sig", "e_sig",
-                                             lambda x, y: x == y),
-                                  lambda v: v)) / F.size("t_sig"))
     scored = (cand.join(t_s, "train_id").join(F.broadcast(e_s), "eval_id")
-              .withColumn("est_jaccard", F.round(match_frac, 6)))
+              .withColumn("est_jaccard",
+                          F.round(_est_jaccard("t_sig", "e_sig"), 6)))
     return (scored.where(F.col("est_jaccard") >= threshold)
             .select("train_id", "eval_id", "est_jaccard"))
 

@@ -392,8 +392,9 @@ def _capped_bucket_pairs(rows: DataFrame, bucket_cols: list,
     """Candidate (id_a, id_b) pairs within each bucket (``bucket_cols``)
     of ``rows``, degrading buckets larger than ``max_bucket`` to a star
     against the bucket's min id: O(B) edges instead of O(B^2), and
-    connectivity is kept.  Shared by MinHash-LSH band buckets and SimHash
-    chunk buckets.
+    connectivity is kept.  Shared by MinHash-LSH band buckets, SimHash
+    chunk buckets and the SRP/SemDeDup vector buckets
+    (``similarity._capped_cosine_pairs``).
 
     Lazy, and ONE exchange on ``bucket_cols``: a window over the bucket
     gives its size and min id, singleton buckets drop out, and a second
@@ -420,6 +421,13 @@ def _capped_bucket_pairs(rows: DataFrame, bucket_cols: list,
                                               lambda j: j > anchor))
                            .alias("id_b"))
             .distinct())
+
+
+def _est_jaccard(a, b):
+    """Estimated Jaccard of two MinHash signature columns: the fraction of
+    ``a``'s slots whose value ``b`` matches."""
+    return (F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y),
+                            lambda v: v)) / F.size(a))
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, bands: int = 32,
@@ -456,10 +464,9 @@ def lsh_candidate_pairs(sig_df: DataFrame, bands: int = 32,
     sig_a = sig_df.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sig_df.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     joined = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
-    match_frac = (F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                                  lambda v: v)) / F.size("sig_a"))
     return joined.select("id_a", "id_b",
-                         F.round(match_frac, 6).alias("est_jaccard"))
+                         F.round(_est_jaccard("sig_a", "sig_b"), 6)
+                         .alias("est_jaccard"))
 
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", n: int = 3,
@@ -553,9 +560,7 @@ def _simhash_gen(tokens_col: str, id_col: str):
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int = 3,
                        id_col: str = "doc_id",
-                       sigs: DataFrame | None = None,
-                       max_bucket: int = 512,
-                       cache_out: list | None = None) -> DataFrame:
+                       max_bucket: int = 512) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance, bucketed on 16-bit chunks
     (two of four chunks must match exactly when distance <= 3).
 
@@ -571,13 +576,10 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
     members are dropped by the hamming filter exactly as the pairwise path
     would drop them.
 
-    Pass a persisted ``sigs`` frame to own the cache lifecycle (the default
-    cache lives until the session drops it); internal persisted frames are
-    appended to ``cache_out`` when given."""
-    if sigs is None:
-        sigs = simhash_signatures(df, text_col, id_col).cache()
-        if cache_out is not None:
-            cache_out.append(sigs)
+    The signatures are read three times (chunk buckets and both sides of
+    the hamming join), so they are cached; the cache lives until the
+    session drops it."""
+    sigs = simhash_signatures(df, text_col, id_col).cache()
     chunks = sigs.select(
         id_col,
         F.explode(F.array(*[
@@ -600,18 +602,34 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", max_hamming: int =
 
 
 # ------------------------------------------ duplicate-cluster resolution
-def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
-             chk) -> DataFrame:
+# Edge lists up to this many rows are solved on the driver (~16 MB of id
+# pairs); larger ones run the distributed star rounds
+_CC_DRIVER_CAP = 1 << 20
+# Round budget of the distributed path: star converges in O(log d) rounds,
+# so running out means a graph no duplicate-cluster input produces
+_CC_MAX_ROUNDS = 20
+
+
+def _cc_star(edges: DataFrame) -> DataFrame:
     """Large-star/small-star alternation (Kiveris et al., 'Connected
-    Components in MapReduce and Beyond'): converges in O(log d) rounds vs
-    min-label's O(d), so adversarially long duplicate chains cannot stall
-    the job.  Both operations preserve connectivity; at the fixed point
-    the edge set is a star forest around each component's minimum.
+    Components in MapReduce and Beyond'): converges in O(log d) rounds,
+    so adversarially long duplicate chains cannot stall the job.  Both
+    operations preserve connectivity; at the fixed point the edge set is
+    a star forest around each component's minimum.
 
     Edges are kept canonical big->small.  Convergence = (count,
     hash-checksum) of the edge set unchanged across one small-star round —
-    one tiny action per phase."""
-    import warnings
+    one tiny action per phase.  Every round is checkpointed: RELIABLY
+    (``sc.setCheckpointDir``, set by plans.session.get_spark) so a
+    multi-hour run survives executor loss, else ``localCheckpoint``.
+    Raises ``RuntimeError`` when ``_CC_MAX_ROUNDS`` rounds do not
+    converge: a partial result breaks the component = min-member-id
+    contract the keep rule relies on."""
+    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
+
+    def chk(df: DataFrame) -> DataFrame:
+        return df.checkpoint(eager=True) if reliable \
+            else df.localCheckpoint(eager=True)
 
     nodes = chk(edges.select(F.col("id_a").alias("node"))
                 .unionByName(edges.select(F.col("id_b").alias("node")))
@@ -627,8 +645,7 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
         return (row["n"], row["h"])
 
     prev = sig(E)
-    converged = False
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # large-star: every neighbor bigger than `node` connects to the
         # minimum of node's closed neighborhood
         nbrs = (E.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
@@ -653,16 +670,12 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
                 .where(F.col("u") != F.col("v")).distinct())
         cur = sig(E)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    if not converged and max_iter > 0:
-        msg = (f"connected_components(method='star') did not converge in "
-               f"{max_iter} rounds; increase max_iter")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {_CC_MAX_ROUNDS} "
+            "large-star/small-star rounds")
     comp = E.groupBy("u").agg(F.min("v").alias("component")) \
         .select(F.col("u").alias("node"), "component")
     return (nodes.join(comp, "node", "left")
@@ -673,8 +686,8 @@ def _cc_star(edges: DataFrame, max_iter: int, on_nonconverged: str,
 def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
     """Components of a bounded, already-collected edge list: path-compressed
     union-find on the driver, each node labeled with its component's min
-    member id — the exact contract of the distributed paths (and checked
-    against them in tests), in one createDataFrame instead of an iteration
+    member id — the exact contract of the distributed path (and checked
+    against it in tests), in one createDataFrame instead of an iteration
     loop of checkpoint+collect actions.  The frame is built from an Arrow
     table, so it plans as a ``LocalTableScan`` with size statistics and
     the keep anti-joins downstream can broadcast it."""
@@ -716,109 +729,39 @@ def _cc_driver_union_find(spark, edge_rows, id_type) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
-def connected_components(edges: DataFrame, max_iter: int = 20,
-                         on_nonconverged: str = "warn",
-                         method: str = "minlabel",
-                         small_cap: int | None = 1 << 20) -> DataFrame:
-    """Connected components of an undirected (id_a, id_b) edge list via
-    iterative min-label propagation — pure DataFrame joins, so Catalyst/AQE
-    handle the shuffles and it scales with the cluster (no driver graphs).
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of an undirected (id_a, id_b) edge list.
 
     Returns (id, component) where component is the min member id.
-    Converges in O(diameter) iterations; duplicate clusters are tiny, so
-    a handful of iterations suffice.
 
-    Small-graph fast path: duplicate-cluster edge lists are normally tiny
-    relative to the corpus (pairs survive a Jaccard/cosine threshold), so
-    when the edge count is <= ``small_cap`` (default 2^20 ~ 16 MB of id
-    pairs on the driver) the components are solved with ONE bounded
-    CollectLimit action and a driver-side union-find, replacing the
-    2-actions-per-iteration distributed loop; its (id, component) frame
-    is built from an Arrow table, a ``LocalTableScan`` with size
-    statistics, so a join against it can broadcast.  Above the cap the
-    probe is discarded and the distributed path runs — at that scale the
-    one bounded collect is noise next to the iterations it tried to save.
-    Results are identical (component = min member id).  Pass
-    ``small_cap=None`` to force the distributed path (the convergence /
-    checkpoint tests do).
+    Duplicate-cluster edge lists are normally tiny relative to the corpus
+    (pairs survive a Jaccard/cosine threshold), so ONE bounded CollectLimit
+    action fetches up to ``_CC_DRIVER_CAP`` (2^20) edges and, when that is
+    all of them, a driver-side union-find solves the components; its
+    (id, component) frame is built from an Arrow table, a
+    ``LocalTableScan`` with size statistics, so a join against it can
+    broadcast.  Above the cap the probe is discarded and the components
+    come from distributed large-star/small-star rounds (``_cc_star``):
+    pure DataFrame joins, O(log diameter) rounds, each checkpointed.  If
+    ``_CC_MAX_ROUNDS`` (20) rounds do not converge it raises
+    ``RuntimeError`` rather than return labels that are not yet the
+    cluster minimum.  Both paths return the same components."""
+    head = edges.select("id_a", "id_b").limit(_CC_DRIVER_CAP + 1).collect()
+    if len(head) <= _CC_DRIVER_CAP:
+        return _cc_driver_union_find(edges.sparkSession, head,
+                                     edges.schema["id_a"].dataType)
+    return _cc_star(edges)
 
-    100 TB shape: each distributed iteration is ONE action — the
-    changed-label flag is computed inside the update projection and summed
-    over the checkpointed result, instead of re-joining old and new labels
-    (which doubled the per-iteration work).  Checkpoints are RELIABLE
-    (``sc.setCheckpointDir``, set by plans.session.get_spark) so a
-    multi-hour run survives executor loss; if no checkpoint dir is
-    configured the code falls back to ``localCheckpoint``
-    (executor-storage lineage, fine for test scale).
-    ``on_nonconverged``: "warn" (default), "raise", or "ignore" when labels
-    are still changing after max_iter.  A non-converged result breaks the
-    component = min-member-id contract, and the dedup keep rule
-    ``id != component`` (``near_dedup``, ``incremental_near_dedup``,
-    ``semdedup``) then behaves differently: each cluster still keeps its
-    minimum id, and may also keep other ids that no smaller label has
-    reached yet; but a node whose label is not its own id is dropped even
-    when no kept row shares its label, so the rule can drop more rows than
-    a keep-the-min-per-label rule would.
 
-    ``method="star"`` switches to large-star/small-star alternation
-    (O(log d) rounds) — the right choice when components may be deep
-    chains; the default min-label is one join cheaper per round and
-    duplicate clusters are normally shallow."""
-    import warnings
-
-    if method not in ("minlabel", "star"):
-        raise ValueError(f"unknown method {method!r}; use 'minlabel' or 'star'")
-
-    if small_cap:
-        head = edges.select("id_a", "id_b").limit(small_cap + 1).collect()
-        if len(head) <= small_cap:
-            return _cc_driver_union_find(edges.sparkSession, head,
-                                         edges.schema["id_a"].dataType)
-
-    sc = edges.sparkSession.sparkContext
-    reliable = sc.getCheckpointDir() is not None
-
-    def chk(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if reliable \
-            else df.localCheckpoint(eager=True)
-
-    if method == "star":
-        return _cc_star(edges, max_iter, on_nonconverged, chk)
-
-    both = chk(edges.select(F.col("id_a").alias("node"), F.col("id_b").alias("nbr"))
-               .unionByName(edges.select(F.col("id_b").alias("node"),
-                                         F.col("id_a").alias("nbr"))))
-    labels = chk(both.select("node").distinct()
-                 .withColumn("component", F.col("node")))
-    changed = None
-    for _ in range(max_iter):
-        nbr_labels = labels.select(F.col("node").alias("nbr"),
-                                   F.col("component").alias("nbr_component"))
-        neighbor_min = (both.join(nbr_labels, "nbr")
-                        .groupBy("node")
-                        .agg(F.min("nbr_component").alias("nbr_min")))
-        updated = chk(
-            labels.join(neighbor_min, "node", "left")
-            .select("node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("nbr_min"), F.col("component")))
-                    .alias("component"),
-                    (F.coalesce(F.col("nbr_min"), F.col("component"))
-                     < F.col("component")).cast("long").alias("__changed")))
-        changed = updated.agg(F.sum("__changed")).collect()[0][0] or 0
-        labels = updated.drop("__changed")
-        if changed == 0:
-            break
-    if changed:
-        msg = (f"connected_components did not converge in {max_iter} "
-               f"iterations ({changed} labels still changing); increase "
-               "max_iter — components wider than max_iter hops keep "
-               "multiple labels")
-        if on_nonconverged == "raise":
-            raise RuntimeError(msg)
-        if on_nonconverged == "warn":
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(F.col("node").alias("id"), "component")
+def _duplicate_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """The keep rule: (id_col) rows of every id in a thresholded
+    (id_a, id_b) edge list that is not its duplicate cluster's
+    representative.  component IS the min member id (the
+    ``connected_components`` contract), so the rule is a filter, not an
+    agg + join.  Eager: the components are solved before it returns."""
+    comps = connected_components(pairs)
+    return (comps.where(F.col("id") != F.col("component"))
+            .select(F.col("id").alias(id_col)))
 
 
 # --------------------------------------------- incremental NEAR-dedup store
@@ -1060,7 +1003,7 @@ def fp_store_compact(spark, path: str, target_partitions: int = 8) -> dict:
                          target_partitions=target_partitions, distinct=True)
 
 
-def _fan_out_batch(new_df: DataFrame, fan_out: bool) -> DataFrame:
+def _fan_out_batch(new_df: DataFrame) -> DataFrame:
     """Rebalance a daily crawl batch before its signature kernel.
 
     A batch is commonly DERIVED — a date/id filter over a larger table —
@@ -1072,11 +1015,7 @@ def _fan_out_batch(new_df: DataFrame, fan_out: bool) -> DataFrame:
     this (the partition COUNT looks healthy; the rows are skewed into a
     few), so the incremental entry points round-robin the batch across
     ``defaultParallelism`` up front.  The shuffle moves one pass of the
-    batch — the SMALL side by contract — and is cheap insurance; pass
-    ``fan_out=False`` when the batch is already known well-partitioned
-    (e.g. it just landed as its own properly-sized crawl files)."""
-    if not fan_out:
-        return new_df
+    batch — the SMALL side by contract — and is cheap insurance."""
     return new_df.repartition(
         new_df.sparkSession.sparkContext.defaultParallelism)
 
@@ -1086,8 +1025,7 @@ def incremental_near_dedup(new_df: DataFrame, store_sigs: DataFrame,
                            num_hashes: int = 128, bands: int = 32, n: int = 3,
                            text_col: str = "text", id_col: str = "doc_id",
                            cache_out: list | None = None,
-                           outputs: dict | None = None,
-                           fan_out: bool = True) -> DataFrame:
+                           outputs: dict | None = None) -> DataFrame:
     """Near-dedup a NEW crawl batch against yesterday's corpus — the
     missing tier next to ``incremental_dedup`` (exact fingerprints): a new
     doc that is a NEAR-copy of anything already in the store is dropped
@@ -1124,10 +1062,10 @@ def incremental_near_dedup(new_df: DataFrame, store_sigs: DataFrame,
     ``localCheckpoint``) before unpersisting them or appending to the
     store the lineage probes.  The persist handles (the batch signatures
     with their band keys, and the store-probe hits) land in ``cache_out``
-    when given, else live until the session releases them.  ``fan_out`` (default True)
-    rebalances the batch before the signature kernel — see
-    ``_fan_out_batch`` for why a derived batch needs it."""
-    new_df = _fan_out_batch(new_df, fan_out)
+    when given, else live until the session releases them.  The batch is
+    rebalanced before the signature kernel — see ``_fan_out_batch`` for
+    why a derived batch needs it."""
+    new_df = _fan_out_batch(new_df)
     sigs_all = _minhash_band_frame_text(new_df, text_col, n, num_hashes,
                                         bands, id_col)
     return _incremental_near_dedup_impl(new_df, sigs_all, store_sigs,
@@ -1142,14 +1080,13 @@ def incremental_near_dedup_tokens(new_df: DataFrame, store_sigs: DataFrame,
                                   n: int = 3, tokens_col: str = "tokens",
                                   id_col: str = "doc_id",
                                   cache_out: list | None = None,
-                                  outputs: dict | None = None,
-                                  fan_out: bool = True) -> DataFrame:
+                                  outputs: dict | None = None) -> DataFrame:
     """``incremental_near_dedup`` over PRE-TOKENIZED docs (the input_hint
     table shape): batch signatures come from the single-pass Arrow
     n-gram kernel instead of the text tokenizer; store probe, within-batch
-    collapse, the ``outputs["survivor_sigs"]`` contract, and the
-    ``fan_out`` batch rebalance (``_fan_out_batch``) are shared."""
-    new_df = _fan_out_batch(new_df, fan_out)
+    collapse, the ``outputs["survivor_sigs"]`` contract, and the batch
+    rebalance (``_fan_out_batch``) are shared."""
+    new_df = _fan_out_batch(new_df)
     sigs_all = _minhash_band_frame(new_df, tokens_col, n, num_hashes, bands,
                                    id_col)
     return _incremental_near_dedup_impl(new_df, sigs_all, store_sigs,
@@ -1197,9 +1134,7 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     # batch side is the small side by definition
     n_sigs = sigs_all.select(F.col(id_col).alias("__new_id"),
                              F.col("sig").alias("__n_sig"))
-    match_frac = (F.size(F.filter(
-        F.zip_with("__s_sig", "__n_sig", lambda x, y: x == y),
-        lambda v: v)) / F.size("__s_sig"))
+    match_frac = _est_jaccard("__s_sig", "__n_sig")
     # executor-side num_hashes guard: a mismatched store sig would
     # null-pad the zip_with and cap match_frac at min(K_s,K_n)/K_s — exact
     # re-crawls would silently survive.  assert_true costs one size()
@@ -1241,12 +1176,7 @@ def _incremental_near_dedup_impl(new_df: DataFrame, sigs_all: DataFrame,
     try:
         pairs = (cand0.where(F.col("est_jaccard") >= threshold)
                  .select("id_a", "id_b"))
-        comps = connected_components(pairs)  # eager (checkpointed)
-        # component IS the min member id (the connected_components
-        # contract), so the keep-representative rule is a filter, not an
-        # agg + join
-        drop_ids = (comps.where(F.col("id") != F.col("component"))
-                    .select(F.col("id").alias(id_col)))
+        drop_ids = _duplicate_ids(pairs, id_col)  # eager
         batch = new_df.join(drop_ids, id_col, "left_anti")
         b_sigs = sigs_all.select(id_col, "sig").join(drop_ids, id_col,
                                                      "left_anti")
@@ -1297,8 +1227,8 @@ def near_dedup_tokens(df: DataFrame, tokens_col: str = "tokens",
                                    (id, sig, bkeys))
         -> lsh_candidate_pairs    (JVM posexplode of bkeys, ONE exchange
                                    on (band, band_key), capped buckets)
-        -> connected_components   (min-label, or a driver union-find when
-                                   the edge list is small)
+        -> connected_components   (a driver union-find, or large-star/
+                                   small-star rounds above 2^20 edges)
         -> keep min-id representative per duplicate cluster (an
            anti-join that broadcasts the driver-built components frame)
 
@@ -1313,24 +1243,19 @@ def _near_dedup_impl(df: DataFrame, sigs: DataFrame, threshold: float,
                      bands: int, id_col: str) -> DataFrame:
     """Shared body of ``near_dedup`` / ``near_dedup_tokens``.
 
-    The keep rule drops every id whose component label is not itself.  If
-    ``connected_components`` stops at ``max_iter`` without converging
-    (``on_nonconverged="warn"``, the default), labels are not yet the
-    cluster minimum; see its docstring for what the rule then keeps."""
+    The keep rule (``_duplicate_ids``) drops every id whose component
+    label is not itself; a graph whose components do not converge raises
+    instead of dropping rows."""
     # (id, sig, bkeys) is read three times: banding and both sides of the
     # scoring join
     sigs = sigs.persist()
     cand = lsh_candidate_pairs(sigs, bands, id_col)
     pairs = (cand.where(F.col("est_jaccard") >= threshold)
              .select("id_a", "id_b"))
-    # connected_components materializes the edge list eagerly (a collect,
-    # or checkpoint + per-iteration actions), so the cache can go here
-    comps = connected_components(pairs)
+    # the keep rule solves the components eagerly (a collect, or
+    # checkpoint + per-round actions), so the cache can go here
+    drop_ids = _duplicate_ids(pairs, id_col)
     sigs.unpersist()
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
     return df.join(drop_ids, on=id_col, how="left_anti")
 
 

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from python_hll_spark.operators.aggregate import (append_columns,
                                                   list_flat_offsets)
+from python_hll_spark.operators.dedup import (_capped_bucket_pairs,
+                                              _duplicate_ids)
 
 
 def _dot(a, b):
@@ -235,16 +237,16 @@ def embedding_dedup_pairs(df: DataFrame, threshold: float = 0.95,
                           dim: int | None = None) -> DataFrame:
     """Near-duplicate vector pairs by cosine >= threshold, SRP-bucketed.
 
-    Scale hardening (same ``__bsz``/star pattern as ``lsh_candidate_pairs``):
-    2^n_bits buckets means bucket population grows linearly with the corpus,
-    so the self-join is quadratic per bucket without a cap.  Buckets larger
-    than ``max_bucket`` degrade to a star against the bucket's min id —
-    O(B) edges instead of O(B^2).  Exact-duplicate floods (the realistic
-    oversize bucket) keep cosine 1.0 to the representative, so duplicate
-    connectivity survives; dissimilar collision members fail the cosine
-    threshold exactly as the pairwise path would drop them.  Each vector
-    lands in exactly ONE bucket, so small/large pair sets are disjoint and
-    no distinct (extra shuffle) is needed.
+    Scale hardening (the ``_capped_bucket_pairs`` star rule of
+    ``lsh_candidate_pairs``): 2^n_bits buckets means bucket population
+    grows linearly with the corpus, so the self-join is quadratic per
+    bucket without a cap.  Buckets larger than ``max_bucket`` degrade to a
+    star against the bucket's min id — O(B) edges instead of O(B^2).
+    Exact-duplicate floods (the realistic oversize bucket) keep cosine 1.0
+    to the representative, so duplicate connectivity survives; dissimilar
+    collision members fail the cosine threshold exactly as the pairwise
+    path would drop them.  Only ids cross the bucket exchange; the vectors
+    join back to the (distinct) pairs by id.
 
     Pass ``dim`` when known to skip the tiny eager first() probe job."""
     if dim is None:
@@ -260,30 +262,15 @@ def embedding_dedup_pairs(df: DataFrame, threshold: float = 0.95,
 
 def _capped_cosine_pairs(tagged: DataFrame, bucket_col: str, id_col: str,
                          vec_col: str, max_bucket: int) -> DataFrame:
-    """Within-bucket candidate pairs (id_a, id_b, va, vb) with the
-    oversize-star degradation — the shared core of the SRP and SemDeDup
-    cluster paths (``tagged`` has exactly one bucket row per vector; see
-    ``embedding_dedup_pairs`` for the cap rationale)."""
-    sizes = (tagged.groupBy(bucket_col)
-             .agg(F.count("*").alias("__bsz"), F.min(id_col).alias("__rep")))
-    sized = tagged.join(sizes, bucket_col)
-    small = sized.where(F.col("__bsz") <= max_bucket)
-    a = small.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-                     bucket_col)
-    b = small.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-                     bucket_col)
-    pairs_small = (a.join(b, bucket_col)
-                   .where(F.col("id_a") < F.col("id_b")).drop(bucket_col))
-    reps = tagged.select(F.col(id_col).alias("id_a"),
-                         F.col(vec_col).alias("va"))
-    pairs_large = (sized.where((F.col("__bsz") > max_bucket)
-                               & (F.col(id_col) != F.col("__rep")))
-                   .select(F.col("__rep").alias("id_a"),
-                           F.col(id_col).alias("id_b"),
-                           F.col(vec_col).alias("vb"))
-                   .join(reps, "id_a"))
-    return pairs_small.unionByName(pairs_large.select("id_a", "id_b",
-                                                      "va", "vb"))
+    """Within-bucket candidate pairs (id_a, id_b, va, vb): the capped star
+    rule of ``dedup._capped_bucket_pairs`` over ``bucket_col``, then two
+    id joins that attach each side's vector (the way
+    ``lsh_candidate_pairs`` attaches signatures).  Shared by the SRP and
+    SemDeDup cluster paths."""
+    pairs = _capped_bucket_pairs(tagged, [bucket_col], id_col, max_bucket)
+    va = tagged.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    vb = tagged.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    return pairs.join(va, "id_a").join(vb, "id_b")
 
 
 # ---------------------------------------------------------------- SemDeDup
@@ -332,14 +319,7 @@ def semdedup(df: DataFrame, n_clusters: int = 64, threshold: float = 0.95,
     member per group by centroid distance — min-id is the deterministic,
     extra-join-free equivalent).  Returns the deduplicated rows of ``df``
     (all original columns)."""
-    from python_hll_spark.operators.dedup import connected_components
-
     pairs = semdedup_pairs(df, n_clusters, threshold, id_col, vec_col,
                            seed, max_cluster, centroids) \
         .select("id_a", "id_b")
-    comps = connected_components(pairs)
-    # component IS the min member id (the connected_components contract),
-    # so the keep-representative rule is a filter, not an agg + join
-    drop_ids = (comps.where(F.col("id") != F.col("component"))
-                .select(F.col("id").alias(id_col)))
-    return df.join(drop_ids, on=id_col, how="left_anti")
+    return df.join(_duplicate_ids(pairs, id_col), on=id_col, how="left_anti")

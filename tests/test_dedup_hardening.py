@@ -2,6 +2,7 @@
 bucket-cap star fallback, vectorized SimHash equivalence, and
 connected-components convergence semantics."""
 
+import math
 import warnings
 
 import numpy as np
@@ -182,68 +183,71 @@ def test_simhash_vectorized_matches_reference(spark):
 
 
 # --------------------------------------- connected components convergence
-def test_connected_components_nonconvergence_warns(spark):
+def _force_distributed_cc(monkeypatch, cap=0, rounds=None):
+    """Route ``connected_components`` past the driver union-find (edge
+    lists longer than ``cap``), optionally with a smaller round budget."""
+    from python_hll_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_CAP", cap)
+    if rounds is not None:
+        monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", rounds)
+
+
+def test_connected_components_nonconvergence_raises(spark, monkeypatch):
     from python_hll_spark.operators.dedup import connected_components
 
-    # path graph 0-1-2-...-12: diameter >> max_iter=2
+    # path graph 0-1-2-...-12: star needs more than 2 rounds
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=None).collect()
+    _force_distributed_cc(monkeypatch, rounds=2)
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=None,
-                             on_nonconverged="raise").collect()
+        connected_components(edges)
 
 
-def test_connected_components_uses_reliable_checkpoint(spark):
+def test_near_dedup_tokens_propagates_nonconvergence(spark, monkeypatch):
+    """A keep rule over non-converged labels could drop rows no min-id
+    rule would; near_dedup_tokens must fail with the RuntimeError instead,
+    and without a warning."""
+    from python_hll_spark.operators.dedup import near_dedup_tokens
+
+    # sliding windows over one token run: doc i shares all but one token
+    # with doc i+1, so the duplicate pairs chain 40 docs together
+    df = spark.createDataFrame(
+        [(i, list(range(i, i + 20))) for i in range(40)],
+        "doc_id long, tokens array<bigint>")
+    _force_distributed_cc(monkeypatch, rounds=2)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with pytest.raises(RuntimeError, match="did not converge"):
+            near_dedup_tokens(df, num_hashes=64, bands=16)
+    # (the Py4J gateway's unclosed-socket ResourceWarnings aside)
+    assert [str(w.message) for w in caught
+            if not issubclass(w.category, ResourceWarning)] == []
+
+
+def test_connected_components_uses_reliable_checkpoint(spark, monkeypatch):
     from python_hll_spark.operators.dedup import connected_components
 
     assert spark.sparkContext.getCheckpointDir() is not None
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # no non-convergence warning expected
-        comps = connected_components(edges, small_cap=None).collect()
+    _force_distributed_cc(monkeypatch)
+    comps = connected_components(edges).collect()
     m = {r["id"]: r["component"] for r in comps}
     assert m == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_cc_star_converges_on_deep_chain(spark):
+def test_cc_star_converges_on_deep_chain(spark, monkeypatch):
     """Large-star/small-star handles a diameter-200 chain in O(log d)
-    rounds — the same chain stalls min-label at max_iter=10."""
+    rounds: 10 are enough (min-label would need 200)."""
     from python_hll_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long")
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # star MUST converge, no warning
-        comps = connected_components(edges, max_iter=10, small_cap=None,
-                                     method="star").collect()
+    _force_distributed_cc(monkeypatch, rounds=10)
+    comps = connected_components(edges).collect()
     assert len(comps) == 201
     assert {r["component"] for r in comps} == {0}
-
-
-def test_cc_star_matches_minlabel(spark):
-    from python_hll_spark.operators.dedup import connected_components
-
-    # several clusters incl. a triangle, a pair, a chain and an isolate-pair
-    e = [(1, 2), (2, 3), (3, 1), (10, 11), (20, 21), (21, 22), (22, 23),
-         (30, 31)]
-    edges = spark.createDataFrame(e, "id_a long, id_b long")
-    star = {r["id"]: r["component"] for r in
-            connected_components(edges, method="star", small_cap=None).collect()}
-    minl = {r["id"]: r["component"] for r in
-            connected_components(edges, method="minlabel", small_cap=None).collect()}
-    assert star == minl
-    assert star[23] == 20 and star[31] == 30
-
-
-def test_cc_rejects_unknown_method(spark):
-    from python_hll_spark.operators.dedup import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="unknown method"):
-        connected_components(edges, method="bogus")
 
 
 # -------------------------------------------------- prepare_corpus metrics
@@ -345,15 +349,44 @@ def flood_docs(spark):
     return _docs(spark, rows)
 
 
+def _flood_embeddings(spark):
+    """30 clusters x 12 identical 8-dim vectors plus 40 random ones, as a
+    frame and as an id -> float32-exact vector dict."""
+    rng = np.random.default_rng(13)
+    vecs = {}
+    for c in range(30):
+        v = rng.normal(size=8).astype("float32").tolist()
+        vecs.update({c * 100 + i: v for i in range(12)})
+    vecs.update({10000 + i: rng.normal(size=8).astype("float32").tolist()
+                 for i in range(40)})
+    emb = spark.createDataFrame(list(vecs.items()),
+                                "vec_id long, embedding array<float>")
+    return emb, vecs
+
+
+def _cosine(a, b):
+    """``similarity.with_cosine`` in plain Python: sequential double sums,
+    rounded to 6 places."""
+    def dot(x, y):
+        acc = 0.0
+        for p, q in zip(x, y):
+            acc += p * q
+        return acc
+    return round(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))), 6)
+
+
 @pytest.mark.parametrize("max_bucket", [11, 12, 13])
 def test_capped_bucket_pairs_match_reference(spark, flood_docs, max_bucket):
     """The lazy window-capped bucket join emits exactly the capped rule's
     pairs, on both sides of the cluster size (12): LSH band buckets
     against band keys collected to the driver, SimHash chunk buckets
-    against signatures collected to the driver."""
+    against signatures collected to the driver, and SRP vector buckets
+    (then the cosine filter) against bucket ids collected to the driver."""
     from python_hll_spark.operators.dedup import (
         _band_keys_frame, lsh_candidate_pairs, minhash_signatures,
         simhash_near_pairs, simhash_signatures)
+    from python_hll_spark.operators.similarity import (embedding_dedup_pairs,
+                                                       with_srp_bucket)
 
     sigs = minhash_signatures(flood_docs, num_hashes=32, n=3).persist()
     bands = _band_keys_frame(sigs, 8).collect()
@@ -379,6 +412,16 @@ def test_capped_bucket_pairs_match_reference(spark, flood_docs, max_bucket):
                               max_bucket=max_bucket).collect()}
     assert got == want and got
 
+    emb, vecs = _flood_embeddings(spark)
+    bucket_rows = [(r["bucket"], r["vec_id"]) for r in
+                   with_srp_bucket(emb, "embedding", 8, 6).collect()]
+    want = {(a, b) for a, b in _capped_reference(bucket_rows, max_bucket)
+            if _cosine(vecs[a], vecs[b]) >= 0.9}
+    got = {(r["id_a"], r["id_b"]) for r in
+           embedding_dedup_pairs(emb, threshold=0.9, n_bits=6,
+                                 max_bucket=max_bucket, dim=8).collect()}
+    assert got == want and got
+
 
 def test_tokens_short_batch_large_shingle_no_crash(spark):
     """Regression (round-3 ADVICE): a batch whose TOTAL token count L
@@ -401,20 +444,25 @@ def test_tokens_short_batch_large_shingle_no_crash(spark):
 
 
 # ------------------------------------- small-graph union-find fast path
-def test_cc_fast_path_matches_distributed(spark):
-    """Below small_cap the driver union-find must return exactly what the
-    distributed min-label loop returns, on a messy random graph."""
+def test_cc_fast_path_matches_distributed(spark, monkeypatch):
+    """The distributed star rounds must return exactly what the driver
+    union-find returns, on a messy random graph plus small clusters: a
+    triangle, a pair and a chain."""
     from python_hll_spark.operators.dedup import connected_components
 
     rng = np.random.default_rng(7)
     e = [(int(a), int(b)) for a, b in rng.integers(0, 60, size=(120, 2))
          if a != b]
+    e += [(101, 102), (102, 103), (103, 101), (110, 111), (120, 121),
+          (121, 122), (122, 123)]
     edges = spark.createDataFrame(e, "id_a long, id_b long")
     fast = {r["id"]: r["component"] for r in
             connected_components(edges).collect()}
+    _force_distributed_cc(monkeypatch)
     dist = {r["id"]: r["component"] for r in
-            connected_components(edges, small_cap=None).collect()}
+            connected_components(edges).collect()}
     assert fast == dist and len(fast) > 0
+    assert fast[103] == 101 and fast[111] == 110 and fast[123] == 120
 
 
 def test_cc_fast_path_string_ids_and_empty(spark):
@@ -429,35 +477,38 @@ def test_cc_fast_path_string_ids_and_empty(spark):
     assert connected_components(empty).collect() == []
 
 
-def test_cc_cap_exceeded_falls_back_to_distributed(spark):
-    """small_cap smaller than the edge count must route to the distributed
-    loop — proven by the non-convergence warning a diameter-12 chain
-    triggers at max_iter=2 (the fast path would just converge)."""
+def test_cc_cap_exceeded_falls_back_to_distributed(spark, monkeypatch):
+    """A driver cap smaller than the edge count must route to the
+    distributed rounds — proven by the non-convergence error a diameter-12
+    chain raises within 2 rounds (the union-find would just solve it)."""
     from python_hll_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long")
-    with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(edges, max_iter=2, small_cap=5).collect()
+    _force_distributed_cc(monkeypatch, cap=5, rounds=2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges)
 
 
-def test_keep_rule_filter_equals_agg_join(spark):
-    """The keep-representative rule in near_dedup/semdedup is now the
-    filter ``id != component`` (round 6: drops one agg + one join per
-    call).  Pin its equivalence to the original min-agg + join
-    formulation over connected_components output on a messy graph."""
+def test_keep_rule_filter_equals_agg_join(spark, monkeypatch):
+    """The keep rule of near_dedup/incremental_near_dedup/semdedup
+    (``_duplicate_ids``) is the filter ``id != component`` (round 6:
+    drops one agg + one join per call).  Pin its equivalence to the
+    original min-agg + join formulation over connected_components output
+    on a messy graph."""
     from pyspark.sql import functions as F
 
-    from python_hll_spark.operators.dedup import connected_components
+    from python_hll_spark.operators.dedup import (_duplicate_ids,
+                                                  connected_components)
 
     rng = np.random.default_rng(11)
     e = [(int(a), int(b)) for a, b in rng.integers(0, 80, size=(150, 2))
          if a != b]
     edges = spark.createDataFrame(e, "id_a long, id_b long")
-    for cap in (None, 1 << 20):  # distributed AND driver union-find paths
-        comps = connected_components(edges, small_cap=cap)
-        filt = {r["id"] for r in
-                comps.where(F.col("id") != F.col("component")).collect()}
+    for cap in (0, 1 << 20):  # distributed AND driver union-find paths
+        _force_distributed_cc(monkeypatch, cap=cap)
+        comps = connected_components(edges)
+        filt = {r["id"] for r in _duplicate_ids(edges, "id").collect()}
         keep = comps.groupBy("component").agg(F.min("id").alias("keep_id"))
         agg = {r["id"] for r in
                (comps.join(keep, "component")

@@ -288,7 +288,7 @@ def test_incremental_near_dedup_tokens(spark):
 
 def test_incremental_fan_out_rebalances_skewed_batch(spark):
     """A DERIVED batch (filter over a bigger table) arrives with every row
-    in one partition; ``fan_out`` (default) must rebalance it before the
+    in one partition; ``_fan_out_batch`` must rebalance it before the
     signature kernel — and must not change the survivor set."""
     import numpy as np
 
@@ -311,16 +311,13 @@ def test_incremental_fan_out_rebalances_skewed_batch(spark):
               .coalesce(1).repartition(8).where("doc_id >= 0")
               .coalesce(1))
     assert skewed.rdd.getNumPartitions() == 1
-    fanned = _fan_out_batch(skewed, fan_out=True)
+    fanned = _fan_out_batch(skewed)
     assert fanned.rdd.getNumPartitions() == \
         spark.sparkContext.defaultParallelism
-    kept_default = sorted(r["doc_id"] for r in incremental_near_dedup_tokens(
+    kept = sorted(r["doc_id"] for r in incremental_near_dedup_tokens(
         skewed, sigs, bands, threshold=0.8, num_hashes=64, bands=16,
         n=3).collect())
-    kept_nofan = sorted(r["doc_id"] for r in incremental_near_dedup_tokens(
-        skewed, sigs, bands, threshold=0.8, num_hashes=64, bands=16,
-        n=3, fan_out=False).collect())
-    assert kept_default == kept_nofan == [11, 12], kept_default
+    assert kept == [11, 12], kept
     sigs.unpersist()
 
 
